@@ -592,8 +592,8 @@ object Dedup {
     * [[graft.operators.Hnsw.defaultShards]] — the rehearsed cells ∝
     * corpus policy that keeps the MEAN cell graph task-sized. To run
     * over a STANDING segmented index instead of building one, use
-    * [[HnswStore.nearDupPairs]] (id-hash segments — the exhaustive
-    * route).
+    * [[HnswGeoStore.nearDupPairs]] (the same routed scan across the
+    * store's live epochs).
     */
   def hnswNearDupPairs(emb: DataFrame, threshold: Double, shards: Int = 0,
                        m: Int = 8, efConstruction: Int = 64,

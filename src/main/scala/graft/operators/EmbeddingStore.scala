@@ -50,13 +50,6 @@ object EmbeddingStore {
     load(spark, path)
   }
 
-  /** Committed epochs at `path`: epoch → is_base (base = contains every
-    * earlier epoch; [[build]] and [[compact]] write bases).
-    */
-  private def committedEpochs(spark: SparkSession,
-                              path: String): Map[Long, Boolean] =
-    StoreCommits.committedMap(spark, path, "epoch")
-
   /** The store's residual PQ codebooks, when it was built with
     * [[buildAnn]]; None for a plain similarity store.
     */
@@ -116,7 +109,7 @@ object EmbeddingStore {
   /** The latest committed epoch at `path`. */
   def latestEpoch(spark: SparkSession, path: String): Long = {
     StoreCommits.requireSeeded(spark, path, "embedding store")
-    committedEpochs(spark, path).keys.max
+    StoreCommits.committedMap(spark, path, "epoch").keys.max
   }
 
   /** One epoch's commit marker: (is_base, writer) — writer None for
@@ -197,14 +190,16 @@ object EmbeddingStore {
 
   /** Load the latest committed epoch. */
   def load(spark: SparkSession, path: String): Store =
-    loadAt(spark, path, committedEpochs(spark, path).keys.max)
+    loadAt(spark, path,
+      StoreCommits.committedMap(spark, path, "epoch").keys.max)
 
   /** Load the store AS OF a committed epoch — deterministic re-reads for
     * at-least-once replay, exactly as [[DedupState.loadAt]]. Reads the
-    * [latest base ≤ epoch, epoch] range.
+    * [latest base ≤ epoch, epoch] range (a base epoch contains every
+    * earlier epoch; [[build]] and [[compact]] write bases).
     */
   def loadAt(spark: SparkSession, path: String, epoch: Long): Store = {
-    val commits = committedEpochs(spark, path)
+    val commits = StoreCommits.committedMap(spark, path, "epoch")
     require(commits.contains(epoch),
       s"epoch $epoch is not committed at $path " +
         s"(committed: ${commits.keys.toSeq.sorted.mkString(",")})")
@@ -233,7 +228,7 @@ object EmbeddingStore {
     * markers go too, so stale as-of reads fail fast.
     */
   def vacuum(spark: SparkSession, store: Store): Unit = {
-    val commits = committedEpochs(spark, store.path)
+    val commits = StoreCommits.committedMap(spark, store.path, "epoch")
     val base = commits.collect { case (e, true) if e <= store.epoch => e }.max
     val conf = spark.sparkContext.hadoopConfiguration
     for (e <- commits.keys if e < base;

@@ -40,7 +40,7 @@ object Hnsw {
   /** One stored graph row: node `vec_id` of `shard`, its vector, its top
     * level, and `nbrs(l)` = neighbor ids at layer l for l = 0..level.
     * `shard` is a LONG so wrappers can stride shard ids into globally
-    * unique ranges without an epoch ceiling ([[HnswStore.ShardStride]]:
+    * unique ranges without an epoch ceiling ([[HnswGeoStore.CellStride]]:
     * a long-lived admission stream consumes one epoch per micro-batch,
     * and an int shard id capped epochs at ~32k).
     */
@@ -954,29 +954,6 @@ object Hnsw {
       .limit(k)
   }
 
-  /** Best stored cosine per probe for a LITERAL batch of probe vectors
-    * (micro-batch/audit-sized by contract — the probes ship inside the
-    * task closure): one pass over the store, every (probe, shard) pair
-    * graph-searched, reduced to (probe_id, max_cos) with the
-    * engine-standard 1e-6 rounding. The admission filter's workhorse —
-    * |batch| driver-looped distributed searches would schedule |batch|
-    * jobs; this is ONE.
-    */
-  def batchNeighborMax(store: DataFrame, probes: Array[(Long, Array[Double])],
-                       efSearch: Int = 64,
-                       parallelism: Int = 32): DataFrame = {
-    val spark = store.sparkSession
-    import spark.implicits._
-    perShard[(Long, Double)](store, parallelism) { (_, g) =>
-      probes.iterator.map { case (pid, q) =>
-        val res = searchGraph(g, q, efSearch)
-        (pid, if (res.isEmpty) -1.0 else 1.0 - res.head._1)
-      }
-    }.toDF("probe_id", "cos")
-      .groupBy(col("probe_id"))
-      .agg(round(max(col("cos")), 6).as("max_cos"))
-  }
-
   /** Top-k cosine neighbors for a DISTRIBUTED FRAME of probes — the
     * query-SERVING surface completing the index lifecycle (build, admit,
     * compact, and now batch-query continuously): `probes` = (probe_id,
@@ -984,9 +961,8 @@ object Hnsw {
     * shard, per-(probe, shard) candidates re-scored with the exact
     * cosine and merged to the per-probe top-k (cos desc, vec_id tie) by
     * one probe-keyed window. Unlike [[neighbors]] (one query, global
-    * sort) this serves a whole batch in one pass; unlike
-    * [[batchNeighborMax]] (driver-side literal, max only) the probe set
-    * is a frame — shuffled, never collected — so it can be a stream's
+    * sort) this serves a whole batch in one pass, and the probe set is
+    * a frame — shuffled, never collected — so it can be a stream's
     * micro-batch or another table.
     *
     * Scale shape: probes replicate once per live shard (|batch|·S rows —
@@ -1422,20 +1398,24 @@ object Hnsw {
     }
   }
 
-  /** Loud null/raggedness guard on a probe frame — the [[Dedup]]
+  /** Loud null/NaN/raggedness guard on a probe frame — the [[Dedup]]
     * admission-side discipline mirrored onto the SERVING paths: a null
-    * probe embedding NPEs at `pv.toArray` inside a task, and a wrong-dim
-    * probe fails deep in the dot loop — for a continuous serving stream
-    * one poison probe would kill its whole micro-batch with an opaque
-    * executor error. One batch-sized aggregate before the probes ever
-    * meet a graph, naming the actual problem.
+    * probe embedding NPEs at `pv.toArray` inside a task, a wrong-dim
+    * probe fails deep in the dot loop, and a NaN component turns every
+    * distance NaN, so the search "ranks" an arbitrary walk — for a
+    * continuous serving stream one poison probe would kill (or silently
+    * garble) its whole micro-batch. One batch-sized aggregate before the
+    * probes ever meet a graph — even an empty one — naming the actual
+    * problem.
     */
   private[operators] def requireCleanProbes(pr: DataFrame,
                                             storeDim: Int): Unit = {
     val s = pr.agg(
       sum(when(col("vec").isNull, 1L).otherwise(0L)).as("nulls"),
       min(size(col("vec"))).as("dmin"),
-      max(size(col("vec"))).as("dmax")).head()
+      max(size(col("vec"))).as("dmax"),
+      sum(when(exists(col("vec"), isnan), 1L).otherwise(0L)).as("nans"))
+      .head()
     if (!s.isNullAt(0)) { // empty probe batch: nothing to check
       require(s.getLong(0) == 0L,
         s"${s.getLong(0)} null probe embeddings — drop or impute before " +
@@ -1443,6 +1423,9 @@ object Hnsw {
       require(s.getInt(1) == storeDim && s.getInt(2) == storeDim,
         s"probe embedding dims [${s.getInt(1)}, ${s.getInt(2)}] do not " +
           s"match the store's dim $storeDim")
+      require(s.getLong(3) == 0L,
+        s"${s.getLong(3)} probe embeddings carry NaN components — drop " +
+          "or impute before searching")
     }
   }
 
@@ -1459,23 +1442,22 @@ object Hnsw {
     * replicated — each stays in its own shard's partition and probes
     * stream against it one at a time, [[pairStream]]'s memory contract).
     * Under the [[defaultShards]] policy S grows ∝ n, so n·S is O(n²/K):
-    * the right trade on a STANDING id-hash store at audit scale (it
-    * reuses the already-built segments, and graph walks replace n²/2
-    * exact dot products inside each task), but NOT the 100 TB default —
-    * that is [[nearDupPairsRouted]], whose geometry sharding routes each
-    * probe to a BOUNDED nProbe cells for an n·nProbe scan. Use this
-    * route when the index already exists id-hash-sharded
-    * ([[HnswStore]] segments) or when the corpus is adversarially
-    * unclustered (near-isotropic embeddings at LOW thresholds — the
-    * regime where geometry routing's recall decays; BASELINE's routing
-    * envelope table).
+    * the right trade for an audit-scale graph that is already built (it
+    * reuses the built shards, and graph walks replace n²/2 exact dot
+    * products inside each task), but NOT the 100 TB default — that is
+    * [[nearDupPairsRouted]], whose geometry sharding routes each probe
+    * to a BOUNDED nProbe cells for an n·nProbe scan. Use this route
+    * when the index already exists as a [[build]]/[[add]] graph or when
+    * the corpus is adversarially unclustered (near-isotropic embeddings
+    * at LOW thresholds — the regime where geometry routing's recall
+    * decays; BASELINE's routing envelope table).
     *
     * A probe's near-dups are capped at `efSearch` PER SHARD; graph
     * search is approximate — both bounds are measured, not assumed
     * (HnswSpec's recall line, BASELINE's rehearsal row).
     *
-    * @param store  [[build]]/[[add]] output or [[HnswStore.Store]]
-    *               segments — id-unique rows (the admission contract)
+    * @param store  [[build]]/[[add]] output — id-unique rows (the
+    *               admission contract)
     */
   def nearDupPairs(store: DataFrame, threshold: Double, efSearch: Int = 64,
                    parallelism: Int = 32): DataFrame = {

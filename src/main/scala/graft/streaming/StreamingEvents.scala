@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.functions.TextFunctions
-import graft.operators.{Anonymize, DedupState, EmbeddingStore, HnswGeoStore, HnswStore, Mape, MetricFamily}
+import graft.operators.{Anonymize, DedupState, EmbeddingStore, HnswGeoStore, Mape, MetricFamily}
 
 /** Structured Streaming surface (SURVEY.md §2.8/§7.6 — no reference
   * counterpart; the reference's only cross-run state, the uid→pseudonym
@@ -523,73 +523,18 @@ object StreamingEvents {
       }
       .start()
 
-  /** Continuous GRAPH-INDEX admission over the segmented HNSW store —
-    * [[embeddingAdmissionStream]]'s counterpart for [[graft.operators.HnswStore]]:
-    * each micro-batch is filtered by the store's own graph search (plus
-    * exact within-batch near-dups), survivors land in
-    * `outDir/batch_id=N` AND become their own searchable segment as
-    * epoch `b+1` — batch-sized writes at any corpus size; every
-    * `compactEvery`-th batch rebuilds the union into one base segment
-    * (the Lucene segment-merge discipline) and vacuums the superseded
-    * range. Same at-least-once replay contract as the other admission
-    * sinks: the pre-state epoch is pinned through the persisted
-    * batch→epoch mapping with the writer-identity guard (the
-    * [[hnswGeoAdmissionStream]] discipline), so epoch writes replay
-    * idempotently, an out-of-band [[HnswStore.compact]]/append between
-    * runs shifts the resumed stream's allocation instead of being
-    * overwritten, and one landing inside a crash-replay window fails
-    * loudly.
-    */
-  def hnswAdmissionStream(stream: DataFrame, stateDir: String,
-                          outDir: String, checkpointDir: String,
-                          threshold: Double,
-                          compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withStoreLock(stateDir) {
-        val spark = batch.sparkSession
-        val asBase = compactEvery > 0 && (batchId + 1) % compactEvery == 0
-        // pre-state pinned through the persisted batch→epoch mapping +
-        // writer-identity guard (the geo sink's discipline): replays are
-        // idempotent, out-of-band compacts between runs shift the
-        // resumed allocation, races into a crash window fail loudly
-        val instanceId = streamInstanceId(spark, checkpointDir)
-        val preEpoch = pinPreState(spark, stateDir, outDir, batchId, asBase,
-          "hnsw-store", "epoch",
-          HnswStore.latestEpoch(spark, stateDir),
-          HnswStore.commitMarker(spark, stateDir, _), instanceId)
-        val store = HnswStore.loadAt(spark, stateDir, preEpoch)
-        val (kept, _) = HnswStore.admit(spark, store, batch, threshold,
-          asBase, writer = geoWriterTag(batchId))
-        kept.write.mode("overwrite").option("compression", "snappy")
-          .parquet(s"$outDir/batch_id=$batchId")
-        writeInstanceSidecar(spark, outDir, batchId, instanceId)
-        // reclaim segments superseded by the PREVIOUS base only — a
-        // replay of this batch must still find its source range
-        if (asBase) {
-          HnswStore.vacuum(spark, store)
-          pruneStreamMeta(spark, stateDir, batchId)
-        }
-        graft.CacheRegistry.releaseAll()
-        }
-      }
-      .start()
-
-  /** Continuous GEO-ROUTED graph-index admission —
-    * [[hnswAdmissionStream]]'s counterpart for
+  /** Continuous GEO-ROUTED graph-index admission over
     * [[graft.operators.HnswGeoStore]] (the 100 TB semantic-dedup default
     * route): each micro-batch is filtered by the store's ROUTED batch
     * search (probes explode to their nProbe nearest cells across the
     * live epochs — never a full segment fan-out, and never a driver-side
-    * batch literal: the id-hash sink's `MaxAdmitBatchRows` wall does not
-    * exist here), survivors land in `outDir/batch_id=N` AND become their
-    * own per-cell delta segment as epoch `b+1` — batch-sized writes at
-    * any corpus size. Every `compactEvery`-th batch folds the delta
-    * epochs into the base by WARM insertion ([[graft.operators.Hnsw.addGeo]]
-    * is the compaction kernel — one pass over the base, delta-sized
-    * insertions, not a rebuild) and vacuums the superseded range. Same
+    * batch literal, so the batch size has no cap), survivors land in
+    * `outDir/batch_id=N` AND become their own per-cell delta segment
+    * as epoch `b+1` — batch-sized writes at any corpus size. Every
+    * `compactEvery`-th batch folds the delta epochs into the base by
+    * WARM insertion ([[graft.operators.Hnsw.addGeo]] is the compaction
+    * kernel — one pass over the base, delta-sized insertions, not a
+    * rebuild) and vacuums the superseded range. Same
     * at-least-once replay contract as the other admission sinks, but
     * with the pre-state pinned by a PERSISTED batch→epoch mapping
     * instead of assuming epoch = batchId: a batch's FIRST attempt reads
@@ -1277,97 +1222,29 @@ object StreamingEvents {
     graft.CacheRegistry.releaseAll()
   } }
 
-  /** Continuous ANN SERVING from the segmented graph store — the query
-    * half [[hnswAdmissionStream]] leaves open, completing the index
-    * lifecycle (admit, compact, and now search continuously): each
-    * micro-batch of query vectors (probe_id, embedding) is top-k
-    * searched against the store's committed segments
-    * ([[graft.operators.Hnsw.batchNeighbors]] — one distributed pass,
-    * never a driver literal) and the results land in
-    * `outDir/batch_id=N` as (probe_id, vec_id, cos, rank).
-    *
-    * Store snapshot semantics: each batch reads the LATEST COMMITTED
-    * epoch at execution time ([[graft.operators.HnswStore.load]]) —
-    * serving wants the freshest index, and commit markers keep
-    * half-written admission epochs invisible, so a concurrent admission
-    * stream on the same store never tears a read. Replay overwrites the
-    * batch's own output directory (idempotent sink paths), though a
-    * replayed SEARCH may see a newer store than the original — results
-    * are point-in-time, not versioned; pin `loadAt` semantics by
-    * batch-id only where queries and admissions share one stream clock.
-    */
-  def hnswSearchStream(queries: DataFrame, stateDir: String,
-                       outDir: String, checkpointDir: String,
-                       k: Int, efSearch: Int = 64): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val store = HnswStore.load(spark, stateDir)
-        graft.operators.Hnsw
-          .batchNeighbors(store.segments, batch, k, efSearch)
-          .write.mode("overwrite").option("compression", "snappy")
-          .parquet(s"$outDir/batch_id=$batchId")
-        graft.CacheRegistry.releaseAll()
-      }
-      .start()
-
-  /** Continuous FILTERED ANN serving — [[hnswSearchStream]] with the
-    * predicate pushed INTO each shard's graph search
-    * ([[graft.operators.Hnsw.batchNeighborsFiltered]]'s allowed-only
-    * result heap): "stream nearest WHERE lang = 'en'" without the
-    * k-completeness loss post-filtering pays (a selective predicate
-    * post-filters k hits toward zero; the filtered heap returns k
-    * allowed rows at unfiltered search cost). The admissible set is a
-    * PARQUET-BACKED relation at `allowedDir` (one `vec_id` column),
-    * re-read per micro-batch — the deployment shape where the predicate
-    * is maintained as a table (an `is_allowed` materialization, a policy
-    * list) that can change between batches; each batch serves against
-    * the set as of its own execution, the same point-in-time semantics
-    * as the store snapshot. Same store/replay contract as the
-    * unfiltered stream; recall within the allowed subset follows the
-    * ~1/efSearch selectivity knob — raise `efSearch` with
-    * 1/selectivity.
-    *
-    * Spec contract (StreamingSpec): streamed filtered serving ≡
-    * [[graft.operators.Hnsw.batchNeighborsFiltered]] on the same store
-    * and allowed set, bit for bit.
-    */
-  def hnswFilteredSearchStream(queries: DataFrame, stateDir: String,
-                               allowedDir: String, outDir: String,
-                               checkpointDir: String, k: Int,
-                               efSearch: Int = 64): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val store = HnswStore.load(spark, stateDir)
-        val allowed = spark.read.parquet(allowedDir).select(col("vec_id"))
-        graft.operators.Hnsw
-          .batchNeighborsFiltered(store.segments, batch, allowed, k,
-            efSearch)
-          .write.mode("overwrite").option("compression", "snappy")
-          .parquet(s"$outDir/batch_id=$batchId")
-        graft.CacheRegistry.releaseAll()
-      }
-      .start()
-
   /** Continuous ROUTED + FILTERED ANN serving over the segmented GEO
-    * store — [[hnswFilteredSearchStream]]'s counterpart for
-    * [[graft.operators.HnswGeoStore]], completing the geo lifecycle's
-    * serving surface (admit, compact, retrain, and now predicated
-    * serving, continuously): each micro-batch of query vectors is
-    * served by [[graft.operators.HnswGeoStore.batchNeighborsFiltered]] —
-    * geometry bounds WHICH cell graphs a probe touches
-    * (|batch|·nProbe·epochs probe rows, the store pass pruned to the
-    * probed cells), the predicate bounds WHAT they may return (the
-    * allowed-only result heap). Reads the latest committed epoch per
-    * batch (commit markers keep half-written admission epochs
-    * invisible, so serving and admission streams share a store safely);
-    * the allowed set re-reads from `allowedDir` per batch as in the
-    * flat twin.
+    * store [[graft.operators.HnswGeoStore]], completing the geo
+    * lifecycle's serving surface (admit, compact, retrain, and now
+    * predicated serving, continuously): each micro-batch of query
+    * vectors is served by
+    * [[graft.operators.HnswGeoStore.batchNeighborsFiltered]] — geometry
+    * bounds WHICH cell graphs a probe touches (|batch|·nProbe·epochs
+    * probe rows, the store pass pruned to the probed cells), the
+    * predicate bounds WHAT they may return (the allowed-only result
+    * heap, so a selective predicate still returns k allowed rows where
+    * post-filtering would thin k hits toward zero; recall within the
+    * allowed subset follows the ~1/efSearch selectivity knob — raise
+    * `efSearch` with 1/selectivity).
+    *
+    * The admissible set is a PARQUET-BACKED relation at `allowedDir`
+    * (one `vec_id` column), re-read per micro-batch — the deployment
+    * shape where the predicate is maintained as a table that can change
+    * between batches. Each batch reads the latest committed epoch at
+    * execution time (commit markers keep half-written admission epochs
+    * invisible, so serving and admission streams share a store safely).
+    * Replay overwrites the batch's own output directory, though a
+    * replayed search may see a newer store or allowed set than the
+    * original — results are point-in-time, not versioned.
     */
   def hnswGeoFilteredSearchStream(queries: DataFrame, stateDir: String,
                                   allowedDir: String, outDir: String,

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Sustained-throughput measurement for the heaviest streaming sinks
   * ([[graft.streaming.StreamingEvents.dedupAdmissionStream]],
-  * [[graft.streaming.StreamingEvents.embeddingAdmissionStream]],
-  * [[graft.streaming.StreamingEvents.hnswAdmissionStream]] and the
+  * [[graft.streaming.StreamingEvents.embeddingAdmissionStream]] and the
   * geo-routed [[graft.streaming.StreamingEvents.hnswGeoAdmissionStream]]) —
   * StreamingSpec pins their SEMANTICS (stream = batch ×12+); this tool
   * measures their RATE, which no spec had ever done.
@@ -159,28 +158,6 @@ object StreamingBench {
       graft.CacheRegistry.releaseAll()
     }
 
-    // ── HNSW graph-index admission (segmented store) ────────────────────
-    {
-      val emb = graft.sources.Tables.table(spark, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-        .orderBy(col("vec_id"))
-        .as[(Long, Array[Float])].collect().toSeq
-      val seedN = emb.size / 10
-      val (seed, rest) = emb.splitAt(seedN)
-      val stateDir = fresh("hnsw-state")
-      val outDir = fresh("hnsw-out")
-      val ckpt = fresh("hnsw-ckpt")
-      graft.operators.HnswStore.build(spark,
-        seed.toDF("vec_id", "embedding"), stateDir, shards = 4)
-      graft.CacheRegistry.releaseAll()
-      val batches = mkBatches(rest, "hnsw_admission")
-      val stream = MemoryStream[(Long, Array[Float])]
-      drive("hnsw_admission", batches, stateDir, stream,
-        () => graft.streaming.StreamingEvents.hnswAdmissionStream(
-          stream.toDF().toDF("vec_id", "embedding"), stateDir, outDir, ckpt,
-          threshold = 0.2, compactEvery = compactEvery))
-      graft.CacheRegistry.releaseAll()
-    }
     // ── GEO-routed graph-index admission (segmented geo store) ──────────
     {
       val emb = graft.sources.Tables.table(spark, sfDir, "embeddings")

@@ -543,6 +543,29 @@ class HnswGeoStoreSpec extends SparkSpec {
     var store = HnswGeoStore.build(spark,
       Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding"),
       dir, index)
+    // zero segment rows: serving runs through the scan (no early return)
+    // and answers with empty frames of the serving schema
+    val clean = Seq((1L, sample.head._2)).toDF("probe_id", "embedding")
+    val served = HnswGeoStore.batchNeighbors(store, clean, k = 3)
+    assert(served.columns.toSeq === Seq("probe_id", "vec_id", "cos", "rank"))
+    assert(served.isEmpty)
+    assert(HnswGeoStore.batchNeighborsFiltered(store, clean,
+      Seq(1L).toDF("vec_id"), k = 3).isEmpty)
+    // dirty probes fail fast in requireCleanProbes even with no graph to
+    // search: the dim check reads the index, never a segment row
+    val wrongDim = Seq((2L, Seq(1f, 0f))).toDF("probe_id", "embedding")
+    val eDim = intercept[IllegalArgumentException] {
+      HnswGeoStore.batchNeighbors(store, wrongDim, k = 3)
+    }
+    assert(eDim.getMessage.contains("do not match the store's dim 64"),
+      eDim.getMessage)
+    val nan = Seq((3L, sample.head._2.updated(5, Float.NaN)))
+      .toDF("probe_id", "embedding")
+    val eNan = intercept[IllegalArgumentException] {
+      HnswGeoStore.batchNeighborsFiltered(store, nan,
+        Seq(1L).toDF("vec_id"), k = 3)
+    }
+    assert(eNan.getMessage.contains("NaN"), eNan.getMessage)
     // nothing measurable: reported as such, not as ratio 1.0
     val (_, r0) = HnswGeoStore.retrainIfDrifted(spark, store, 2.0)
     assert(!r0.retrained && !r0.measurable, s"ratio=${r0.ratio}")
@@ -578,6 +601,48 @@ class HnswGeoStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("not committed"), e.getMessage)
     // the surviving base still loads and answers
     assert(HnswGeoStore.load(spark, dir).segments.count() === 150L)
+    CacheRegistry.releaseAll()
+  }
+
+  test("epochs beyond the 32k int-stride ceiling write, load, and serve " +
+       "(long shard ids at or above epoch × CellStride — an 11-day " +
+       "30s-trigger stream survives)") {
+    val all = corpus(120)
+    val index = IVF.train(all.toDF("vec_id", "embedding"), k = 4, iters = 3)
+    val dir = tmp("hnsw-geo-far")
+    val s0 = HnswGeoStore.build(spark,
+      all.filter(_._1 <= 100L).toDF("vec_id", "embedding"), dir, index)
+    val farEpoch = 40000L // > Int.MaxValue / CellStride ≈ 32767
+    // a compaction whose allocation lands past the int ceiling stands in
+    // for 40k consecutive micro-batches: its base rewrites every shard
+    // id into the far epoch's stride range
+    val far = HnswGeoStore.compact(spark, s0.copy(epoch = farEpoch - 1L))
+    assert(far.epoch === farEpoch && far.baseEpoch === farEpoch)
+    // the next delta allocates past it as usual
+    val st0 = HnswGeoStore.append(spark, far,
+      all.filter(_._1 > 100L).toDF("vec_id", "embedding"))
+    assert(st0.epoch === farEpoch + 1L)
+    val st = HnswGeoStore.load(spark, dir)
+    assert(st.epoch === farEpoch + 1L && st.baseEpoch === farEpoch &&
+      st.epochs === Seq(farEpoch, farEpoch + 1L))
+    assert(st.segments.schema("shard").dataType ===
+      org.apache.spark.sql.types.LongType)
+    val shards = st.segments.select("shard").as[Long].collect()
+    assert(shards.forall(_ >= farEpoch * HnswGeoStore.CellStride),
+      s"strided long shard ids expected, got ${shards.mkString(",")}")
+    assert(shards.map(_ / HnswGeoStore.CellStride).toSet ===
+      Set(farEpoch, farEpoch + 1L), "base and delta each own a stride range")
+    assert(st.segments.count() === 120L)
+    // routed serving reaches both the far base and the delta past it
+    val probe = all.last
+    val q = probe._2.map(_.toDouble).toArray
+    assert(HnswGeoStore.neighbors(st, q, 1, efSearch = 16)
+      .select("vec_id").as[Long].head() === probe._1)
+    val served = HnswGeoStore.batchNeighbors(st,
+      Seq((1L, probe._2), (2L, all.head._2)).toDF("probe_id", "embedding"),
+      k = 1, efSearch = 16)
+      .select("probe_id", "vec_id").as[(Long, Long)].collect().toMap
+    assert(served === Map(1L -> probe._1, 2L -> all.head._1))
     CacheRegistry.releaseAll()
   }
 

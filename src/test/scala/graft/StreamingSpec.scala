@@ -710,56 +710,6 @@ class StreamingSpec extends SparkSpec {
     assert(EmbeddingStore.load(spark, stateDir).epoch === 2L)
   }
 
-  test("hnswAdmissionStream: streamed graph-index admission equals the " +
-       "batch-wise admit chain; compaction epoch collapses to one base") {
-    implicit val ctx = spark.sqlContext
-    import graft.operators.HnswStore
-    val stateDir = tmpDir("graft-hadmit-state")
-    val outDir = s"${tmpDir("graft-hadmit-out")}/rows"
-    val ckpt = tmpDir("graft-hadmit-ckpt")
-    def vecsDf(rows: (Long, Array[Float])*) =
-      rows.toDF("vec_id", "embedding")
-    HnswStore.build(spark, vecsDf(
-      1L -> Array(1f, 0f, 0f, 0f),
-      2L -> Array(0f, 1f, 0f, 0f)), stateDir, shards = 2)
-    val batch1 = Seq(
-      10L -> Array(0.98f, 0.1f, 0f, 0f), // graph-search dup of stored 1
-      11L -> Array(0f, 0f, 1f, 0f))      // novel
-    val batch2 = Seq(
-      20L -> Array(0f, 0f, 0f, 1f),      // novel
-      21L -> Array(0f, 0f, 0f, 0.99f))   // in-batch dup of 20
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = StreamingEvents.hnswAdmissionStream(
-      stream.toDF().toDF("vec_id", "embedding"), stateDir, outDir, ckpt,
-      threshold = 0.9, compactEvery = 2)
-    try {
-      stream.addData(batch1)
-      q.processAllAvailable()
-      stream.addData(batch2)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val streamed = spark.read.parquet(outDir).select("vec_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(streamed === Set(11L, 20L),
-      "graph dup and in-batch dup drop; novels admit")
-    val fin = HnswStore.load(spark, stateDir)
-    assert(fin.epoch === 2L)
-    assert(fin.segments.select("vec_id").as[Long].collect().toSet ===
-      Set(1L, 2L, 11L, 20L))
-    // batch 2 was the compaction epoch: everything lives in ONE base
-    // segment (epoch 2's shard stride range); the superseded epochs stay
-    // on disk until a LATER base (the conservative replay-safe vacuum all
-    // admission sinks share), so the pre-state as-of reads still answer
-    assert(fin.segments.select("shard").as[Long].collect().forall(s =>
-      s >= 2L * HnswStore.ShardStride && s < 3L * HnswStore.ShardStride))
-    assert(HnswStore.loadAt(spark, stateDir, 0L).segments
-      .select("vec_id").as[Long].collect().toSet === Set(1L, 2L))
-    // and the compacted store still answers
-    assert(HnswStore.neighbors(fin, Array(0.0, 0.0, 1.0, 0.0), 1)
-      .select("vec_id").as[Long].head() === 11L)
-  }
-
   test("hnswGeoAdmissionStream: streamed geo-routed admission equals the " +
        "batch-wise admit chain bitwise; delta epochs are batch-sized; " +
        "compaction folds to one base by warm insertion") {
@@ -982,47 +932,6 @@ class StreamingSpec extends SparkSpec {
     assert(ex.getMessage.contains("out-of-band"))
     val (isBase, writer) = DedupState.commitMarker(spark, stateDir, 1L)
     assert(isBase && writer === Some("lifecycle"))
-    CacheRegistry.releaseAll()
-  }
-
-  test("hnswAdmissionStream: an out-of-band HnswStore compact between " +
-       "runs SHIFTS the resumed stream's epoch allocation instead of " +
-       "being overwritten (the mapping now covers every admission sink)") {
-    implicit val ctx = spark.sqlContext
-    import graft.operators.HnswStore
-    val stateDir = tmpDir("graft-hnswoob-state")
-    val outDir = s"${tmpDir("graft-hnswoob-out")}/rows"
-    val ckpt = tmpDir("graft-hnswoob-ckpt")
-    val seed = Seq(
-      1L -> Array(1.0, 0.0, 0.0, 0.0),
-      2L -> Array(0.0, 1.0, 0.0, 0.0)).toDF("vec_id", "embedding")
-    HnswStore.build(spark, seed, stateDir, shards = 1)
-    val stream = MemoryStream[(Long, Array[Float])]
-    val src = stream.toDF().toDF("vec_id", "embedding")
-    val q1 = StreamingEvents.hnswAdmissionStream(src, stateDir, outDir,
-      ckpt, threshold = 0.9)
-    try {
-      stream.addData(Seq(11L -> Array(0f, 0f, 1f, 0f)))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(HnswStore.load(spark, stateDir).epoch === 1L)
-    // out-of-band lifecycle op between runs: compaction commits epoch 2
-    HnswStore.compact(spark, HnswStore.load(spark, stateDir))
-    val q2 = StreamingEvents.hnswAdmissionStream(src, stateDir, outDir,
-      ckpt, threshold = 0.9)
-    try {
-      stream.addData(Seq(20L -> Array(0f, 0f, 0f, 1f)))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val fin = HnswStore.load(spark, stateDir)
-    assert(fin.epoch === 3L,
-      "the resumed batch must allocate PAST the out-of-band base " +
-        s"(epoch=${fin.epoch})")
-    assert(spark.read.parquet(s"$stateDir/commits/epoch=2")
-      .select("is_base").as[Boolean].head(),
-      "the out-of-band compaction's base marker must survive the resume")
-    assert(fin.segments.select("vec_id").as[Long].collect().toSet ===
-      Set(1L, 2L, 11L, 20L))
     CacheRegistry.releaseAll()
   }
 
@@ -1788,13 +1697,17 @@ class StreamingSpec extends SparkSpec {
     val index = IVF.train(seed, k = 2, iters = 2)
     HnswGeoStore.build(spark, seed, stateDir, index)
     val batch = Seq(11L -> Array(0f, 0f, 1f, 0f)).toDF("vec_id", "embedding")
+    def dump() = HnswGeoStore.load(spark, stateDir).segments
+      .collect().map(_.toString).sorted.toSeq
     StreamingEvents.geoAdmitBatch(batch, 0L, stateDir, outDir,
       threshold = 0.9, compactEvery = 0)
+    val first = dump()
     // replay of the same batch: mapping pins epoch 0, epoch 1 is already
     // committed by the first attempt with the SAME is_base — overwrite
-    // must proceed and land the identical store
+    // must proceed and rewrite a bitwise identical segment
     StreamingEvents.geoAdmitBatch(batch, 0L, stateDir, outDir,
       threshold = 0.9, compactEvery = 0)
+    assert(dump() === first, "replayed epoch must be bitwise identical")
     val fin = HnswGeoStore.load(spark, stateDir)
     assert(fin.epoch === 1L)
     assert(fin.segments.select("vec_id").as[Long].collect().toSet ===
@@ -1834,98 +1747,6 @@ class StreamingSpec extends SparkSpec {
     assert(!outFs.exists(
       new org.apache.hadoop.fs.Path(s"$outDir/batch_id=0")))
     CacheRegistry.releaseAll()
-  }
-
-  test("hnswSearchStream: streamed batch serving equals batchNeighbors " +
-       "on the same store, per batch; results are ranked and k-complete") {
-    implicit val ctx = spark.sqlContext
-    import graft.operators.{Hnsw, HnswStore}
-    val stateDir = tmpDir("graft-hserve-state")
-    val outDir = s"${tmpDir("graft-hserve-out")}/rows"
-    val ckpt = tmpDir("graft-hserve-ckpt")
-    val emb = graft.sources.Tables.table(spark, sf0001, "embeddings")
-    HnswStore.build(spark, emb.filter(col("vec_id") >= 10), stateDir,
-      shards = 3)
-    val probes = emb.filter(col("vec_id") < 10)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val (b1, b2) = probes.splitAt(5)
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = StreamingEvents.hnswSearchStream(
-      stream.toDF().toDF("probe_id", "embedding"), stateDir, outDir, ckpt,
-      k = 5, efSearch = 32)
-    try {
-      stream.addData(b1.toSeq)
-      q.processAllAvailable()
-      stream.addData(b2.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))
-    val streamed = spark.read.parquet(outDir)
-      .select("probe_id", "vec_id", "cos", "rank")
-      .collect().map(key).toSet
-    val store = HnswStore.load(spark, stateDir)
-    val want = Hnsw.batchNeighbors(store.segments,
-        emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("probe_id"), col("embedding")),
-        k = 5, efSearch = 32)
-      .collect().map(key).toSet
-    CacheRegistry.releaseAll()
-    assert(streamed === want,
-      "streamed serving must equal the batch search on the same store")
-    // k-complete and rank-dense per probe
-    val perProbe = streamed.groupBy(_._1)
-    assert(perProbe.size === 10)
-    perProbe.foreach { case (pid, rows) =>
-      assert(rows.map(_._4).toSeq.sorted === (1 to 5),
-        s"probe $pid must carry dense ranks 1..5")
-    }
-  }
-
-  test("hnswFilteredSearchStream: streamed filtered serving equals " +
-       "batchNeighborsFiltered on the same store and allowed set, bit " +
-       "for bit; every returned row satisfies the predicate") {
-    implicit val ctx = spark.sqlContext
-    import graft.operators.{Hnsw, HnswStore}
-    val stateDir = tmpDir("graft-hfserve-state")
-    val allowedDir = s"${tmpDir("graft-hfserve-allowed")}/ids"
-    val outDir = s"${tmpDir("graft-hfserve-out")}/rows"
-    val ckpt = tmpDir("graft-hfserve-ckpt")
-    val emb = graft.sources.Tables.table(spark, sf0001, "embeddings")
-    HnswStore.build(spark, emb.filter(col("vec_id") >= 10), stateDir,
-      shards = 3)
-    // the predicate as a maintained table: vec_id % 3 = 0
-    emb.filter(col("vec_id") % 3 === 0).select("vec_id")
-      .write.mode("overwrite").parquet(allowedDir)
-    val probes = emb.filter(col("vec_id") < 10)
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val (b1, b2) = probes.splitAt(5)
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = StreamingEvents.hnswFilteredSearchStream(
-      stream.toDF().toDF("probe_id", "embedding"), stateDir, allowedDir,
-      outDir, ckpt, k = 5, efSearch = 32)
-    try {
-      stream.addData(b1.toSeq)
-      q.processAllAvailable()
-      stream.addData(b2.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))
-    val streamed = spark.read.parquet(outDir)
-      .select("probe_id", "vec_id", "cos", "rank")
-      .collect().map(key).toSet
-    val store = HnswStore.load(spark, stateDir)
-    val want = Hnsw.batchNeighborsFiltered(store.segments,
-        emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("probe_id"), col("embedding")),
-        spark.read.parquet(allowedDir), k = 5, efSearch = 32)
-      .collect().map(key).toSet
-    CacheRegistry.releaseAll()
-    assert(streamed === want,
-      "streamed filtered serving must equal the batch filtered search")
-    assert(streamed.nonEmpty && streamed.forall(_._2 % 3 == 0),
-      "a filter-violating row reached the sink")
   }
 
   test("hnswGeoFilteredSearchStream: streamed routed+filtered serving " +

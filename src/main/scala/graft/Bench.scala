@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line for the driver.
@@ -24,39 +23,7 @@ object Bench {
     val scratch =
       java.nio.file.Files.createTempDirectory("graft-bench-scratch-")
     System.setProperty("java.io.tmpdir", scratch.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.ui.enabled", "false")
-      // the default 100-entry codegen class cache thrashes once an
-      // inventory this size (70 queries × several stages × 2 passes) runs
-      // in one JVM: by pass 2 every pass-1 class is evicted and janino
-      // recompiles whole stages inside the measurement — ~2s artifacts on
-      // the biggest generated stage (q38's k×dim assignment). Any
-      // production session serving a large query library wants this
-      // raised; it is a static conf, so it must be set before the session
-      // exists. Round 13 re-hit the wall at 2000 entries: the 194→196
-      // growth (three more IVF-training queries) evicted q38's stage
-      // again (reproducible 1.75 → ~4.0 s with a uniform ~15% drag on
-      // everything) — 6000 restores the measurement.
-      .config("spark.sql.codegen.cache.maxEntries", "6000")
-      // NEVER take the bypass-merge shuffle writer (round-19 diagnostic
-      // of the "8 cores beats 32" cluster): the bypass writer opens one
-      // FILE PER REDUCE PARTITION per map task — M×R file creates per
-      // shuffle, all cores concurrently in FileOutputStream.open0
-      // (thread-dump-attributed; taskSec on q40/q182/q22/q171 inflated
-      // 8-20× at local[32] vs local[8], GC ≈ 0, pure file-create
-      // contention, then the N-way concat). The sort writer lands ONE
-      // data+index file per map task at any R — the shape that scales
-      // (it is why sort-based shuffle replaced hash shuffle; the bypass
-      // path is the hash writer's remnant). Measured same-window at 32
-      // cores: q40 7.3→1.1 s, q182 7.3→1.7, q171 5.2→1.8, q109 taskSec
-      // 70→27; at 8 cores every reading also improved — cluster-valid,
-      // not a core-count tune.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // q14 (label enum) and q16 (moving average) run global-order windows
     // over ≤30 POST-AGGREGATION rows — tiny by construction, and Spark 4's
@@ -81,52 +48,33 @@ object Bench {
     // (GC pause, host neighbor) without hiding real regressions — a
     // genuinely slow plan is slow on every pass.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    // Per-query JVM-state diagnostics (SPARK_GRAFT_BENCH_DIAG=1): one
-    // stderr line per query with JIT code-cache / metaspace / class /
-    // GC readings. Exists to ATTRIBUTE full-session inflations (the
-    // round-13 IVF-family mystery): a query class that only slows down
-    // deep into a 196-query session is indistinguishable from a plan
-    // regression without the JVM counters next to the timing.
-    val diag = sys.env.get("SPARK_GRAFT_BENCH_DIAG").contains("1")
-    def jvmDiag(name: String, sec: Double): Unit = if (diag) {
-      import scala.jdk.CollectionConverters._
-      val pools = java.lang.management.ManagementFactory
-        .getMemoryPoolMXBeans.asScala
-      def mb(p: String): Long = pools.find(_.getName.contains(p))
-        .map(_.getUsage.getUsed / (1024 * 1024)).getOrElse(-1L)
-      val gcMs = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-      val classes = java.lang.management.ManagementFactory
-        .getClassLoadingMXBean.getLoadedClassCount
-      // canary: a fixed trivial JOB (schedule → run → collect one long) —
-      // its wall time is pure session overhead (scheduler, listener bus,
-      // accumulator registry, cleaner backlog). A query family whose
-      // plans run MANY SMALL JOBS (the IVF trainers: 5 Lloyd passes +
-      // assignment each) inflates in proportion to this number while
-      // one-job scans don't — which is exactly the attribution question.
-      val c0 = System.nanoTime()
-      spark.range(1024).selectExpr("sum(id)").head()
-      val canaryMs = (System.nanoTime() - c0) / 1e6
-      System.err.println(f"[diag] $name%-40s $sec%7.3f s " +
-        f"codeNonProf=${mb("non-profiled nmethods")}%4d MB " +
-        f"codeProf=${mb("profiled nmethods")}%4d MB " +
-        f"meta=${mb("Metaspace")}%5d MB classes=$classes%6d " +
-        f"gc=${gcMs}%7d ms canary=$canaryMs%7.1f ms")
-    }
     // Local-iteration subset (regex over query names). The driver never
     // sets it, so the per-round artifact always measures everything.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
     def selected(name: String): Boolean =
       only.forall(_.findFirstIn(name).isDefined)
+    // Every timed run is keyed `name#n` for GraftMetrics, so each reported
+    // time comes with the counters of the run that produced it.
+    val metrics = GraftMetrics.of(spark)
+    val reportedRun = scala.collection.mutable.Map[String, String]()
+    var runs = 0
+    def timed[T](into: scala.collection.mutable.Map[String, Double],
+                 name: String)(body: => T): T = {
+      runs += 1
+      val key = s"$name#$runs"
+      val t0 = System.nanoTime()
+      val r = GraftMetrics.withLeg(spark, key)(body)
+      val t = (System.nanoTime() - t0) / 1e9
+      if (into.get(name).forall(t < _)) { into(name) = t; reportedRun(name) = key }
+      r
+    }
     for (_ <- 1 to passes) {
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter(q => selected(q._1)).foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val t = (System.nanoTime() - t0) / 1e9
-          jvmDiag(name, t)
-          timings(name) = timings.get(name).fold(t)(math.min(_, t))
+          timed(timings, name) {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          }
           // a query is "errored" only if it NEVER succeeded: a transient
           // failure on one pass must not leave a contradictory report
           errors.remove(name)
@@ -160,12 +108,12 @@ object Bench {
         var attempts = 0
         var improving = true
         while (attempts < 2 && improving && timings(name) > retryFloorSec) {
-          val t0 = System.nanoTime()
+          val before = timings(name)
           try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val t = (System.nanoTime() - t0) / 1e9
-            improving = t < timings(name) * 0.9
-            timings(name) = math.min(timings(name), t)
+            timed(timings, name) {
+              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            }
+            improving = timings(name) < before * 0.9
           } catch { case e: Throwable =>
             improving = false
             System.err.println(s"[bench] retry of $name failed: ${e.getMessage}")
@@ -338,11 +286,8 @@ object Bench {
       }
     val scaleTimings = scala.collection.mutable.LinkedHashMap[String, Double]()
     for (_ <- 1 to passes) scaleDefs.filter(d => selected(d._1)).foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
+      try timed(scaleTimings, name) {
         fn().write.format("noop").mode("overwrite").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        scaleTimings(name) = scaleTimings.get(name).fold(t)(math.min(_, t))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] scale-path $name failed: ${e.getMessage}")
       }
@@ -362,34 +307,27 @@ object Bench {
         s"${System.getProperty("java.io.tmpdir")}/graft-geostore-legs"
       val legFs = new org.apache.hadoop.fs.Path(legPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def leg[T](name: String)(body: => T): T = {
-        val t0 = System.nanoTime()
-        val r = body
-        val t = (System.nanoTime() - t0) / 1e9
-        scaleTimings(name) = scaleTimings.get(name).fold(t)(math.min(_, t))
-        r
-      }
       for (_ <- 1 to passes) {
         legFs.delete(new org.apache.hadoop.fs.Path(legPath), true)
         try {
           val emb = graft.sources.Tables.table(spark, sfDir, "embeddings")
             .select(col("vec_id"), col("embedding"))
-          val index = leg("q196_leg_train") {
+          val index = timed(scaleTimings, "q196_leg_train") {
             graft.operators.IVF.train(emb, 4, 5, maxTrainRows = 400L)
           }
-          val base = leg("q196_leg_build") {
+          val base = timed(scaleTimings, "q196_leg_build") {
             graft.operators.HnswGeoStore.build(spark,
               emb.filter(col("vec_id") < 200), legPath, index)
           }
-          val grown = leg("q196_leg_append") {
+          val grown = timed(scaleTimings, "q196_leg_append") {
             graft.operators.HnswGeoStore.append(spark, base,
               emb.filter(col("vec_id") >= 200 && col("vec_id") < 350))
           }
-          val compacted = leg("q196_leg_compact") {
+          val compacted = timed(scaleTimings, "q196_leg_compact") {
             graft.operators.HnswGeoStore.append(spark, grown,
               emb.filter(col("vec_id") >= 350), asBase = true)
           }
-          leg("q196_leg_scan") {
+          timed(scaleTimings, "q196_leg_scan") {
             graft.operators.HnswGeoStore.nearDupPairs(compacted, 0.35,
                 nProbe = 8)
               .write.format("noop").mode("overwrite").save()
@@ -438,13 +376,13 @@ object Bench {
         val geo = graft.operators.HnswGeoStore.build(spark, standingEmb,
           gDir, index)
         CacheRegistry.releaseAll()
-        val t0 = System.nanoTime()
-        val (kept, _) = graft.pipelines.CorpusPipeline.admitBatch(spark,
-          graft.pipelines.CorpusPipeline.CorpusState(text, geo),
-          docs.filter(col("doc_id") > cut), emb, cfg,
-          semanticThreshold = 0.9)
-        kept.write.format("noop").mode("overwrite").save()
-        scaleTimings("admit_batch_ladder") = (System.nanoTime() - t0) / 1e9
+        timed(scaleTimings, "admit_batch_ladder") {
+          val (kept, _) = graft.pipelines.CorpusPipeline.admitBatch(spark,
+            graft.pipelines.CorpusPipeline.CorpusState(text, geo),
+            docs.filter(col("doc_id") > cut), emb, cfg,
+            semanticThreshold = 0.9)
+          kept.write.format("noop").mode("overwrite").save()
+        }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] admit_batch_ladder failed: ${e.getMessage}")
       }
@@ -462,38 +400,31 @@ object Bench {
         s"${System.getProperty("java.io.tmpdir")}/graft-geostore-q204legs"
       val legFs = new org.apache.hadoop.fs.Path(legPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def leg[T](name: String)(body: => T): T = {
-        val t0 = System.nanoTime()
-        val r = body
-        val t = (System.nanoTime() - t0) / 1e9
-        scaleTimings(name) = scaleTimings.get(name).fold(t)(math.min(_, t))
-        r
-      }
       for (_ <- 1 to passes) {
         legFs.delete(new org.apache.hadoop.fs.Path(legPath), true)
         try {
           val emb = graft.sources.Tables.table(spark, sfDir, "embeddings")
           val corpus = emb.filter(col("vec_id") >= 5)
             .select(col("vec_id"), col("embedding"))
-          val index = leg("q204_leg_train") {
+          val index = timed(scaleTimings, "q204_leg_train") {
             graft.operators.IVF.train(corpus, 4, 5, maxTrainRows = 400L)
           }
-          val base = leg("q204_leg_build") {
+          val base = timed(scaleTimings, "q204_leg_build") {
             graft.operators.HnswGeoStore.build(spark,
               corpus.filter(col("vec_id") < 300), legPath, index)
           }
-          val grown = leg("q204_leg_append") {
+          val grown = timed(scaleTimings, "q204_leg_append") {
             graft.operators.HnswGeoStore.append(spark, base,
               corpus.filter(col("vec_id") >= 300))
           }
-          val erased = leg("q204_leg_delete") {
+          val erased = timed(scaleTimings, "q204_leg_delete") {
             graft.operators.HnswGeoStore.delete(spark, grown,
               corpus.filter(col("vec_id") % 5 === 1).select(col("vec_id")))
           }
-          val compacted = leg("q204_leg_compact") {
+          val compacted = timed(scaleTimings, "q204_leg_compact") {
             graft.operators.HnswGeoStore.compact(spark, erased)
           }
-          leg("q204_leg_serve") {
+          timed(scaleTimings, "q204_leg_serve") {
             graft.operators.HnswGeoStore.batchNeighbors(compacted,
               emb.filter(col("vec_id") < 5)
                 .select(col("vec_id").as("probe_id"), col("embedding")),
@@ -513,28 +444,21 @@ object Bench {
         s"${System.getProperty("java.io.tmpdir")}/graft-dedupstate-q205legs"
       val legFs = new org.apache.hadoop.fs.Path(legPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def leg[T](name: String)(body: => T): T = {
-        val t0 = System.nanoTime()
-        val r = body
-        val t = (System.nanoTime() - t0) / 1e9
-        scaleTimings(name) = scaleTimings.get(name).fold(t)(math.min(_, t))
-        r
-      }
       for (_ <- 1 to passes) {
         legFs.delete(new org.apache.hadoop.fs.Path(legPath), true)
         try {
           val docs = graft.sources.Tables.table(spark, sfDir, "documents")
             .select(col("doc_id"), col("text"))
-          val store = leg("q205_leg_build") {
+          val store = timed(scaleTimings, "q205_leg_build") {
             graft.operators.DedupState.build(spark,
               docs.filter(col("doc_id") < 300), legPath, hashTag = "md5")
           }
-          val forgotten = leg("q205_leg_forget") {
+          val forgotten = timed(scaleTimings, "q205_leg_forget") {
             graft.operators.DedupState.forget(spark, store,
               docs.filter(col("doc_id") < 300 && col("doc_id") % 7 === 3)
                 .select(col("doc_id")))
           }
-          leg("q205_leg_admit") {
+          timed(scaleTimings, "q205_leg_admit") {
             graft.operators.DedupState.incrementalDedup(
                 forgotten, docs.filter(col("doc_id") >= 300))
               .write.format("noop").mode("overwrite").save()
@@ -559,15 +483,20 @@ object Bench {
     val qs = timings.map { case (k, v) => s""""${esc(k)}":${num(v)}""" }.mkString("{", ",", "}")
     val es = errors.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
     val sp = scaleTimings.map { case (k, v) => s""""${esc(k)}":${num(v)}""" }.mkString("{", ",", "}")
+    val pf = reportedRun.toSeq.sortBy(_._1).map { case (name, key) =>
+      s""""${esc(name)}":${metrics.profile(key).toJson}"""
+    }.mkString("{", ",", "}")
     val total = timings.values.sum
     val fullJson =
       s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"scale_path":$sp,"errors":$es,"sf":"${esc(sfDir)}"}"""
     // Dump the full named per-query JSON to a FILE too: the captured
     // stdout keeps only a bounded tail, which has truncated the full line
     // mid-JSON every round. A file in the repo survives intact and is
-    // committed with the round.
+    // committed with the round. Only the file carries `profile`, the
+    // GraftMetrics counters of each reported run (stdout stays as it was).
     try java.nio.file.Files.writeString(
-      java.nio.file.Path.of("bench_results.json"), fullJson + "\n")
+      java.nio.file.Path.of("bench_results.json"),
+      fullJson.stripSuffix("}") + s""","profile":$pf}""" + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] results file write failed: ${e.getMessage}")
     }

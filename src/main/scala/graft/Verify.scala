@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,15 +16,7 @@ object Verify {
     def selected(name: String): Boolean =
       nameFilter.forall(_.findFirstIn(name).isDefined)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.ui.enabled", "false")
-      // sort writer, never bypass — see the Bench.scala session note
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // silence the ≤30-row q14/q16 global-window warning flood (see Bench)
     org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -1021,7 +1021,8 @@ object Dedup {
     // the docShingles discipline): the window explode emits one row per
     // CHARACTER, and a small single-file corpus scan otherwise runs that
     // blow-up — the operator's dominant per-task work — on 1-4 input
-    // splits (QueryProfile r18: q186 ran 3.9 task-seconds on 21 tasks).
+    // splits (round-18 per-query job profile: q186 ran 3.9 task-seconds
+    // on 21 tasks).
     // Output is partitioning-invariant by the span construction.
     val occ = graft.sources.Tables.ensureParallelism(docs)
       .select(col("doc_id"), posexplode(win).as(Seq("pos", "sh")))

@@ -22,8 +22,8 @@ private[graft] object StoreCommits {
     * at least one marker-tree read, and submitting a full Spark job —
     * plan, schedule, task, commit protocol — for one row each way was a
     * measured ~40-100 ms per marker, a visible slice of every
-    * build/append/delete/forget at small batch sizes (QueryProfile on
-    * a 32-core host: the geo lifecycle queries run 70-200 jobs at
+    * build/append/delete/forget at small batch sizes (round-18 per-query
+    * job profile on a 32-core host: the geo lifecycle queries run 70-200 jobs at
     * < 10 ms of task time per job). The files stay ORDINARY PARQUET — `spark.read.parquet`
     * reads driver-written markers and parquet-mr reads Spark-written
     * ones, so stores written by either vintage interoperate.

@@ -167,16 +167,23 @@ object TableMerge {
     val fs = fsPath.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(fsPath), s"no table at $dir")
     val keys = erase.select(keyCols.map(col): _*).distinct()
+    // partitions are named by their directory value: a null partition
+    // value is the `__HIVE_DEFAULT_PARTITION__` directory, so no name
+    // below is ever null (a null would fall out of the slice filter and
+    // of collect_set, leaving its targeted rows in place)
+    val part = coalesce(col(partCol).cast("string"), lit(
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .DEFAULT_PARTITION_NAME))
     val hits = spark.read.parquet(dir)
       .join(keys, keyCols, "left_semi")
-      .groupBy(col(partCol).cast("string").as("partition"))
+      .groupBy(part.as("partition"))
       .agg(count(lit(1)).as("rows_purged"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
     if (hits.isEmpty) return Seq.empty[(String, Long)]
       .toDF("partition", "rows_purged")
     val partVals = hits.map(_._1).toSeq
     val slice = spark.read.parquet(dir)
-      .filter(col(partCol).cast("string").isInCollection(partVals))
+      .filter(part.isInCollection(partVals))
     val purged = slice.join(keys, keyCols, "left_anti")
     val staging = dir.stripSuffix("/") + ".__purge_staging"
     purged.write.mode("overwrite").parquet(staging)
@@ -192,11 +199,15 @@ object TableMerge {
           // the surviving-partition set rides the write job as an
           // Observation instead of a separate distinct+collect pass over
           // the staged slice (guide §1/§7 job attribution) — same values,
-          // one less driver-blocking job per purge
+          // one less driver-blocking job per purge. collect_set is sound
+          // here for two reasons: it drops nulls, which is benign because
+          // `part` (and so every name in `partVals`) is never null; and
+          // the accumulator behind `observe` may see a retried or
+          // speculative task's rows twice, which a SET absorbs —
+          // collect_list or a count would double-count.
           val obs = org.apache.spark.sql.Observation()
           spark.read.parquet(staging)
-            .observe(obs,
-              collect_set(col(partCol).cast("string")).as("parts"))
+            .observe(obs, collect_set(part).as("parts"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partCol)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.operators.Dedup
 import graft.sources.Tables
@@ -16,13 +15,7 @@ import graft.sources.Tables
 object DfCapSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = Tables.table(spark, sfDir, "documents").select("doc_id", "text")
 

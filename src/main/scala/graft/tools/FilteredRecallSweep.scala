@@ -27,14 +27,8 @@ object FilteredRecallSweep {
     val shards = args.lift(1).map(_.toInt).getOrElse(8)
     val capped = args.contains("capped")
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark =
+      graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     if (capped) runCapped(spark, srcDir, factor, cells = shards)
     else run(spark, srcDir, factor, shards)

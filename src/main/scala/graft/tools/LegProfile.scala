@@ -1,14 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler._
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import graft.GraftMetrics
 
-/** Leg-level job attribution for the store-lifecycle queries —
-  * [[QueryProfile]]'s counters applied per lifecycle STEP instead of per
-  * query, so "q204 runs 95 jobs" decomposes into "train 12, build 18,
-  * append 14, delete 16, compact 24, serve 11". Measurement-only: runs
-  * the same bodies as the queries/scale lines on a scratch dir.
+/** Leg-level job attribution for the store-lifecycle queries — the
+  * [[graft.GraftMetrics]] counters Bench reports per query, keyed per
+  * lifecycle STEP instead, so "q204 runs 95 jobs" decomposes into "train
+  * 12, build 18, append 14, delete 16, compact 24, serve 11".
+  * Measurement-only: runs the same bodies as the queries/scale lines on a
+  * scratch dir.
   *
   *   sbt "runMain graft.tools.LegProfile [sfDir]"
   */
@@ -21,43 +20,21 @@ object LegProfile {
     val scratch =
       java.nio.file.Files.createTempDirectory("graft-legprof-scratch-")
     System.setProperty("java.io.tmpdir", scratch.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "10000000")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "6000")
-      // sort writer, never bypass — see the Bench.scala session note
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
-    val jobs = new AtomicInteger
-    val tasks = new AtomicInteger
-    val taskMs = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        val m = t.taskMetrics
-        if (m != null) taskMs.addAndGet(m.executorRunTime)
-      }
-    })
+    val metrics = GraftMetrics.of(spark)
     try spark.read.parquet(s"$sfDir/nation.parquet")
       .groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
     def leg[T](name: String)(body: => T): T = {
-      Thread.sleep(120)
-      jobs.set(0); tasks.set(0); taskMs.set(0)
       val t0 = System.nanoTime()
-      val r = body
+      val r = GraftMetrics.withLeg(spark, s"legprofile/$name")(body)
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(120)
-      println(f"$name%-34s $sec%8.3f s ${jobs.get}%5d jobs " +
-        f"${tasks.get}%6d tasks ${taskMs.get / 1e3}%8.2f taskSec")
+      val p = metrics.profile(s"legprofile/$name")
+      println(f"$name%-34s $sec%8.3f s ${p.jobs}%5d jobs " +
+        f"${p.tasks}%6d tasks ${p.taskSec}%8.2f taskSec")
       r
     }
     val tmp = System.getProperty("java.io.tmpdir")

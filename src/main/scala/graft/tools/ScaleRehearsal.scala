@@ -80,9 +80,9 @@ object ScaleRehearsal {
     val suites = if (args.length > 1) args.drop(1).toSeq else Seq("corpus")
     suites.foreach(s =>
       require(Set("corpus", "jw", "tpch", "hnsw", "exactsubstr",
-          "neardup", "geostore", "admit", "gen", "hotcell", "erase")(s),
+          "neardup", "geostore", "admit", "hotcell", "erase")(s),
         s"unknown suite '$s' " +
-          "(corpus|jw|tpch|hnsw|exactsubstr|neardup|geostore|admit|gen|" +
+          "(corpus|jw|tpch|hnsw|exactsubstr|neardup|geostore|admit|" +
           "hotcell|erase)"))
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // CLEAN-SCRATCH HARNESS (round-17 verdict #5): evidence runs get a
@@ -95,17 +95,8 @@ object ScaleRehearsal {
     val base = explicitBase.getOrElse(
       java.nio.file.Files.createTempDirectory(
         s"graft-rehearsal-x$factor-").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "1000000")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // sort writer, never bypass — see the Bench.scala session note
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .getOrCreate()
+    val spark =
+      graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     if (suites.contains("corpus")) corpusSuite(spark, srcDir, base, factor)
     if (suites.contains("jw")) jwSuite(spark, srcDir, base, factor)
@@ -119,18 +110,10 @@ object ScaleRehearsal {
     if (suites.contains("admit")) admitSuite(spark, srcDir, base, factor)
     if (suites.contains("hotcell")) hotCellSuite(spark, base, factor)
     if (suites.contains("erase")) eraseSuite(spark, srcDir, base, factor)
-    // corpus generation only — lets other harnesses (StreamingBench's
-    // scale-seeded run) reuse the upscaled tables without re-running a
-    // measurement suite
-    if (suites.contains("gen")) {
-      ensureDocuments(spark, srcDir, base, factor)
-      ensureEmbeddings(spark, srcDir, base, factor)
-    }
     spark.stop()
     // tear the default per-run base down (an explicit
-    // SPARK_GRAFT_REHEARSAL_DIR — including `gen`'s shared-corpus use —
-    // is the caller's to keep)
-    if (explicitBase.isEmpty && !suites.contains("gen")) {
+    // SPARK_GRAFT_REHEARSAL_DIR is the caller's to keep)
+    if (explicitBase.isEmpty) {
       try {
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(java.nio.file.Path.of(base)).iterator()

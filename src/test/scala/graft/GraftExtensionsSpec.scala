@@ -109,12 +109,12 @@ class GraftExtensionsSpec extends SparkSpec {
 
   test("the whole surface loads through the SparkSessionExtensions " +
        "injector — the class spark.sql.extensions instantiates") {
-    // spark.sql.extensions is a STATIC conf read from the SparkContext at
-    // session creation, so the config line itself can't be exercised on a
-    // shared test context; Builder.withExtensions applies the SAME
-    // injector object the config path would instantiate (the documented
-    // contract is exactly "a Function1[SparkSessionExtensions, Unit] with
-    // a zero-arg constructor", which `new GraftExtensions` is)
+    // the config line is GraftSession's and is covered by GraftSessionSpec
+    // on the shared session; Builder.withExtensions is the other entry
+    // point, applying the SAME injector object the config path
+    // instantiates (the documented contract is exactly "a
+    // Function1[SparkSessionExtensions, Unit] with a zero-arg
+    // constructor", which `new GraftExtensions` is)
     val orig = spark
     org.apache.spark.sql.SparkSession.clearActiveSession()
     org.apache.spark.sql.SparkSession.clearDefaultSession()

@@ -152,4 +152,27 @@ class TableMergeSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       TableMerge.purgeKeys(spark, dir, Seq(1).toDF("p"), Seq("p"), "p"))
   }
+
+  test("purgeKeys: the null partition (__HIVE_DEFAULT_PARTITION__) is " +
+    "purged, audited and emptied like any other") {
+    val dir = tmpDir("graft-purge-null") + "/table"
+    val nullDir = new java.io.File(dir,
+      s"p=${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .DEFAULT_PARTITION_NAME}")
+    Seq[(Long, String, String)]((1L, "a", null), (2L, "b", null),
+      (3L, "c", "x"), (4L, "d", "y"))
+      .toDF("id", "v", "p").write.partitionBy("p").parquet(dir)
+    assert(nullDir.isDirectory)
+    def left = spark.read.parquet(dir).collect()
+      .map(r => (r.getLong(0), Option(r.getString(2)))).toSet
+    val audit = TableMerge.purgeKeys(spark, dir, Seq(1L, 4L).toDF("id"),
+      Seq("id"), "p").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(left === Set((2L, None), (3L, Some("x"))))
+    assert(audit === Map(nullDir.getName.stripPrefix("p=") -> 1L, "y" -> 1L))
+    assert(!new java.io.File(dir, "p=y").exists())
+    TableMerge.purgeKeys(spark, dir, Seq(2L).toDF("id"), Seq("id"), "p")
+    assert(left === Set((3L, Some("x"))))
+    assert(!nullDir.exists(), "an emptied null partition must not keep " +
+      "its old files")
+  }
 }

@@ -469,7 +469,7 @@ object DedupState {
     for (g <- commits.keys if g < base;
          dir <- Seq("posting", "fingerprints", "shingle_df", "signatures",
                     "doc_fps", "tombstones", "fp_tombstones", "sig_gone",
-                    "commits", "commits_writer")) {
+                    "commits")) {
       val p = new org.apache.hadoop.fs.Path(s"${store.path}/$dir/gen=$g")
       val fs = p.getFileSystem(conf)
       if (fs.exists(p)) fs.delete(p, true)
@@ -1073,13 +1073,6 @@ object DedupState {
     // out-of-band op at the same allocation even when both are bases
     // driver-side one-row write — no Spark job ([[StoreCommits.writeMarker]])
     StoreCommits.writeMarker(spark, path, s"gen=$gen", isBase, writer)
-    // base commits also UPGRADE any legacy (pre-writer-column) markers
-    // still in the tree, so the replay guard's is_base-fallback blind
-    // spot decays deterministically instead of living as long as the
-    // store does ([[StoreCommits.upgradeLegacy]]). Gen 0 is exempt:
-    // [[build]]/[[migrateCatalog]] clean the dir first, so the upgrade
-    // scan there would be a guaranteed-no-op read job
-    if (isBase && gen > 0L) StoreCommits.upgradeLegacy(spark, path, "gen")
   }
 
   /** The latest committed generation at `path`. */
@@ -1087,13 +1080,6 @@ object DedupState {
     StoreCommits.requireSeeded(spark, path, "dedup store")
     committedGens(spark, path).keys.max
   }
-
-  /** One generation's commit marker: (is_base, writer) — writer None for
-    * markers written before the writer-identity column existed.
-    */
-  private[graft] def commitMarker(spark: SparkSession, path: String,
-                                  gen: Long): (Boolean, Option[String]) =
-    StoreCommits.read(spark, path, s"gen=$gen")
 
   private def writeBucketsMarker(spark: SparkSession, path: String,
                                  nb: Int): Unit = {

@@ -99,11 +99,6 @@ object EmbeddingStore {
     // allocation even when both are bases. Driver-side one-row write —
     // no Spark job ([[StoreCommits.writeMarker]]).
     StoreCommits.writeMarker(spark, path, s"epoch=$epoch", isBase, writer)
-    // base commits upgrade legacy (pre-writer-column) markers so the
-    // replay guard's is_base-fallback blind spot decays deterministically.
-    // Epoch 0 is exempt: [[build]]/[[buildAnn]] clean the dir first, so
-    // the upgrade scan there would be a guaranteed-no-op read job
-    if (isBase && epoch > 0L) StoreCommits.upgradeLegacy(spark, path, "epoch")
   }
 
   /** The latest committed epoch at `path`. */
@@ -111,13 +106,6 @@ object EmbeddingStore {
     StoreCommits.requireSeeded(spark, path, "embedding store")
     StoreCommits.committedMap(spark, path, "epoch").keys.max
   }
-
-  /** One epoch's commit marker: (is_base, writer) — writer None for
-    * markers written before the writer-identity column existed.
-    */
-  private[graft] def commitMarker(spark: SparkSession, path: String,
-                                  epoch: Long): (Boolean, Option[String]) =
-    StoreCommits.read(spark, path, s"epoch=$epoch")
 
   /** Build an ANN store: the similarity store plus residual PQ codebooks
     * ([[PQ.trainResidual]] under the store's own index) persisted at
@@ -232,7 +220,7 @@ object EmbeddingStore {
     val base = commits.collect { case (e, true) if e <= store.epoch => e }.max
     val conf = spark.sparkContext.hadoopConfiguration
     for (e <- commits.keys if e < base;
-         dir <- Seq("vectors", "commits", "commits_writer")) {
+         dir <- Seq("vectors", "commits")) {
       val p = new org.apache.hadoop.fs.Path(s"${store.path}/$dir/epoch=$e")
       val fs = p.getFileSystem(conf)
       if (fs.exists(p)) fs.delete(p, true)

@@ -113,9 +113,9 @@ object HnswGeoStore {
     // recomputed survivor max for each touched cell with
     // `replace_max = true`, and the fold takes, per cell, the max over
     // leaves AT OR AFTER the cell's latest replace leaf — snaps arrive
-    // in epoch order, so the tag index is the epoch order. Leaves
-    // written before the column existed (and all append leaves) default
-    // to false, preserving the plain running max.
+    // in epoch order, so the tag index is the epoch order. Append
+    // leaves omit the column and default to false, preserving the plain
+    // running max.
     val tagged = snaps.zipWithIndex.map { case (s, i) =>
       val withFlag =
         if (s.columns.contains("replace_max")) s
@@ -246,20 +246,7 @@ object HnswGeoStore {
                           writer: String = "lifecycle"): Unit = {
     // driver-side one-row write — no Spark job ([[StoreCommits.writeMarker]])
     StoreCommits.writeMarker(spark, path, s"epoch=$epoch", isBase, writer)
-    // base commits upgrade legacy (pre-writer-column) markers so the
-    // replay guard's is_base-fallback blind spot decays deterministically.
-    // Epoch 0 is exempt: [[build]] cleans the dir first, so the only
-    // marker in the tree is the one just written — the upgrade scan would
-    // be a guaranteed-no-op read job
-    if (isBase && epoch > 0L) StoreCommits.upgradeLegacy(spark, path, "epoch")
   }
-
-  /** One epoch's commit marker: (is_base, writer) — writer None for
-    * markers written before the writer-identity column existed.
-    */
-  private[graft] def commitMarker(spark: SparkSession, path: String,
-                                  epoch: Long): (Boolean, Option[String]) =
-    StoreCommits.read(spark, path, s"epoch=$epoch")
 
   private def writeSegment(path: String, rows: DataFrame,
                            epoch: Long): Unit =
@@ -304,10 +291,9 @@ object HnswGeoStore {
       .parquet(s"$path/layout/epoch=$epoch")
   }
 
-  /** A base epoch's persisted layout + cap + within-cell routing, or
-    * (empty, 0, empty) for stores built without a cell cap. Layout
-    * relations written before the routing columns existed load with an
-    * empty routing — the exhaustive-fan behavior they were built under.
+  /** A base epoch's persisted layout + cap + within-cell routing +
+    * routing policy flag, or (empty, 0, empty, false) for stores built
+    * without a cell cap.
     */
   private[graft] def layoutAt(spark: SparkSession, path: String,
                               epoch: Long)
@@ -316,29 +302,24 @@ object HnswGeoStore {
     if (!StoreCommits.fs(spark, path).exists(dir))
       (Map.empty, 0, Map.empty, false)
     else {
-      val df = spark.read.parquet(dir.toString)
-      val hasRouting = df.columns.contains("sub_centroids")
-      val hasFlag = df.columns.contains("sub_routed")
-      val rows = df.collect()
+      val rows = spark.read.parquet(dir.toString).collect()
       val cap = rows.headOption
         .map(_.getAs[Int]("max_cell_nodes")).getOrElse(0)
       val layout = rows.iterator
         .filter(_.getAs[Long]("cell") >= 0L)
         .map(r => r.getAs[Long]("cell") -> r.getAs[Int]("n_sub"))
         .filter(_._2 > 1).toMap
-      val routing =
-        if (!hasRouting) Map.empty[Long, Hnsw.SubRouting]
-        else rows.iterator
-          .filter(r => r.getAs[Long]("cell") >= 0L &&
-            !r.isNullAt(r.fieldIndex("sub_centroids")))
-          .map { r =>
-            val cents = r.getSeq[scala.collection.Seq[Double]](
-                r.fieldIndex("sub_centroids"))
-              .map(_.toArray).toArray
-            val split = r.getSeq[Int](r.fieldIndex("sub_split")).toArray
-            r.getAs[Long]("cell") -> Hnsw.SubRouting(cents, split)
-          }.toMap
-      val subRouted = hasFlag &&
+      val routing = rows.iterator
+        .filter(r => r.getAs[Long]("cell") >= 0L &&
+          !r.isNullAt(r.fieldIndex("sub_centroids")))
+        .map { r =>
+          val cents = r.getSeq[scala.collection.Seq[Double]](
+              r.fieldIndex("sub_centroids"))
+            .map(_.toArray).toArray
+          val split = r.getSeq[Int](r.fieldIndex("sub_split")).toArray
+          r.getAs[Long]("cell") -> Hnsw.SubRouting(cents, split)
+        }.toMap
+      val subRouted =
         rows.headOption.exists(_.getAs[Boolean]("sub_routed"))
       (layout, cap, routing, subRouted)
     }
@@ -590,8 +571,7 @@ object HnswGeoStore {
     // every other cell keeps the warm addGeo path bitwise. Counts come
     // from the epoch-count stats fold (exact on n across deletes by the
     // negated-leaf algebra) — ≤ k rows to the driver, the [[layoutAt]]
-    // bounded-collect discipline — with a corpus-side aggregation
-    // fallback for pre-stats legacy stores. Re-splitting is
+    // bounded-collect discipline. Re-splitting is
     // oracle-invisible by q206's exhaustive-fan argument: probes fan to
     // ALL of a cell's sub-shards, so the served surface is unchanged.
     val (newLayout, newRouting, resplitCells)
@@ -600,24 +580,8 @@ object HnswGeoStore {
         (store.layout, store.routing, Set.empty[Long])
       else {
         val cap = store.maxCellNodes.toLong
-        val haveLeaves = store.epochs.forall { e =>
-          StoreCommits.fs(spark, store.path).exists(
-            new org.apache.hadoop.fs.Path(s"${store.path}/stats/epoch=$e"))
-        }
-        val perCell =
-          if (haveLeaves)
-            foldStats(store.epochs.map(e =>
-              spark.read.parquet(s"${store.path}/stats/epoch=$e"))
-              :+ freshStats)
-              .select(col("cid").cast("long").as("cid"), col("n"))
-          else
-            store.segments
-              .select(pmod(pmod(col("shard"), lit(CellStride)),
-                lit(store.index.k.toLong)).as("cid"))
-              .unionByName(freshRows.select(
-                IVF.assignExpr(col("embedding"), store.index)
-                  .cast("long").as("cid")))
-              .groupBy(col("cid")).agg(count(lit(1)).as("n"))
+        val perCell = foldStats(liveStats(spark, store) :+ freshStats)
+          .select(col("cid").cast("long").as("cid"), col("n"))
         // cells whose live population outgrew their slot budget
         val grownPop = perCell.filter(col("n") > cap).collect()
           .flatMap { r =>
@@ -815,8 +779,8 @@ object HnswGeoStore {
     // the delta arm's three writes (segment / attrs / stats) are
     // independent, so they overlap ([[ParWrites]], guide §2.6) with the
     // marker still strictly last; the BASE arm writes the segment first —
-    // its stats recompute fallback below reads that very dir back — then
-    // overlaps the rest
+    // its tombstoned-range stats recompute below reads that very dir
+    // back — then overlaps the rest
     val attrsWrite: Option[() => Unit] = if (!storeAttrs) None
     else Some(() => {
       if (asBase) {
@@ -864,22 +828,15 @@ object HnswGeoStore {
     })
     if (asBase) {
       // the BASE arm's stats snapshot may need to read the new segment
-      // back (the recompute fallback below), so the segment write runs
-      // first; everything after it is independent and overlaps. The
-      // corruption tripwire overlaps the segment write (both fail before
-      // the marker; both read only persisted frames)
+      // back (the tombstoned-range recompute below), so the segment
+      // write runs first; everything after it is independent and
+      // overlaps. The corruption tripwire overlaps the segment write
+      // (both fail before the marker; both read only persisted frames)
       ParWrites.run(Seq[() => Unit](() =>
         writeSegment(store.path, rows, epoch)) ++ corruptionProbe.toSeq)
       // the compacted base's stats snapshot: fold the live epochs' leaves
       // plus the fresh batch — epoch-count cost under the frozen index.
-      // Stores written before stats/ existed fall back to one pruned
-      // read-back of the segment just written (a compaction already paid
-      // a corpus pass, so the fallback stays honest).
-      val haveLeaves = store.epochs.forall { e =>
-        StoreCommits.fs(spark, store.path).exists(
-          new org.apache.hadoop.fs.Path(s"${store.path}/stats/epoch=$e"))
-      }
-      // a tombstoned range takes the recompute arm: the live fold is
+      // A tombstoned range takes the recompute arm: the live fold is
       // exact on every column for leaves written since delete leaves
       // carried replace_max survivor maxes, but a PRE-replace_max
       // delete leaf in the range would leave max_d2 an upper bound —
@@ -887,9 +844,7 @@ object HnswGeoStore {
       // PERSISTED leaf (which outlives the tombstones) recomputes
       // unconditionally rather than trusting leaf vintage
       val folded = graft.CacheRegistry.persist(
-        if (haveLeaves && tombs.isEmpty)
-          foldStats(store.epochs.map(e =>
-            spark.read.parquet(s"${store.path}/stats/epoch=$e")) :+ freshStats)
+        if (tombs.isEmpty) foldStats(liveStats(spark, store) :+ freshStats)
         else IVF.cellStats(
           spark.read.parquet(s"${store.path}/segments/epoch=$epoch")
             .select(col("vec_id"), col("vec").as("embedding")),
@@ -1188,7 +1143,7 @@ object HnswGeoStore {
     val commits = StoreCommits.committedMap(spark, store.path, "epoch")
     val base = commits.collect { case (e, true) if e <= store.epoch => e }.max
     for (e <- commits.keys if e < base;
-         dir <- Seq("commits", "commits_writer", "segments", "index",
+         dir <- Seq("commits", "segments", "index",
            "drift", "stats", "attrs", "tombstones", "layout")) {
       val p = new org.apache.hadoop.fs.Path(s"${store.path}/$dir/epoch=$e")
       val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1668,9 +1623,8 @@ object HnswGeoStore {
   /** The standing corpus's [[IVF.cellStats]] under the base's frozen
     * index, priced at EPOCH-COUNT: a fold of the per-epoch snapshots
     * written at append time ([[foldStats]] — exact in the snapshots'
-    * 1e-6-quantized integer domain, not a float re-association), with
-    * one corpus-recompute fallback for stores written before `stats/`
-    * snapshots existed. This is [[retrainIfDrifted]]'s drift
+    * 1e-6-quantized integer domain, not a float re-association). This
+    * is [[retrainIfDrifted]]'s drift
     * measurement, exposed so a monitoring job can watch cell quality
     * without paying a corpus scan per check (q198 drives it under
     * q148's oracle: the fold must reproduce the full recompute).
@@ -1682,18 +1636,15 @@ object HnswGeoStore {
     * `replace_max`, which the fold honors in epoch order
     * (HnswGeoStoreSpec pins fold ≡ recompute on every column).
     */
-  def currentStats(spark: SparkSession, store: Store): DataFrame = {
-    val haveLeaves = store.epochs.forall { e =>
-      StoreCommits.fs(spark, store.path).exists(
-        new org.apache.hadoop.fs.Path(s"${store.path}/stats/epoch=$e"))
-    }
-    if (haveLeaves)
-      foldStats(store.epochs.map(e =>
-        spark.read.parquet(s"${store.path}/stats/epoch=$e")))
-    else IVF.cellStats(
-      store.segments.select(col("vec_id"), col("vec").as("embedding")),
-      store.index)
-  }
+  def currentStats(spark: SparkSession, store: Store): DataFrame =
+    foldStats(liveStats(spark, store))
+
+  /** The live epochs' `stats/epoch=N` leaves — every epoch-writing op
+    * lands one before its commit marker.
+    */
+  private def liveStats(spark: SparkSession, store: Store): Seq[DataFrame] =
+    store.epochs.map(e =>
+      spark.read.parquet(s"${store.path}/stats/epoch=$e"))
 
   /** One [[retrainIfDrifted]] decision, reported honestly: the drift
     * ratio is current corpus-wide mean d² to its own centroid over the
@@ -1744,11 +1695,10 @@ object HnswGeoStore {
       stats.agg((sum(col("inertia")) /
           sum(col("n").cast("double"))).as("m"))
         .take(1).headOption.filterNot(_.isNullAt(0)).map(_.getDouble(0))
-    // corpus is only materialized on the paths that genuinely need a
-    // corpus pass: the retrain itself, or the recompute fallback for
-    // stores written before stats/ snapshots existed. The drift CHECK
-    // proper folds the per-epoch snapshots — epoch-count reads, cost
-    // independent of how large the standing store has grown.
+    // corpus is only materialized on the path that genuinely needs a
+    // corpus pass: the retrain itself. The drift CHECK folds the
+    // per-epoch snapshots — epoch-count reads, cost independent of how
+    // large the standing store has grown.
     lazy val corpus = graft.CacheRegistry.persist(
       store.segments.select(col("vec_id"), col("vec").as("embedding"))
         .unionByName(foldIn.map(_.select(col("vec_id"),

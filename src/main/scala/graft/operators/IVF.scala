@@ -65,17 +65,13 @@ object IVF {
     * the same cell as the original (spec-pinned).
     */
   def save(spark: SparkSession, index: Index, path: String): Unit = {
-    // DRIVER-SIDE parquet-mr write, no Spark job (the StoreCommits
-    // marker discipline): the index is k×dim doubles — centroid-sized,
-    // never data-sized — and a full Spark job (plan, schedule, task,
-    // commit protocol) per save was a ~50-100 ms slice of every
-    // build/compact/retrain in every store family. Temp file + atomic
-    // rename keeps the crash states of the old overwrite (absent or
-    // complete); the file is ordinary parquet with the exact logical
-    // schema the old job wrote, so [[load]] reads either vintage.
+    // DRIVER-SIDE parquet-mr write, no Spark job
+    // ([[StoreCommits.writeParquetFile]]): the index is k×dim doubles —
+    // centroid-sized, never data-sized — and a full Spark job (plan,
+    // schedule, task, commit protocol) per save was a ~50-100 ms slice
+    // of every build/compact/retrain in every store family. The file is
+    // ordinary parquet with the logical schema Spark would write.
     import org.apache.parquet.example.data.simple.SimpleGroup
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.parquet.schema.MessageTypeParser
     val schema = MessageTypeParser.parseMessageType(
       """message spark_schema {
@@ -86,26 +82,14 @@ object IVF {
         |    }
         |  }
         |}""".stripMargin)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val d = new org.apache.hadoop.fs.Path(path)
-    val fs = d.getFileSystem(conf)
-    if (fs.exists(d)) fs.delete(d, true)
-    fs.mkdirs(d)
-    val tmp = new org.apache.hadoop.fs.Path(d,
-      s".part-00000-${java.util.UUID.randomUUID}.parquet.tmp")
-    val w = ExampleParquetWriter.builder(
-        HadoopOutputFile.fromPath(tmp, conf))
-      .withConf(conf).withType(schema).build()
-    index.centroids.zipWithIndex.foreach { case (c, i) =>
-      val g = new SimpleGroup(schema)
-      g.add("cid", i)
-      val cent = g.addGroup("centroid")
-      c.foreach(x => cent.addGroup("list").add("element", x))
-      w.write(g)
-    }
-    w.close()
-    fs.rename(tmp,
-      new org.apache.hadoop.fs.Path(d, "part-00000-index.parquet"))
+    StoreCommits.writeParquetFile(spark, path, schema, "index",
+      index.centroids.iterator.zipWithIndex.map { case (c, i) =>
+        val g = new SimpleGroup(schema)
+        g.add("cid", i)
+        val cent = g.addGroup("centroid")
+        c.foreach(x => cent.addGroup("list").add("element", x))
+        g
+      })
   }
 
   /** Load an index persisted by [[save]]. Fails fast on a corrupt store

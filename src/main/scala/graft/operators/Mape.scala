@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Metric-family schema contract: the reference's `column_mappings`
   * (/root/reference/main.py:7-11) as typed config. Each family is the triple
@@ -110,25 +110,22 @@ object Mape {
       } else df
     }
 
-    // F1 + F2: drop rows with any null/NaN in ANY column (main.py:105-106).
-    val doubleCols = withMape.schema.fields
-      .filter(f => f.dataType == DoubleType || f.dataType == FloatType)
-      .map(_.name)
-    val noNan = doubleCols.foldLeft(withMape.na.drop("any")) { (df, c) =>
-      df.filter(!isnan(col(c)))
-    }
-
+    // F1 + F2: drop rows with any null/NaN in ANY column (main.py:105-106)
+    // — `na.drop` counts NaN as null in float columns, so it is both.
     // F3: drop rows where zipped (forecast*, backcast*) pairs are both 0.0 —
     // the zip pairs (forecast, backcast) AND (f_abs_err, b_abs_err) per
-    // family (main.py:108-114, SURVEY.md §7.4).
+    // family (main.py:108-114, SURVEY.md §7.4) — as ONE predicate: a
+    // filter per column and per pair (~30 stacked filters for three
+    // families) sent Catalyst's constraint propagation past 100 s of
+    // planning before the first job.
     val forecastCols = sumCols.filter(_.contains("forecast"))
     val backcastCols = sumCols.filter(_.contains("backcast"))
-    val zeroFiltered = forecastCols.zip(backcastCols).foldLeft(noNan) {
-      case (df, (f, b)) =>
-        if (df.columns.contains(f) && df.columns.contains(b))
-          df.filter(!(col(f) === 0.0 && col(b) === 0.0))
-        else df
+    val nonZeroPairs = forecastCols.zip(backcastCols).map { case (f, b) =>
+      !(col(f) === 0.0 && col(b) === 0.0)
     }
+    val noNulls = withMape.na.drop("any")
+    val zeroFiltered =
+      nonZeroPairs.reduceOption(_ && _).fold(noNulls)(noNulls.filter)
 
     // P4: splice mape columns at position 1 (portfolio) / 2 (zonal).
     val insertAt = if (zone) 2 else 1

@@ -116,13 +116,8 @@ object PQ {
     // DRIVER-SIDE parquet-mr write, no Spark job ([[IVF.save]]'s
     // discipline): codebooks are m×k×subDim doubles — codebook-sized at
     // any corpus scale — and a full Spark job per save was pure
-    // scheduler latency on every ANN-store build. Temp file + atomic
-    // rename keeps the crash states of the old overwrite (absent or
-    // complete); the file is ordinary parquet with the logical schema
-    // the old job wrote, so [[load]] reads either vintage.
+    // scheduler latency on every ANN-store build.
     import org.apache.parquet.example.data.simple.SimpleGroup
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.parquet.schema.MessageTypeParser
     val schema = MessageTypeParser.parseMessageType(
       """message spark_schema {
@@ -134,27 +129,16 @@ object PQ {
         |    }
         |  }
         |}""".stripMargin)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val d = new org.apache.hadoop.fs.Path(path)
-    val fs = d.getFileSystem(conf)
-    if (fs.exists(d)) fs.delete(d, true)
-    fs.mkdirs(d)
-    val tmp = new org.apache.hadoop.fs.Path(d,
-      s".part-00000-${java.util.UUID.randomUUID}.parquet.tmp")
-    val w = ExampleParquetWriter.builder(
-        HadoopOutputFile.fromPath(tmp, conf))
-      .withConf(conf).withType(schema).build()
-    for (j <- cb.books.indices; c <- cb.books(j).indices) {
-      val g = new SimpleGroup(schema)
-      g.add("sub", j)
-      g.add("code", c)
-      val word = g.addGroup("codeword")
-      cb.books(j)(c).foreach(x => word.addGroup("list").add("element", x))
-      w.write(g)
-    }
-    w.close()
-    fs.rename(tmp,
-      new org.apache.hadoop.fs.Path(d, "part-00000-codebooks.parquet"))
+    StoreCommits.writeParquetFile(spark, path, schema, "codebooks",
+      for (j <- cb.books.indices.iterator; c <- cb.books(j).indices.iterator)
+        yield {
+          val g = new SimpleGroup(schema)
+          g.add("sub", j)
+          g.add("code", c)
+          val word = g.addGroup("codeword")
+          cb.books(j)(c).foreach(x => word.addGroup("list").add("element", x))
+          g
+        })
   }
 
   /** Load codebooks persisted by [[save]]; fails fast on gaps or ragged

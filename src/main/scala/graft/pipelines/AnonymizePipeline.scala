@@ -1,8 +1,9 @@
 package graft.pipelines
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.operators.Anonymize
+import graft.sinks.SingleFile
 import graft.sources.Tables
 
 /** E2: the reference's directory-walk anonymizer
@@ -30,25 +31,6 @@ object AnonymizePipeline {
                    clientDemo: String = "client_demo"): String =
     fileName.replace(client, clientDemo).replace(".csv", ".snappy.parquet")
 
-  /** Write `df` as exactly one snappy parquet FILE at `target` (the
-    * reference's per-file contract): stage a single-partition directory
-    * write, promote the part file, drop the staging dir.
-    */
-  def writeSingleFile(spark: SparkSession, df: DataFrame, target: String): Unit = {
-    val targetPath = new Path(target)
-    val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(target + ".staging")
-    df.coalesce(1).write.mode("overwrite")
-      .option("compression", "snappy").parquet(staging.toString)
-    val part = fs.listStatus(staging)
-      .map(_.getPath).find(_.getName.startsWith("part-"))
-      .getOrElse(throw new java.io.IOException(s"no part file under $staging"))
-    if (fs.exists(targetPath)) fs.delete(targetPath, false)
-    if (!fs.rename(part, targetPath))
-      throw new java.io.IOException(s"cannot promote $part to $targetPath")
-    fs.delete(staging, true)
-  }
-
   /** Run the full anonymization pass. `clock` injects a fixed
     * `process_time` for deterministic tests (SURVEY.md §7.4).
     */
@@ -71,7 +53,10 @@ object AnonymizePipeline {
             Anonymize.cdmAnonymization(spark, df, keyDir),
             timezone, clock)
           val outFile = s"$outputDir/${renameOutput(new Path(path).getName, client, clientDemo)}"
-          writeSingleFile(spark, anonymized, outFile)
+          // one snappy parquet FILE per input file (the reference's
+          // per-file contract)
+          SingleFile.publish(spark, anonymized, outFile)(
+            _.option("compression", "snappy").parquet(_))
           // cdmAnonymization persists its scaled scan for the multi-pass
           // label/uid work; release library-held caches before the next
           // file so a long directory walk doesn't accumulate an entry per

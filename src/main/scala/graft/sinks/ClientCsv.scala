@@ -1,6 +1,5 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -111,22 +110,10 @@ object ClientCsv {
     * reference's). Minimal quoting (only values containing the
     * separator), matching the golden byte grammar. Order before calling
     * if row order matters; this writes the frame as-is through a staged
-    * single-partition write.
+    * single-partition write ([[SingleFile.publish]]).
     */
   def writeSingleCsv(spark: SparkSession, display: DataFrame,
-                     target: String): Unit = {
-    val targetPath = new Path(target)
-    val fs = targetPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(target + ".staging")
-    display.coalesce(1).write.mode("overwrite")
-      .option("header", "true")
-      .csv(staging.toString)
-    val part = fs.listStatus(staging)
-      .map(_.getPath).find(_.getName.startsWith("part-"))
-      .getOrElse(throw new java.io.IOException(s"no part file under $staging"))
-    if (fs.exists(targetPath)) fs.delete(targetPath, false)
-    if (!fs.rename(part, targetPath))
-      throw new java.io.IOException(s"cannot promote $part to $targetPath")
-    fs.delete(staging, true)
-  }
+                     target: String): Unit =
+    SingleFile.publish(spark, display, target)(
+      _.option("header", "true").csv(_))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.functions.TextFunctions
-import graft.operators.{Anonymize, DedupState, EmbeddingStore, HnswGeoStore, Mape, MetricFamily}
+import graft.operators.{Anonymize, DedupState, EmbeddingStore, HnswGeoStore, Mape, MetricFamily, StoreCommits}
 
 /** Structured Streaming surface (SURVEY.md §2.8/§7.6 — no reference
   * counterpart; the reference's only cross-run state, the uid→pseudonym
@@ -429,8 +429,7 @@ object StreamingEvents {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         dedupAdmitBatch(batch, batchId, stateDir, outDir, threshold,
-          compactEvery,
-          streamInstanceId(batch.sparkSession, checkpointDir))
+          compactEvery)
       }
       .start()
 
@@ -446,19 +445,16 @@ object StreamingEvents {
   private[graft] def dedupAdmitBatch(batch: DataFrame, batchId: Long,
                                      stateDir: String, outDir: String,
                                      threshold: Double,
-                                     compactEvery: Int,
-                                     instanceId: Option[String] = None)
+                                     compactEvery: Int)
       : Unit = withStoreLock(stateDir) {
     val spark = batch.sparkSession
     val asBase = compactEvery > 0 && (batchId + 1) % compactEvery == 0
-    val preGen = pinTextPreGen(spark, stateDir, outDir, batchId, asBase,
-      instanceId)
+    val preGen = pinTextPreGen(spark, stateDir, batchId)
     val store = DedupState.loadAt(spark, stateDir, preGen)
     val (kept, _) = DedupState.admit(spark, store, batch, threshold,
       asBase, writer = geoWriterTag(batchId))
     kept.write.mode("overwrite").option("compression", "snappy")
       .parquet(s"$outDir/batch_id=$batchId")
-    writeInstanceSidecar(spark, outDir, batchId, instanceId)
     // reclaim generations superseded by the PREVIOUS base (the
     // pre-admit store view's latest base) — never the range a replay
     // of THIS batch would re-read
@@ -499,18 +495,15 @@ object StreamingEvents {
         // writer-identity guard (the geo sink's discipline): replays are
         // idempotent, out-of-band compacts between runs shift the
         // resumed allocation, races into a crash window fail loudly
-        val instanceId = streamInstanceId(spark, checkpointDir)
-        val preEpoch = pinPreState(spark, stateDir, outDir, batchId, asBase,
+        val preEpoch = pinPreState(spark, stateDir, batchId,
           "embedding-store", "epoch",
-          EmbeddingStore.latestEpoch(spark, stateDir),
-          EmbeddingStore.commitMarker(spark, stateDir, _), instanceId)
+          EmbeddingStore.latestEpoch(spark, stateDir))
         val store = EmbeddingStore.loadAt(spark, stateDir, preEpoch)
         val (kept, _) =
           EmbeddingStore.admit(spark, store, batch, threshold, asBase,
             writer = geoWriterTag(batchId))
         kept.write.mode("overwrite").option("compression", "snappy")
           .parquet(s"$outDir/batch_id=$batchId")
-        writeInstanceSidecar(spark, outDir, batchId, instanceId)
         // reclaim epochs superseded by the PREVIOUS base only — a replay
         // of this batch must still find its source range (see
         // dedupAdmissionStream)
@@ -555,8 +548,7 @@ object StreamingEvents {
     * distinguished from the crashed attempt's own commit by the marker's
     * WRITER identity (the sink commits under `stream:batch=N`, lifecycle
     * ops under `lifecycle`) — exact even when both commit a base, the
-    * case r14's is_base-only comparison could not split; pre-writer
-    * markers fall back to that is_base comparison. Caller seeds
+    * case r14's is_base-only comparison could not split. Caller seeds
     * with [[graft.operators.HnswGeoStore.build]] (epoch 0; empty corpus
     * works — the index, trained on a sample of the expected
     * distribution, IS the routing geometry, and its empty drift
@@ -584,141 +576,54 @@ object StreamingEvents {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         geoAdmitBatch(batch, batchId, stateDir, outDir, threshold,
-          compactEvery, driftFactor,
-          streamInstanceId(batch.sparkSession, checkpointDir))
+          compactEvery, driftFactor)
       }
       .start()
 
-  /** One [[hnswGeoAdmissionStream]] micro-batch — the sink body, exposed
-    * package-private so the replay/divergence contracts are directly
-    * spec-testable (a crashed attempt is just "a mapping on disk without
-    * its epoch commit").
-    */
+  /** The admission sinks' writer identity on every commit marker. */
   private def geoWriterTag(batchId: Long): String = s"stream:batch=$batchId"
 
-  /** Pin the geo store's pre-state epoch for a micro-batch and enforce
-    * the replay contracts — the prologue every geo-admitting sink runs
-    * BEFORE touching the store:
+  /** Pin a store's pre-state id (epoch or generation — `metaCol` names
+    * the mapping column and the marker key, `what` the store kind in
+    * messages) for a micro-batch and enforce the replay contracts — the
+    * prologue every store-writing sink runs BEFORE touching the store:
     *
-    * Replay detection: the batch→epoch mapping is written BEFORE any
-    * epoch write, so a half-finished attempt always left one behind.
-    * ABSENCE must be detected explicitly (no dir, or a dir whose write
-    * never committed a part file — the rename-on-commit protocol leaves
-    * none behind on a crash mid-write): only that is a first attempt.
-    * Any OTHER read failure rethrows — a catch-all here would let a
-    * transient FS error masquerade as a first attempt, re-pin preEpoch
-    * to the POST-batch epoch, and incrementalAdmit would then
-    * left-anti-drop the batch's own ids: silent data loss on the
-    * at-least-once path (ADVICE r14).
+    * Replay detection: the batch→state mapping under
+    * `stateDir/<metaDir>` is written BEFORE any store write, so a
+    * half-finished attempt always left one behind. ABSENCE must be
+    * detected explicitly (no dir, or a dir whose write never committed a
+    * part file — the rename-on-commit protocol leaves none behind on a
+    * crash mid-write): only that is a first attempt. Any OTHER read
+    * failure rethrows — a catch-all here would let a transient FS error
+    * masquerade as a first attempt, re-pin to the POST-batch state, and
+    * the admission would then left-anti-drop the batch's own ids: silent
+    * data loss on the at-least-once path (ADVICE r14).
     *
-    * Divergence guard: epochs committed beyond this batch's own
-    * allocation (preEpoch + 1) mean an out-of-band writer raced the
-    * crash-replay window — overwriting would silently demote it. An
-    * epoch committed AT the allocation is either this batch's own
-    * crashed attempt (overwrite is then idempotent) or an out-of-band
-    * retrain/compact that landed after the crash but before the replay;
-    * the marker's WRITER identity tells them apart exactly — the sink
-    * commits under a per-batch tag, lifecycle ops under "lifecycle" —
-    * so even an out-of-band BASE landing at the allocation of a
-    * replayed batch that is ITSELF a compaction boundary (both markers
-    * is_base=true — the case is_base alone cannot split) fails loudly
-    * instead of being overwritten and demoted. Markers written before
-    * the writer column existed fall back to the is_base comparison —
-    * which catches the compact/retrain races (those commit bases while
-    * the typical replayed batch does not) but is genuinely blind to a
-    * legacy NON-base out-of-band append landing at a non-base replay's
-    * allocation. That decay is now DETERMINISTIC, not hopeful: every
-    * BASE commit runs the marker-upgrade migration
-    * ([[graft.operators.StoreCommits.upgradeLegacy]] — legacy markers
-    * rewritten with `writer = "legacy"`, is_base preserved), so the
-    * blind spot survives only until the store's next compaction; after
-    * it, the formerly-ambiguous scenario trips the writer comparison
-    * loudly (StreamingSpec pins it).
+    * Divergence guard: a state committed at or beyond this batch's own
+    * allocation (pre + 1) is either this batch's own crashed attempt
+    * (overwrite is then idempotent) or an out-of-band writer that raced
+    * the crash-replay window — overwriting would silently discard or
+    * demote it. The marker's WRITER identity tells them apart exactly —
+    * the sink commits under a per-batch tag, lifecycle ops under
+    * "lifecycle" — even when both commit a base, the case is_base alone
+    * cannot split.
+    *
+    * `metaDir`/`tag` separate SINK IDENTITIES on one store: an erasure
+    * stream runs beside an admission stream with its own batch-id space
+    * (stream_meta_erase) and its own writer tag, so the two sinks'
+    * mappings never collide and an interleaved commit from the other
+    * sink reads as exactly what it is — an out-of-band writer — under
+    * the unchanged shift/loud-fail discipline.
     */
-  /** Store-generic core of [[pinGeoPreEpoch]]/[[pinTextPreGen]]: read or
-    * write the batch→state mapping under `stateDir/stream_meta`, then
-    * enforce the divergence and writer-identity guards against the
-    * store's latest committed state id (epoch or generation — `metaCol`
-    * names the mapping column, `what` the store kind in messages).
-    */
-  /** This stream incarnation's identity: the query id Structured
-    * Streaming mints ONCE at checkpoint creation and persists in
-    * `checkpointDir/metadata` — a wiped-and-recreated checkpoint gets a
-    * fresh id, which is exactly the token that tells incarnations
-    * apart. None only when the metadata file is missing (a caller
-    * outside a running query, e.g. a spec driving the batch body
-    * directly).
-    */
-  private[graft] def streamInstanceId(spark: SparkSession,
-                                      checkpointDir: String)
-      : Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$checkpointDir/metadata")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1))
-    }
-  }
-
-  /** Stamp a batch's committed output with the incarnation that wrote
-    * it (ADVICE r16): a `_stream_instance` sidecar beside the part
-    * files, so the legacy-replay corroboration can refuse STALE output
-    * left by a prior incarnation over a reused outDir instead of being
-    * satisfied by it. Written after the parquet commit — a crash
-    * between the two leaves sidecar-less output, which corroborates
-    * only under the documented pre-sidecar fallback. Written via
-    * temp-then-rename (ADVICE r17): a crash mid-write must leave the
-    * sidecar ABSENT (the documented fallback), never truncated — a
-    * truncated id would fail the SAME incarnation's own replay with a
-    * misleading different-incarnation error.
-    */
-  private def writeInstanceSidecar(spark: SparkSession, outDir: String,
-                                   batchId: Long,
-                                   instanceId: Option[String]): Unit =
-    instanceId.foreach { id =>
-      val p = new org.apache.hadoop.fs.Path(
-        s"$outDir/batch_id=$batchId/_stream_instance")
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$outDir/batch_id=$batchId/._stream_instance.tmp")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(tmp, true)
-      try out.write(id.getBytes("UTF-8")) finally out.close()
-      if (fs.exists(p)) fs.delete(p, false)
-      fs.rename(tmp, p)
-    }
-
-  private def readInstanceSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                                  outP: org.apache.hadoop.fs.Path)
-      : Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(outP, "_stream_instance")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
-
   private def pinPreState(spark: SparkSession, stateDir: String,
-                          outDir: String,
-                          batchId: Long, asBase: Boolean, what: String,
+                          batchId: Long, what: String,
                           metaCol: String, latest: => Long,
-                          marker: Long => (Boolean, Option[String]),
-                          instanceId: Option[String] = None,
                           metaDir: String = "stream_meta",
                           tag: Option[String] = None): Long = {
     import spark.implicits._
-    // `metaDir`/`tag` separate SINK IDENTITIES on one store: an erasure
-    // stream runs beside an admission stream with its own batch-id
-    // space (stream_meta_erase) and its own writer tag, so the two
-    // sinks' mappings never collide and an interleaved commit from the
-    // other sink reads as exactly what it is — an out-of-band writer —
-    // under the unchanged shift/loud-fail discipline
     val writerTag = tag.getOrElse(geoWriterTag(batchId))
+    def writerAt(id: Long): String =
+      StoreCommits.read(spark, stateDir, s"$metaCol=$id")._2
     val metaPath = s"$stateDir/$metaDir/batch_id=$batchId"
     val fs = new org.apache.hadoop.fs.Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -732,136 +637,46 @@ object StreamingEvents {
         .select(col(metaCol)).head().getLong(0))
     val pre = recorded.getOrElse {
       val l = latest
-      // first-attempt vs replay-without-mapping disambiguation (the
-      // MIGRATION guard): a crashed post-upgrade attempt always left a
-      // mapping behind, but a checkpoint created BEFORE the mapping
-      // existed can replay its final batch with no mapping while the
-      // batch's own commit already landed — pinning to `latest` would
-      // then pin the POST-batch state, and the admission's left-anti
-      // would drop the batch's own rows (empty-output data loss). Two
-      // signals recover the true pre-state: the marker at `l` carries
-      // THIS batch's writer tag (its own post-upgrade commit), or it is
-      // a LEGACY marker (no writer column) sitting exactly at
-      // batchId + 1 — the old code's deterministic allocation — WITH
-      // corroborating evidence that a prior attempt of this batch
-      // actually ran (its committed output under outDir/batch_id=N;
-      // ADVICE r15: without the corroboration a FRESH stream starting at
-      // batch 0 over a pre-upgrade store whose latest legacy epoch
-      // happens to be 1 — seed build plus one legacy lifecycle append —
-      // would silently pin pre-state 0, admit against a stale view, and
-      // overwrite the legacy commit). A legacy marker at the allocation
-      // WITHOUT the output evidence is ambiguous between those two
-      // worlds, so it fails loudly instead of guessing either way.
-      val pinned = if (l >= 1) {
-        val (_, w) = marker(l)
-        if (w.contains(writerTag)) l - 1
-        else if (w.isEmpty && l == batchId + 1) {
-          // committed output = part files OR the _SUCCESS marker (an
-          // EMPTY admitted batch legitimately writes zero part files).
-          // The output's `_stream_instance` sidecar (ADVICE r16) must
-          // name THIS incarnation when both sides carry one: stale
-          // output left by a wiped-checkpoint-reused-outDir workflow
-          // carries the PRIOR incarnation's id and fails loudly here
-          // instead of corroborating a fresh stream's batch 0.
-          // Sidecar-less output (written before the sidecar existed, or
-          // by an attempt that crashed between the parquet commit and
-          // the stamp) keeps the previous acceptance — that residual is
-          // documented and decays with the fleet; the deterministic
-          // protection either way is the marker-upgrade migration
-          // (stamp the store with one post-upgrade lifecycle commit —
-          // the ambiguous-case error below says so), after which no
-          // legacy heuristic applies.
-          val outP = new org.apache.hadoop.fs.Path(s"$outDir/batch_id=$batchId")
-          val outFs = outP.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          val replayEvidence = outFs.exists(outP) &&
-            outFs.listStatus(outP).exists(st =>
-              st.getPath.getName.startsWith("part-") ||
-                st.getPath.getName == "_SUCCESS")
-          val sidecar =
-            if (replayEvidence) readInstanceSidecar(outFs, outP) else None
-          for (sid <- sidecar; iid <- instanceId)
-            require(sid == iid,
-              s"$what stream batch $batchId: the committed output under " +
-                s"$outDir/batch_id=$batchId was written by stream " +
-                s"incarnation '$sid', not this one ('$iid') — a wiped " +
-                "checkpoint reusing this outDir cannot be corroborated " +
-                "by the previous incarnation's output; point the fresh " +
-                "stream at a fresh outDir, or stamp the store with one " +
-                "post-upgrade lifecycle commit (e.g. compact()) and " +
-                "restart")
-          require(replayEvidence,
-            s"$what stream batch $batchId has no batch→$metaCol " +
-              s"mapping, and $metaCol ${l} is committed by a LEGACY " +
-              "(pre-writer-column) marker at exactly this batch's " +
-              "allocation with no committed output under " +
-              s"$outDir/batch_id=$batchId to corroborate a replay. " +
-              "This is either a fresh stream resuming over a " +
-              "pre-upgrade store (stamp the store with one post-upgrade " +
-              "lifecycle commit — e.g. compact(), which also upgrades " +
-              "legacy markers — then restart) or a pre-mapping " +
-              "checkpoint's replay that crashed before its output " +
-              "write (recover the batch manually); refusing to guess")
-          batchId
-        }
-        else l
-      } else l
+      // no mapping: a first attempt — or a replay whose mapping was
+      // cleared (the guards' "clear stream_meta to re-pin" remedy) after
+      // its own commit landed. The marker at `l` then carries THIS
+      // batch's writer tag, and the pre-state is the one before it:
+      // pinning `l` would pin the POST-batch state, and the admission's
+      // left-anti would drop the batch's own rows
+      val pinned = if (l >= 1 && writerAt(l) == writerTag) l - 1 else l
       Seq(Tuple1(pinned)).toDF(metaCol).coalesce(1)
         .write.mode("overwrite").parquet(metaPath)
       pinned
     }
     val latestNow = latest
-    if (latestNow > pre + 1) {
-      // Epochs exist ABOVE the replayed batch's own allocation. That is
-      // legal in exactly one shape: the batch's own attempt ALREADY
-      // COMMITTED (crash between the commit and the checkpoint) and a
-      // live PEER SINK then advanced the store — the admission×erasure
-      // composition, including a drift retrain base landing inside the
-      // replay window (round-17 verdict #6). The replay then overwrites
-      // its own epoch with content re-derived from the SAME pinned
-      // pre-state — bitwise identical by the replay discipline, so the
-      // epochs above (which consumed this one's content) stay
-      // consistent. Anything else — the allocation committed by another
-      // writer, or not committed at all while later epochs exist — is a
-      // genuine conflict and fails loudly as before.
-      val (_, committedWriter) = marker(pre + 1)
-      require(committedWriter.contains(writerTag),
+    if (latestNow > pre) {
+      // Committed state at or ABOVE the replayed batch's own allocation.
+      // Legal only when the allocation carries this batch's own tag: its
+      // attempt ALREADY COMMITTED (crash between the commit and the
+      // checkpoint), and anything above it is a live PEER SINK that then
+      // advanced the store — the admission×erasure composition,
+      // including a drift retrain base landing inside the replay window
+      // (round-17 verdict #6). The replay then overwrites its own state
+      // with content re-derived from the SAME pinned pre-state — bitwise
+      // identical by the replay discipline, so the states above (which
+      // consumed this one's content) stay consistent. Any other writer
+      // at the allocation is a genuine conflict and fails loudly.
+      val committedWriter = writerAt(pre + 1)
+      require(committedWriter == writerTag,
         s"$what stream replay of batch $batchId pinned pre-state " +
-          s"$metaCol $pre, but $metaCol $latestNow is already " +
-          s"committed and $metaCol ${pre + 1} carries writer " +
-          s"'${committedWriter.getOrElse("<legacy>")}', not this " +
-          s"batch's '$writerTag' — an out-of-band retrain/compact " +
-          "landed between the crash and this replay; re-run the " +
-          "out-of-band op after the stream catches up, or clear " +
-          "stream_meta to re-pin")
-    }
-    if (latestNow == pre + 1) {
-      val (committedBase, committedWriter) = marker(latestNow)
-      val ownAttempt = committedWriter match {
-        case Some(w) => w == writerTag
-        case None => committedBase == asBase
-      }
-      require(ownAttempt,
-        s"$what stream replay of batch $batchId would overwrite " +
-          s"$metaCol $latestNow, which is committed by " +
-          s"'${committedWriter.getOrElse(s"is_base=$committedBase")}' " +
-          s"while this replay commits as '$writerTag' (is_base=$asBase) " +
-          "— an out-of-band retrain/compact landed at the replay's own " +
-          "allocation between the crash and this replay; re-run the " +
-          "out-of-band op after the stream catches up, or clear " +
-          "stream_meta to re-pin")
+          s"$metaCol $pre, but $metaCol ${pre + 1} (latest $latestNow) " +
+          s"is committed by '$committedWriter', not this batch's " +
+          s"'$writerTag' — an out-of-band retrain/compact landed between " +
+          "the crash and this replay; re-run the out-of-band op after " +
+          "the stream catches up, or clear stream_meta to re-pin")
     }
     pre
   }
 
   private def pinGeoPreEpoch(spark: SparkSession, stateDir: String,
-                             outDir: String,
-                             batchId: Long, asBase: Boolean,
-                             instanceId: Option[String] = None): Long =
-    pinPreState(spark, stateDir, outDir, batchId, asBase, "geo-store",
-      "epoch",
-      HnswGeoStore.latestEpoch(spark, stateDir),
-      HnswGeoStore.commitMarker(spark, stateDir, _), instanceId)
+                             batchId: Long): Long =
+    pinPreState(spark, stateDir, batchId, "geo-store", "epoch",
+      HnswGeoStore.latestEpoch(spark, stateDir))
 
   /** [[pinGeoPreEpoch]]'s twin for the generational TEXT dedup store —
     * what lifts [[dedupAdmissionStream]]'s historical restriction that
@@ -872,14 +687,9 @@ object StreamingEvents {
     * carry the same (is_base, writer) marker as the geo store's).
     */
   private def pinTextPreGen(spark: SparkSession, stateDir: String,
-                            outDir: String,
-                            batchId: Long, asBase: Boolean,
-                            instanceId: Option[String] = None): Long =
-    pinPreState(spark, stateDir, outDir, batchId, asBase, "dedup-store",
-      "gen",
-      graft.operators.DedupState.latestGen(spark, stateDir),
-      graft.operators.DedupState.commitMarker(spark, stateDir, _),
-      instanceId)
+                            batchId: Long): Long =
+    pinPreState(spark, stateDir, batchId, "dedup-store", "gen",
+      graft.operators.DedupState.latestGen(spark, stateDir))
 
   /** Drop mappings of batches older than the current one (checkpointed
     * offsets only ever re-run the CURRENT batch, so they can never
@@ -912,17 +722,20 @@ object StreamingEvents {
     pruneStreamMeta(spark, stateDir, batchId)
   }
 
+  /** One [[hnswGeoAdmissionStream]] micro-batch — the sink body, exposed
+    * package-private so the replay/divergence contracts are directly
+    * spec-testable (a crashed attempt is just "a mapping on disk without
+    * its epoch commit").
+    */
   private[graft] def geoAdmitBatch(batch: DataFrame, batchId: Long,
                                    stateDir: String, outDir: String,
                                    threshold: Double,
                                    compactEvery: Int,
-                                   driftFactor: Double = 0.0,
-                                   instanceId: Option[String] = None)
+                                   driftFactor: Double = 0.0)
       : Unit = withStoreLock(stateDir) {
     val spark = batch.sparkSession
     val asBase = compactEvery > 0 && (batchId + 1) % compactEvery == 0
-    val preEpoch = pinGeoPreEpoch(spark, stateDir, outDir, batchId, asBase,
-      instanceId)
+    val preEpoch = pinGeoPreEpoch(spark, stateDir, batchId)
     val store = HnswGeoStore.loadAt(spark, stateDir, preEpoch)
     val kept =
       if (asBase && driftFactor > 0.0) {
@@ -948,7 +761,6 @@ object StreamingEvents {
           writer = geoWriterTag(batchId))._1
     kept.write.mode("overwrite").option("compression", "snappy")
       .parquet(s"$outDir/batch_id=$batchId")
-    writeInstanceSidecar(spark, outDir, batchId, instanceId)
     if (asBase) reclaimGeoAfterBase(spark, store, stateDir, batchId)
     graft.CacheRegistry.releaseAll()
   }
@@ -1005,8 +817,7 @@ object StreamingEvents {
     * queues are continuous in production, so erasure gets one too).
     * Each micro-batch of `vec_id` rows commits ONE tombstone epoch
     * (erasure-sized — never a corpus rewrite) and writes the erased ids
-    * to `outDir/batch_id=N` as the erasure LEDGER (audit trail + the
-    * same replay-corroboration evidence the admission sinks keep).
+    * to `outDir/batch_id=N` as the erasure LEDGER (audit trail).
     *
     * Replay discipline: the pre-state epoch is pinned through a
     * mapping in its OWN namespace (`stream_meta_erase`) under its own
@@ -1031,8 +842,7 @@ object StreamingEvents {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        geoEraseBatch(batch, batchId, stateDir, outDir,
-          streamInstanceId(batch.sparkSession, checkpointDir))
+        geoEraseBatch(batch, batchId, stateDir, outDir)
       }
       .start()
 
@@ -1040,14 +850,11 @@ object StreamingEvents {
     * the crash/replay/interleave contracts are directly spec-testable.
     */
   private[graft] def geoEraseBatch(batch: DataFrame, batchId: Long,
-                                   stateDir: String, outDir: String,
-                                   instanceId: Option[String] = None)
+                                   stateDir: String, outDir: String)
       : Unit = withStoreLock(stateDir) {
     val spark = batch.sparkSession
-    val preEpoch = pinPreState(spark, stateDir, outDir, batchId,
-      asBase = false, "geo-store", "epoch",
-      HnswGeoStore.latestEpoch(spark, stateDir),
-      HnswGeoStore.commitMarker(spark, stateDir, _), instanceId,
+    val preEpoch = pinPreState(spark, stateDir, batchId, "geo-store",
+      "epoch", HnswGeoStore.latestEpoch(spark, stateDir),
       metaDir = "stream_meta_erase",
       tag = Some(eraseWriterTag(batchId)))
     val store = HnswGeoStore.loadAt(spark, stateDir, preEpoch)
@@ -1056,7 +863,6 @@ object StreamingEvents {
       writer = eraseWriterTag(batchId))
     ids.write.mode("overwrite").option("compression", "snappy")
       .parquet(s"$outDir/batch_id=$batchId")
-    writeInstanceSidecar(spark, outDir, batchId, instanceId)
     // checkpointed offsets only ever re-run the current batch, so older
     // erasure mappings can never replay again
     pruneStreamMeta(spark, stateDir, batchId, "stream_meta_erase")
@@ -1079,21 +885,17 @@ object StreamingEvents {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupEraseBatch(batch, batchId, stateDir, outDir,
-          streamInstanceId(batch.sparkSession, checkpointDir))
+        dedupEraseBatch(batch, batchId, stateDir, outDir)
       }
       .start()
 
   /** One [[dedupErasureStream]] micro-batch — the sink body. */
   private[graft] def dedupEraseBatch(batch: DataFrame, batchId: Long,
-                                     stateDir: String, outDir: String,
-                                     instanceId: Option[String] = None)
+                                     stateDir: String, outDir: String)
       : Unit = withStoreLock(stateDir) {
     val spark = batch.sparkSession
-    val preGen = pinPreState(spark, stateDir, outDir, batchId,
-      asBase = false, "dedup-store", "gen",
-      DedupState.latestGen(spark, stateDir),
-      DedupState.commitMarker(spark, stateDir, _), instanceId,
+    val preGen = pinPreState(spark, stateDir, batchId, "dedup-store",
+      "gen", DedupState.latestGen(spark, stateDir),
       metaDir = "stream_meta_erase",
       tag = Some(eraseWriterTag(batchId)))
     val store = DedupState.loadAt(spark, stateDir, preGen)
@@ -1102,7 +904,6 @@ object StreamingEvents {
       writer = eraseWriterTag(batchId))
     ids.write.mode("overwrite").option("compression", "snappy")
       .parquet(s"$outDir/batch_id=$batchId")
-    writeInstanceSidecar(spark, outDir, batchId, instanceId)
     pruneStreamMeta(spark, stateDir, batchId, "stream_meta_erase")
     graft.CacheRegistry.releaseAll()
   }
@@ -1163,8 +964,7 @@ object StreamingEvents {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         curationAdmitBatch(batch, batchId, textStateDir, geoStateDir,
           outDir, config, semanticThreshold, nProbe, efSearch,
-          compactEvery, driftFactor,
-          streamInstanceId(batch.sparkSession, checkpointDir))
+          compactEvery, driftFactor)
       }
       .start()
 
@@ -1177,8 +977,7 @@ object StreamingEvents {
       geoStateDir: String, outDir: String,
       config: graft.pipelines.CorpusPipeline.Config,
       semanticThreshold: Double, nProbe: Int, efSearch: Int,
-      compactEvery: Int, driftFactor: Double = 0.0,
-      instanceId: Option[String] = None): Unit =
+      compactEvery: Int, driftFactor: Double = 0.0): Unit =
     // both stores locked, FIXED order (text, then geo): single-store
     // sinks hold one lock, so no cycle is possible
     withStoreLock(textStateDir) { withStoreLock(geoStateDir) {
@@ -1191,10 +990,8 @@ object StreamingEvents {
     // pre-generation, geo by the recorded pre-epoch — so out-of-band
     // lifecycle ops on EITHER store between runs shift the resumed
     // stream's allocation instead of being overwritten
-    val preGen = pinTextPreGen(spark, textStateDir, outDir, batchId,
-      asBase, instanceId)
-    val preEpoch = pinGeoPreEpoch(spark, geoStateDir, outDir, batchId,
-      asBase, instanceId)
+    val preGen = pinTextPreGen(spark, textStateDir, batchId)
+    val preEpoch = pinGeoPreEpoch(spark, geoStateDir, batchId)
     val text = DedupState.loadAt(spark, textStateDir, preGen)
     val geo = HnswGeoStore.loadAt(spark, geoStateDir, preEpoch)
     val docs = batch.select(col("doc_id"), col("text"))
@@ -1213,7 +1010,6 @@ object StreamingEvents {
       writer = geoWriterTag(batchId), driftFactor = driftFactor)
     kept.write.mode("overwrite").option("compression", "snappy")
       .parquet(s"$outDir/batch_id=$batchId")
-    writeInstanceSidecar(spark, outDir, batchId, instanceId)
     if (asBase) {
       DedupState.vacuum(spark, text)
       pruneStreamMeta(spark, textStateDir, batchId)

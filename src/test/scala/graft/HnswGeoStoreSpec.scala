@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Hnsw, HnswGeoStore, IVF, Similarity}
+import graft.operators.{Hnsw, HnswGeoStore, IVF, Similarity, StoreCommits}
 
 /** Segmented geometry-routed HNSW store: epoch/commit round-trips,
   * compaction-by-warm-insertion's bitwise theorem, the routed admission
@@ -610,13 +610,30 @@ class HnswGeoStoreSpec extends SparkSpec {
     val all = corpus(120)
     val index = IVF.train(all.toDF("vec_id", "embedding"), k = 4, iters = 3)
     val dir = tmp("hnsw-geo-far")
-    val s0 = HnswGeoStore.build(spark,
+    HnswGeoStore.build(spark,
       all.filter(_._1 <= 100L).toDF("vec_id", "embedding"), dir, index)
     val farEpoch = 40000L // > Int.MaxValue / CellStride ≈ 32767
-    // a compaction whose allocation lands past the int ceiling stands in
-    // for 40k consecutive micro-batches: its base rewrites every shard
-    // id into the far epoch's stride range
-    val far = HnswGeoStore.compact(spark, s0.copy(epoch = farEpoch - 1L))
+    // the state 40k micro-batches and their compactions leave behind — a
+    // base at epoch farEpoch − 1 — written in place from epoch 0: the
+    // segment re-strided into its epoch's range, the index, drift and
+    // stats relations copied, the base marker committed last
+    val prevBase = farEpoch - 1L
+    spark.read.parquet(s"$dir/segments/epoch=0")
+      .withColumn("shard",
+        col("shard") + lit(prevBase * HnswGeoStore.CellStride))
+      .write.parquet(s"$dir/segments/epoch=$prevBase")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    for (rel <- Seq("index", "drift", "stats"))
+      org.apache.hadoop.fs.FileUtil.copy(fs,
+        new org.apache.hadoop.fs.Path(s"$dir/$rel/epoch=0"), fs,
+        new org.apache.hadoop.fs.Path(s"$dir/$rel/epoch=$prevBase"),
+        false, conf)
+    StoreCommits.writeMarker(spark, dir, s"epoch=$prevBase", isBase = true,
+      writer = "lifecycle")
+    // the next compaction allocates past the int ceiling: its base
+    // rewrites every shard id into the far epoch's stride range
+    val far = HnswGeoStore.compact(spark, HnswGeoStore.load(spark, dir))
     assert(far.epoch === farEpoch && far.baseEpoch === farEpoch)
     // the next delta allocates past it as usual
     val st0 = HnswGeoStore.append(spark, far,

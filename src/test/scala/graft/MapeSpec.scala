@@ -123,6 +123,63 @@ class MapeSpec extends SparkSpec {
     assert(daily.columns.count(_.endsWith("_mape")) === 4)
   }
 
+  test("all three default families plan and run in seconds, portfolio " +
+       "and zonal, with hand-computed WAPE cells") {
+    // family 1 (forecast, backcast, settlement) per (date, hour, zone);
+    // gross = family 1 doubled (same ratios), net tracks settlement
+    // except a backcast miss. 01-02 has settlement 0 (÷0 → dropped by
+    // F1); 01-03 has forecast = backcast = 0 (dropped by F3).
+    val fam1 = Seq(
+      ("2024-01-01", 0, "A", 10.0, 12.0, 8.0, 8.0, 8.0, 8.0),
+      ("2024-01-01", 1, "A", 20.0, 18.0, 16.0, 16.0, 17.0, 16.0),
+      ("2024-01-01", 0, "B", 5.0, 6.0, 4.0, 4.0, 4.0, 4.0),
+      ("2024-01-01", 1, "B", 7.0, 9.0, 10.0, 10.0, 11.0, 10.0),
+      ("2024-01-02", 0, "A", 1.0, 1.0, 0.0, 1.0, 1.0, 1.0),
+      ("2024-01-02", 0, "B", 1.0, 1.0, 0.0, 1.0, 1.0, 1.0),
+      ("2024-01-03", 0, "A", 0.0, 0.0, 5.0, 5.0, 5.0, 5.0),
+      ("2024-01-03", 0, "B", 0.0, 0.0, 5.0, 5.0, 5.0, 5.0))
+    val raw = fam1.map { case (d, h, z, f, b, s, fn, bn, sn) =>
+        (d, h, z, f, b, s, 2 * f, 2 * b, 2 * s, fn, bn, sn) }
+      .toDF("proxy_date", "hour", "zone",
+        "forecast", "backcast", "settlement",
+        "forecast_gross", "backcast_gross", "usage_final_gross",
+        "forecast_net", "backcast_net", "usage_final_net")
+    val t0 = System.nanoTime()
+    val port = Mape.dailyMapeAggregation(Mape.hourlyAggregation(raw))
+      .collect()
+    val zonal = Mape.dailyMapeAggregation(
+      Mape.hourlyAggregation(raw, zone = true), zone = true).collect()
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 60.0, f"three-family MAPE took $secs%.1f s")
+    // portfolio: hourly sums h0 f=15 b=18 s=12, h1 f=27 b=27 s=26 →
+    // Σ|f−s| = 4, Σ|b−s| = 7, Σ|s| = 38; net: Σ|f−s| = 0, Σ|b−s| = 2
+    assert(port.length === 1)
+    val p = port.head
+    assert(p.schema.fieldNames.slice(1, 7).toSeq === Seq(
+      "forecast_mape", "backcast_mape", "forecast_gross_mape",
+      "backcast_gross_mape", "forecast_net_mape", "backcast_net_mape"))
+    assert(p.getAs[java.sql.Date]("proxy_date").toString === "2024-01-01")
+    assert(p.getAs[Double]("forecast_mape") === 4.0 / 38.0)
+    assert(p.getAs[Double]("backcast_mape") === 7.0 / 38.0)
+    assert(p.getAs[Double]("forecast_gross_mape") === 4.0 / 38.0)
+    assert(p.getAs[Double]("backcast_gross_mape") === 7.0 / 38.0)
+    assert(p.getAs[Double]("forecast_net_mape") === 0.0)
+    assert(p.getAs[Double]("backcast_net_mape") === 2.0 / 38.0)
+    // zonal: A Σ|f−s| = 6, Σ|b−s| = 6, Σ|s| = 24;
+    //        B Σ|f−s| = 4, Σ|b−s| = 3, Σ|s| = 14
+    assert(zonal.length === 1)
+    val z = zonal.head
+    assert(z.getAs[Double]("forecast_mape_A") === 6.0 / 24.0)
+    assert(z.getAs[Double]("backcast_mape_A") === 6.0 / 24.0)
+    assert(z.getAs[Double]("forecast_mape_B") === 4.0 / 14.0)
+    assert(z.getAs[Double]("backcast_mape_B") === 3.0 / 14.0)
+    assert(z.getAs[Double]("forecast_gross_mape_B") === 4.0 / 14.0)
+    assert(z.getAs[Double]("backcast_gross_mape_A") === 6.0 / 24.0)
+    assert(z.getAs[Double]("forecast_net_mape_A") === 0.0)
+    assert(z.getAs[Double]("backcast_net_mape_A") === 1.0 / 24.0)
+    assert(z.getAs[Double]("backcast_net_mape_B") === 1.0 / 14.0)
+  }
+
   test("MetricFamily derived-name contract matches the reference") {
     val fam = MetricFamily("forecast", "backcast", "settlement")
     assert(fam.all === Seq("forecast", "backcast", "settlement",

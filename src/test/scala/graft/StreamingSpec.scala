@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.operators.StoreCommits
 import graft.streaming.StreamingEvents
 
 /** Streaming surface contracts (SURVEY.md §2.8/§7.6): replaying a bounded
@@ -899,8 +900,8 @@ class StreamingSpec extends SparkSpec {
         s"(gen=${fin.gen})")
     // the out-of-band base's marker survived undemoted, and all three
     // docs' fingerprints are live
-    val (isBase, writer) = DedupState.commitMarker(spark, stateDir, 2L)
-    assert(isBase && writer === Some("lifecycle"))
+    val (isBase, writer) = StoreCommits.read(spark, stateDir, "gen=2")
+    assert(isBase && writer === "lifecycle")
     assert(fin.fingerprints.count() === 3L)
     CacheRegistry.releaseAll()
   }
@@ -930,85 +931,46 @@ class StreamingSpec extends SparkSpec {
         threshold = 0.8, compactEvery = 0)
     }
     assert(ex.getMessage.contains("out-of-band"))
-    val (isBase, writer) = DedupState.commitMarker(spark, stateDir, 1L)
-    assert(isBase && writer === Some("lifecycle"))
+    val (isBase, writer) = StoreCommits.read(spark, stateDir, "gen=1")
+    assert(isBase && writer === "lifecycle")
     CacheRegistry.releaseAll()
   }
 
-  test("geoAdmitBatch migration: a PRE-mapping checkpoint replaying its " +
-       "final committed batch (legacy markers, no stream_meta) pins the " +
-       "old code's batchId allocation — not the post-batch state that " +
-       "would empty the output") {
+  test("geoAdmitBatch re-pin: a committed batch replayed after its " +
+       "stream_meta mapping was cleared pins the pre-state before its own " +
+       "commit (writer tag) — not the post-batch state that would empty " +
+       "the output") {
     import graft.operators.{HnswGeoStore, IVF}
-    val stateDir = tmpDir("graft-geomigrate-state")
-    val outDir = s"${tmpDir("graft-geomigrate-out")}/rows"
+    val stateDir = tmpDir("graft-georepin-state")
+    val outDir = s"${tmpDir("graft-georepin-out")}/rows"
     val seed = Seq(
       1L -> Array(1f, 0f, 0f, 0f),
       2L -> Array(0f, 1f, 0f, 0f)).toDF("vec_id", "embedding")
     val index = IVF.train(seed, k = 2, iters = 2)
-    val base = HnswGeoStore.build(spark, seed, stateDir, index)
-    // the pre-upgrade crashed-after-commit state: batch 0 fully
-    // committed epoch 1 under the OLD code (no mapping, no writer
-    // column in any marker)
+    HnswGeoStore.build(spark, seed, stateDir, index)
+    // batch 0 commits epoch 1 normally...
     val batch = Seq(11L -> Array(0f, 0f, 1f, 0f)).toDF("vec_id", "embedding")
-    HnswGeoStore.admit(spark, base, batch, threshold = 0.9)
-    // the old attempt ran to its output write before dying — the
-    // corroborating evidence the heuristic requires (ADVICE r15)
-    batch.write.mode("overwrite").parquet(s"$outDir/batch_id=0")
-    for (e <- 0L to 1L) {
-      val legacy = spark.read.parquet(s"$stateDir/commits/epoch=$e")
-        .select("is_base").collect().map(_.getBoolean(0)).toSeq
-      legacy.map(Tuple1(_)).toDF("is_base").coalesce(1)
-        .write.mode("overwrite").parquet(s"$stateDir/commits/epoch=$e")
-    }
-    // new-code replay of batch 0: pinning to latest (epoch 1) would see
-    // id 11 already stored, admit nothing, and overwrite the output
-    // with an empty partition — the migration guard must pin epoch 0
+    StreamingEvents.geoAdmitBatch(batch, 0L, stateDir, outDir,
+      threshold = 0.9, compactEvery = 0)
+    // ...then its mapping is cleared (the guards' "clear stream_meta to
+    // re-pin" remedy) and the checkpoint replays it
+    val meta = new org.apache.hadoop.fs.Path(s"$stateDir/stream_meta/batch_id=0")
+    meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(meta, true)
+    // pinning to latest (epoch 1) would see id 11 already stored, admit
+    // nothing, and overwrite the output with an empty partition — the
+    // marker at epoch 1 carries this batch's tag, so epoch 0 is pinned
     StreamingEvents.geoAdmitBatch(batch, 0L, stateDir, outDir,
       threshold = 0.9, compactEvery = 0)
     assert(spark.read.parquet(s"$outDir/batch_id=0")
       .select("vec_id").as[Long].collect().toSet === Set(11L),
       "the replayed batch's output must contain its own admitted rows")
+    assert(spark.read.parquet(s"$stateDir/stream_meta/batch_id=0")
+      .select("epoch").as[Long].head() === 0L)
     val fin = HnswGeoStore.load(spark, stateDir)
     assert(fin.epoch === 1L)
     assert(fin.segments.select("vec_id").as[Long].collect().toSet ===
       Set(1L, 2L, 11L))
-    CacheRegistry.releaseAll()
-  }
-
-  test("geoAdmitBatch migration guard: a legacy marker at the batch's " +
-       "allocation WITHOUT committed output is AMBIGUOUS and fails " +
-       "loudly — a fresh stream over a pre-upgrade store must not pin " +
-       "a stale view and overwrite the legacy epoch (ADVICE r15)") {
-    import graft.operators.{HnswGeoStore, IVF}
-    val stateDir = tmpDir("graft-geoambig-state")
-    val outDir = s"${tmpDir("graft-geoambig-out")}/rows"
-    val seed = Seq(
-      1L -> Array(1f, 0f, 0f, 0f),
-      2L -> Array(0f, 1f, 0f, 0f)).toDF("vec_id", "embedding")
-    val index = IVF.train(seed, k = 2, iters = 2)
-    val base = HnswGeoStore.build(spark, seed, stateDir, index)
-    // a pre-upgrade store whose latest epoch happens to be 1: seed build
-    // plus ONE legacy lifecycle append — exactly the shape a fresh
-    // stream's batch 0 would previously have misread as its own replay
-    HnswGeoStore.append(spark, base,
-      Seq(5L -> Array(0f, 0f, 0f, 1f)).toDF("vec_id", "embedding"))
-    for (e <- 0L to 1L) {
-      val legacy = spark.read.parquet(s"$stateDir/commits/epoch=$e")
-        .select("is_base").collect().map(_.getBoolean(0)).toSeq
-      legacy.map(Tuple1(_)).toDF("is_base").coalesce(1)
-        .write.mode("overwrite").parquet(s"$stateDir/commits/epoch=$e")
-    }
-    val batch = Seq(11L -> Array(0f, 0f, 1f, 0f)).toDF("vec_id", "embedding")
-    val e = intercept[IllegalArgumentException] {
-      StreamingEvents.geoAdmitBatch(batch, 0L, stateDir, outDir,
-        threshold = 0.9, compactEvery = 0)
-    }
-    assert(e.getMessage.contains("LEGACY") &&
-      e.getMessage.contains("refusing to guess"), e.getMessage)
-    // the legacy epoch survived untouched
-    assert(HnswGeoStore.load(spark, stateDir).segments
-      .select("vec_id").as[Long].collect().toSet === Set(1L, 2L, 5L))
     CacheRegistry.releaseAll()
   }
 
@@ -1107,126 +1069,6 @@ class StreamingSpec extends SparkSpec {
       threshold = 0.5).select("doc_id").as[Long].collect().toSet
     assert(again === Set(30L),
       "erased text re-admits; surviving text still dedups")
-    CacheRegistry.releaseAll()
-  }
-
-  test("stream-instance corroboration (ADVICE r16): stale output " +
-       "stamped by a PRIOR incarnation cannot corroborate a fresh " +
-       "stream's batch 0, while the SAME incarnation's own crashed " +
-       "output still does") {
-    import graft.operators.{HnswGeoStore, IVF}
-    val stateDir = tmpDir("graft-geoinst-state")
-    val outDir = s"${tmpDir("graft-geoinst-out")}/rows"
-    val seed = Seq(
-      1L -> Array(1f, 0f, 0f, 0f),
-      2L -> Array(0f, 1f, 0f, 0f)).toDF("vec_id", "embedding")
-    val index = IVF.train(seed, k = 2, iters = 2)
-    val base = HnswGeoStore.build(spark, seed, stateDir, index)
-    // the pre-mapping crashed-after-commit shape (first migration test):
-    // batch 0 committed epoch 1 under legacy markers, output written —
-    // but the output is STAMPED by an incarnation
-    val batch = Seq(11L -> Array(0f, 0f, 1f, 0f)).toDF("vec_id", "embedding")
-    HnswGeoStore.admit(spark, base, batch, threshold = 0.9)
-    batch.write.mode("overwrite").parquet(s"$outDir/batch_id=0")
-    val sidecar = new org.apache.hadoop.fs.Path(
-      s"$outDir/batch_id=0/_stream_instance")
-    val fs = sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(sidecar, true)
-    out.write("incarnation-old".getBytes("UTF-8")); out.close()
-    for (e <- 0L to 1L) {
-      val legacy = spark.read.parquet(s"$stateDir/commits/epoch=$e")
-        .select("is_base").collect().map(_.getBoolean(0)).toSeq
-      legacy.map(Tuple1(_)).toDF("is_base").coalesce(1)
-        .write.mode("overwrite").parquet(s"$stateDir/commits/epoch=$e")
-    }
-    // a DIFFERENT incarnation (wiped checkpoint, reused stateDir+outDir)
-    // must refuse the stale corroboration loudly
-    val err = intercept[IllegalArgumentException] {
-      StreamingEvents.geoAdmitBatch(batch, 0L, stateDir, outDir,
-        threshold = 0.9, compactEvery = 0,
-        instanceId = Some("incarnation-new"))
-    }
-    assert(err.getMessage.contains("incarnation-old") &&
-      err.getMessage.contains("incarnation-new"), err.getMessage)
-    // the legacy epoch survived untouched and no mapping was pinned
-    assert(HnswGeoStore.load(spark, stateDir).segments
-      .select("vec_id").as[Long].collect().toSet === Set(1L, 2L, 11L))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$stateDir/stream_meta/batch_id=0")),
-      "a refused corroboration must not pin a mapping")
-    // the SAME incarnation replaying its own crash is corroborated and
-    // pins the old allocation exactly as before
-    StreamingEvents.geoAdmitBatch(batch, 0L, stateDir, outDir,
-      threshold = 0.9, compactEvery = 0,
-      instanceId = Some("incarnation-old"))
-    assert(spark.read.parquet(s"$outDir/batch_id=0")
-      .select("vec_id").as[Long].collect().toSet === Set(11L))
-    // and the replay re-stamped its output with its own identity
-    val in = fs.open(sidecar)
-    val stamped =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    assert(stamped === "incarnation-old")
-    CacheRegistry.releaseAll()
-  }
-
-  test("legacy-marker upgrade migration: a base commit rewrites " +
-       "pre-writer markers with writer='legacy', and the formerly-blind " +
-       "scenario (legacy non-base marker at a non-base replay's " +
-       "allocation) then fails loudly on writer identity") {
-    import graft.operators.{HnswGeoStore, IVF, StoreCommits}
-    val stateDir = tmpDir("graft-geomigr2-state")
-    val outDir = s"${tmpDir("graft-geomigr2-out")}/rows"
-    val seed = Seq(
-      1L -> Array(1f, 0f, 0f, 0f),
-      2L -> Array(0f, 1f, 0f, 0f)).toDF("vec_id", "embedding")
-    val index = IVF.train(seed, k = 2, iters = 2)
-    val base = HnswGeoStore.build(spark, seed, stateDir, index)
-    val grown = HnswGeoStore.append(spark, base,
-      Seq(5L -> Array(0f, 0f, 0f, 1f)).toDF("vec_id", "embedding"))
-    // strip epoch 1's writer — the out-of-band legacy non-base append
-    val legacy = spark.read.parquet(s"$stateDir/commits/epoch=1")
-      .select("is_base").collect().map(_.getBoolean(0)).toSeq
-    legacy.map(Tuple1(_)).toDF("is_base").coalesce(1)
-      .write.mode("overwrite").parquet(s"$stateDir/commits/epoch=1")
-    assert(HnswGeoStore.commitMarker(spark, stateDir, 1L)._2.isEmpty)
-    // the next base commit migrates it (compact runs upgradeLegacy);
-    // exercised here directly so the epoch numbering stays put and the
-    // allocation-slot comparison below is the one under test
-    StoreCommits.upgradeLegacy(spark, stateDir, "epoch")
-    assert(HnswGeoStore.commitMarker(spark, stateDir, 1L) ===
-      ((false, Some("legacy"))))
-    // the blind spot, post-migration: a crashed batch 0 pinned pre-epoch
-    // 0 (mapping on disk), the upgraded NON-base marker sits at its
-    // allocation, the replay is non-base — is_base alone cannot split
-    // this, the writer now does
-    Seq(Tuple1(0L)).toDF("epoch").coalesce(1).write.mode("overwrite")
-      .parquet(s"$stateDir/stream_meta/batch_id=0")
-    val batch = Seq(11L -> Array(0f, 0f, 1f, 0f)).toDF("vec_id", "embedding")
-    val e = intercept[IllegalArgumentException] {
-      StreamingEvents.geoAdmitBatch(batch, 0L, stateDir, outDir,
-        threshold = 0.9, compactEvery = 0)
-    }
-    assert(e.getMessage.contains("legacy") &&
-      e.getMessage.contains("out-of-band"), e.getMessage)
-    // and compact() itself runs the migration: rebuild the legacy shape
-    // at a second path and verify the base commit upgrades every marker
-    val dir2 = tmpDir("graft-geomigr3-state")
-    val b2 = HnswGeoStore.build(spark, seed, dir2, index)
-    val g2 = HnswGeoStore.append(spark, b2,
-      Seq(5L -> Array(0f, 0f, 0f, 1f)).toDF("vec_id", "embedding"))
-    for (e2 <- 0L to 1L) {
-      val lg = spark.read.parquet(s"$dir2/commits/epoch=$e2")
-        .select("is_base").collect().map(_.getBoolean(0)).toSeq
-      lg.map(Tuple1(_)).toDF("is_base").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir2/commits/epoch=$e2")
-    }
-    HnswGeoStore.compact(spark, g2)
-    for (e2 <- 0L to 1L)
-      assert(HnswGeoStore.commitMarker(spark, dir2, e2)._2 ===
-        Some("legacy"), s"epoch $e2 must be upgraded at the base commit")
-    assert(HnswGeoStore.commitMarker(spark, dir2, 2L)._2 ===
-      Some("lifecycle"))
     CacheRegistry.releaseAll()
   }
 
@@ -1514,39 +1356,8 @@ class StreamingSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("out-of-band"))
     // the out-of-band base survived undemoted, its writer intact
-    val (isBase, writer) = HnswGeoStore.commitMarker(spark, stateDir, 1L)
-    assert(isBase && writer === Some("lifecycle"))
-    CacheRegistry.releaseAll()
-  }
-
-  test("geoAdmitBatch replay: a pre-writer-column marker falls back to " +
-       "the is_base comparison (legacy stores keep replaying)") {
-    import graft.operators.{HnswGeoStore, IVF}
-    val stateDir = tmpDir("graft-geolegacy-state")
-    val outDir = s"${tmpDir("graft-geolegacy-out")}/rows"
-    val seed = Seq(
-      1L -> Array(1f, 0f, 0f, 0f),
-      2L -> Array(0f, 1f, 0f, 0f)).toDF("vec_id", "embedding")
-    val index = IVF.train(seed, k = 2, iters = 2)
-    HnswGeoStore.build(spark, seed, stateDir, index)
-    val batch = Seq(11L -> Array(0f, 0f, 1f, 0f)).toDF("vec_id", "embedding")
-    StreamingEvents.geoAdmitBatch(batch, 0L, stateDir, outDir,
-      threshold = 0.9, compactEvery = 0)
-    // strip the writer column, simulating a marker committed before the
-    // column existed
-    val legacy = spark.read.parquet(s"$stateDir/commits/epoch=1")
-      .select("is_base").collect().map(_.getBoolean(0)).toSeq
-    legacy.map(Tuple1(_)).toDF("is_base").coalesce(1)
-      .write.mode("overwrite").parquet(s"$stateDir/commits/epoch=1")
-    assert(HnswGeoStore.commitMarker(spark, stateDir, 1L)._2.isEmpty)
-    // replay: same batch, non-base, legacy marker non-base → overwrite
-    // proceeds idempotently
-    StreamingEvents.geoAdmitBatch(batch, 0L, stateDir, outDir,
-      threshold = 0.9, compactEvery = 0)
-    val fin = HnswGeoStore.load(spark, stateDir)
-    assert(fin.epoch === 1L)
-    assert(fin.segments.select("vec_id").as[Long].collect().toSet ===
-      Set(1L, 2L, 11L))
+    val (isBase, writer) = StoreCommits.read(spark, stateDir, "epoch=1")
+    assert(isBase && writer === "lifecycle")
     CacheRegistry.releaseAll()
   }
 
@@ -1601,8 +1412,8 @@ class StreamingSpec extends SparkSpec {
     val geo = HnswGeoStore.load(spark, gDir)
     assert(geo.epoch === 3L && geo.baseEpoch === 2L,
       "the retrain must land AS batch 1's own base epoch")
-    assert(HnswGeoStore.commitMarker(spark, gDir, 2L) ===
-      ((true, Some("stream:batch=1"))))
+    assert(StoreCommits.read(spark, gDir, "epoch=2") ===
+      ((true, "stream:batch=1")))
     assert(geo.index.centroids.map(_.toSeq).toSet !==
       index.centroids.map(_.toSeq).toSet,
       "the curated corpus's geometry must have been retrained")
@@ -1611,8 +1422,8 @@ class StreamingSpec extends SparkSpec {
     // the text store compacted normally at the same boundary
     val text = DedupState.load(spark, tDir)
     assert(text.gen === 3L)
-    assert(DedupState.commitMarker(spark, tDir, 2L) ===
-      ((true, Some("stream:batch=1"))))
+    assert(StoreCommits.read(spark, tDir, "gen=2") ===
+      ((true, "stream:batch=1")))
     // every admitted doc's output landed
     assert((0L to 2L).flatMap(i =>
       spark.read.parquet(s"$outDir/batch_id=$i")
@@ -1656,8 +1467,8 @@ class StreamingSpec extends SparkSpec {
     val fin = HnswGeoStore.load(spark, stateDir)
     assert(fin.epoch === 3L && fin.baseEpoch === 2L,
       "the retrain must land AS batch 1's own base epoch")
-    assert(HnswGeoStore.commitMarker(spark, stateDir, 2L) ===
-      ((true, Some("stream:batch=1"))),
+    assert(StoreCommits.read(spark, stateDir, "epoch=2") ===
+      ((true, "stream:batch=1")),
       "the retrained base carries the BATCH's writer tag, not an " +
         "out-of-band lifecycle marker")
     assert(fin.segments.select("vec_id").as[Long].collect().toSet ===

@@ -428,15 +428,11 @@ object Dedup {
     * component minimum, and `changed = 0` still certifies the
     * neighbor-min fixpoint.
     *
-    * Cluster-safety: each round checkpoints the label table (iterative
-    * DataFrame algorithms otherwise stack a lineage of joins per round
-    * until planning itself becomes the bottleneck). When the session has
-    * a checkpoint dir (`sc.setCheckpointDir`), the cut is a RELIABLE
-    * checkpoint — label state survives executor loss, which matters
-    * mid-iteration on a real cluster. Without one it falls back to
-    * `localCheckpoint` (executor-local storage; fine in local mode and
-    * for short jobs, unrecoverable on executor loss — set a checkpoint
-    * dir at scale).
+    * Cluster-safety: each round cuts the label table's lineage through
+    * [[LineageCut]] — a RELIABLE checkpoint when the session has a
+    * checkpoint dir (`sc.setCheckpointDir`), so label state survives
+    * executor loss mid-iteration, else an executor-local
+    * `localCheckpoint` — and frees the superseded generation.
     *
     * Each round is ONE job: the changed-label count that decides
     * convergence is collected by an [[org.apache.spark.sql.Observation]]
@@ -450,47 +446,9 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
       driverEdgeThreshold: Long = DefaultDriverEdgeThreshold): DataFrame = {
     val spark = pairs.sparkSession
-    val sc = spark.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
     val idType = pairs.schema("i").dataType
     val integral = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) {
-        // persist before the reliable cut: an eager checkpoint computes the
-        // plan TWICE (the materializing action, then the checkpoint-file
-        // write job) — the cache turns the second computation into a read,
-        // and is released as soon as the files exist
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val c = p.checkpoint(true)
-        p.unpersist(false)
-        c
-      } else df.localCheckpoint(true)
-    // Reliable-checkpoint hygiene: Spark deletes checkpoint files only
-    // under GC-driven reference tracking (off by default), so without
-    // explicit cleanup every round leaks a label-table generation into
-    // the checkpoint dir — real disk at 100 TB. Once round N+1's
-    // checkpoint is materialized, round N's files are dead (the cut
-    // severed the lineage); delete them, keeping only the newest
-    // generation — the same discipline as MLlib's PeriodicCheckpointer.
-    // The FINAL generation backs the returned frame and must survive.
-    def checkpointDirOf(df: DataFrame): Option[org.apache.hadoop.fs.Path] =
-      df.queryExecution.optimizedPlan.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.flatMap(_.getCheckpointFile).map(new org.apache.hadoop.fs.Path(_))
-    def dropCheckpoint(df: DataFrame): Unit = if (reliable)
-      checkpointDirOf(df).foreach(p =>
-        p.getFileSystem(sc.hadoopConfiguration).delete(p, true))
-    // Free a superseded label generation. Reliable path: delete its
-    // checkpoint files. Local path: unpersist the checkpointed RDD's
-    // blocks directly — localCheckpoint storage is RDD-level, which
-    // Dataset.unpersist (cache-manager-only) never sees, so without this
-    // every generation's executor blocks linger until GC-driven cleanup.
-    def freeGeneration(df: DataFrame): Unit =
-      if (reliable) dropCheckpoint(df)
-      else df.queryExecution.optimizedPlan.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(blocking = false))
     val edges = pairs.select(col("i"), col("j"))
       .union(pairs.select(col("j").as("i"), col("i").as("j")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -509,8 +467,8 @@ object Dedup {
         .select(col("doc_id").cast(idType).as("doc_id"),
           col("cluster").cast(idType).as("cluster"))
     }
-    var labels = cut(edges.select(col("i").as("doc_id")).distinct()
-      .withColumn("cluster", col("doc_id")))
+    var labels = LineageCut.cut(edges.select(col("i").as("doc_id"))
+      .distinct().withColumn("cluster", col("doc_id")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -527,7 +485,7 @@ object Dedup {
       // so this adds a join without recomputing the step): one-generation-
       // stale label-of-label values are still component members' labels,
       // hence valid upper bounds of the component min
-      labels = cut(stepped
+      labels = LineageCut.cut(stepped
         .join(prev.select(col("doc_id").as("cluster"), col("cluster").as("jump")),
           Seq("cluster"), "left")
         .select(col("doc_id"), col("old"),
@@ -541,7 +499,7 @@ object Dedup {
       // the new label table is materialized; the previous round's copy
       // (executor-local blocks or reliable checkpoint files) is dead
       // weight from here on
-      freeGeneration(prev)
+      LineageCut.free(prev)
       iter += 1
     }
     // loud, not wrong: stopping early would silently report split clusters

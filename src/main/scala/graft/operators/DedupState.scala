@@ -23,12 +23,11 @@ import org.apache.spark.sql.functions._
   * signatures of corpus documents that contain a cap-crossing shingle —
   * everything else reuses stored signatures untouched. Cap flips are
   * boundary events (Zipf tail), so the repair set is tiny; the common
-  * path touches the store only through equi-joins on `s` / `doc_id`,
-  * which is what the bucketed layout co-locates.
+  * path touches the store only through equi-joins on `s` / `doc_id`.
   *
   * ## Generational layout (the 100 TB append story)
   *
-  * The default (parquet) layout is GENERATIONAL so that [[append]] never
+  * The store layout is GENERATIONAL so that [[append]] never
   * rewrites the corpus-scale tables: the posting list and fingerprints —
   * the tables that grow with the corpus (shingle-rows × corpus) — are
   * append-only `gen=G` partitions holding only each generation's NEW
@@ -51,11 +50,15 @@ import org.apache.spark.sql.functions._
   * the gen-G dfs. [[append]] preserves it by running the same cap-flip
   * repair against the merged dfs.
   *
-  * The optional `catalog` layout is a bucketed SNAPSHOT instead (one
-  * co-located copy per table, no generations): Exchange-free store-side
-  * joins for the hottest read path ([[loadCatalog]], pinned in
-  * `ScaleShapeSpec`), at full-rewrite append cost — the classic
-  * read-optimized vs write-optimized trade, chosen per deployment.
+  * Lineage cuts ([[LineageCut]]) at BATCH-SIZED seams of the admission
+  * plans: the admission-over-store trees repeat the 16-md5-lane
+  * signature aggregations across repair unions and banded references,
+  * so q205/q207-class final plans reached ~1-2 MB of rendered text —
+  * and every ACTION re-analyzes/re-optimizes that tree (measured on q200
+  * as seconds of driver time against ~1 s of task time). The frames cut
+  * are batch-vocab- or flip-set-sized by construction — never
+  * corpus-sized — so the eager materialization costs one small job and
+  * collapses the subtree to a leaf everywhere it is referenced.
   */
 object DedupState {
 
@@ -78,10 +81,9 @@ object DedupState {
     * `signatures` is (doc_id, mh0..mh{numPerms−1}, sz) at the stored-df
     * cap; `fingerprints` is the md5 text fingerprints (h) of the corpus
     * (a SET — generational appends may repeat an h, consumers anti-join)
-    * — so the store needs no corpus TEXT at all. `gen` is -1 for catalog
-    * snapshots, which cannot [[append]].
-    */
-  /** `buckets` > 0 marks the HASH-BUCKET-PARTITIONED generational
+    * — so the store needs no corpus TEXT at all.
+    *
+    * `buckets` > 0 marks the HASH-BUCKET-PARTITIONED generational
     * layout (round-16 verdict #2): every generation's tables are
     * written with a `bucket = hash(key) mod buckets` PARTITION column
     * (posting/signatures/doc_fps by doc_id, shingle_df by s,
@@ -104,21 +106,13 @@ object DedupState {
                    bucketed: Map[String, DataFrame] = Map.empty)
 
   /** Build a store from a corpus (doc_id, text) at `path` as generation
-    * 0 (any stale contents of `path` are cleared first). With
-    * `catalog = Some((prefix, buckets))` the relations are instead
-    * written once as bucketed+sorted catalog tables (posting/dfs on `s`,
-    * signatures on `doc_id`, fingerprints on `h`) so batch joins against
-    * the store need no corpus-side shuffle. Returns the store read back
-    * from disk.
+    * 0 (any stale contents of `path` are cleared first). Returns the store
+    * read back from disk.
     */
   def build(spark: SparkSession, corpus: DataFrame, path: String,
             n: Int = 3, numPerms: Int = 16, bands: Int = 4,
             maxDf: Int = Dedup.DefaultMaxShingleDf, hashTag: String = "xx",
-            catalog: Option[(String, Int)] = None,
             buckets: Int = 0): Store = {
-    require(buckets == 0 || catalog.isEmpty,
-      "buckets applies to the generational layout; the catalog layout " +
-        "has its own bucketing (the second member of `catalog`)")
     val permHash = PermHashes(hashTag)
     val posting = graft.CacheRegistry.persist(Dedup.docShingles(corpus, n))
     val dfs = posting.groupBy(col("s")).agg(count(lit(1)).as("df"))
@@ -129,83 +123,16 @@ object DedupState {
       graft.functions.TextFunctions.md5Fingerprint(col("text")).as("h"))
       .distinct()
     val params = Params(n, numPerms, bands, maxDf, hashTag)
-    catalog match {
-      case Some((prefix, buckets)) =>
-        writeSnapshot(spark, path, posting, dfs, sigs, fps, params,
-          prefix, buckets)
-        loadCatalog(spark, prefix, path)
-      case None =>
-        cleanDir(spark, path)
-        writeParams(spark, path, params)
-        if (buckets > 0) writeBucketsMarker(spark, path, buckets)
-        writeGeneration(spark, path, gen = 0L,
-          newPosting = posting, dfs = dfs, sigs = sigs, newFps = fps,
-          isBase = true,
-          docFps = Some(corpus.select(col("doc_id"),
-            graft.functions.TextFunctions.md5Fingerprint(col("text"))
-              .as("h"))),
-          buckets = buckets)
-        loadAtWith(spark, path, 0L, Some(params), Some(buckets))
-    }
-  }
-
-  /** Load a snapshot store written with a `catalog` prefix through its
-    * bucketed catalog tables: joins against the store's `s` / `doc_id` /
-    * `h` keys then need no store-side Exchange (pinned in
-    * `ScaleShapeSpec`) — at 100 TB only the BATCH shuffles, never the
-    * corpus state. Results are identical to [[load]] on an equivalent
-    * generational store; only the plan differs.
-    */
-  def loadCatalog(spark: SparkSession, prefix: String, path: String): Store = {
-    import spark.implicits._
-    Store(
-      posting = spark.table(s"${prefix}_posting"),
-      shingleDf = spark.table(s"${prefix}_shingle_df"),
-      signatures = spark.table(s"${prefix}_signatures"),
-      fingerprints = spark.table(s"${prefix}_fingerprints"),
-      params = spark.read.parquet(s"$path/params").as[Params].head(),
-      path = path, gen = -1L)
-  }
-
-  /** One-shot CATALOG → GENERATIONAL migration — the erasure answer for
-    * the read-optimized layout (round-16 verdict #5): the catalog is
-    * "rebuilt, not edited" by design, which made the layout recommended
-    * for the largest corpora the one where a takedown cost a full
-    * corpus re-shingling. This migration copies the catalog's RELATIONS
-    * (posting/dfs/signatures/fingerprints — no corpus text is touched,
-    * no shingling or MinHash recomputation anywhere) into generation 0
-    * of a generational store at `path` — hash-bucket-partitioned when
-    * `buckets` > 0, so the subsequent [[forget]]s' erasure-keyed reads
-    * are partition-pruned — after which erasure is the standard
-    * delta-priced tombstone op and a later [[build]] with `catalog` can
-    * re-snapshot the read-optimized layout over the survivors.
-    *
-    * The (doc_id, h) fingerprint REGISTRY behind [[forget]] is not part
-    * of the catalog layout, so it must be supplied: `docFps` = the
-    * corpus's (doc_id, h) md5-fingerprint relation — ONE cheap
-    * fingerprint pass over corpus text (no shingling), or a stored
-    * copy. Omitted, the migrated store is honestly registry-less and
-    * [[forget]] stays loud with the rebuild remedy, exactly as on a
-    * pre-registry generational store.
-    */
-  def migrateCatalog(spark: SparkSession, catalog: Store, path: String,
-                     buckets: Int = 0,
-                     docFps: Option[DataFrame] = None): Store = {
-    require(catalog.gen == -1L,
-      "migrateCatalog takes a catalog snapshot (loadCatalog); a " +
-        "generational store needs no migration")
     cleanDir(spark, path)
-    writeParams(spark, path, catalog.params)
+    writeParams(spark, path, params)
     if (buckets > 0) writeBucketsMarker(spark, path, buckets)
     writeGeneration(spark, path, gen = 0L,
-      newPosting = catalog.posting,
-      dfs = catalog.shingleDf,
-      sigs = catalog.signatures,
-      newFps = catalog.fingerprints,
+      newPosting = posting, dfs = dfs, sigs = sigs, newFps = fps,
       isBase = true,
-      docFps = docFps,
+      docFps = corpus.select(col("doc_id"),
+        graft.functions.TextFunctions.md5Fingerprint(col("text")).as("h")),
       buckets = buckets)
-    loadAtWith(spark, path, 0L, Some(catalog.params), Some(buckets))
+    loadAtWith(spark, path, 0L, Some(params), Some(buckets))
   }
 
   /** Committed generations at `path`: gen → is_base. One tiny parquet row
@@ -214,30 +141,6 @@ object DedupState {
   private def committedGens(spark: SparkSession,
                             path: String): Map[Long, Boolean] =
     StoreCommits.committedMap(spark, path, "gen")
-
-  /** Lineage cut at a BATCH-SIZED seam (the [[graft.pipelines
-    * .CorpusPipeline]] `cut` discipline brought into the store's own
-    * admission plans): the admission-over-store trees repeat the
-    * 16-md5-lane signature aggregations across repair unions and banded
-    * references, so q205/q207-class final plans reached ~1-2 MB of
-    * rendered text — and every ACTION re-analyzes/re-optimizes that tree
-    * (measured on q200 as seconds of driver time against ~1 s of task
-    * time). The frames cut here are batch-vocab- or flip-set-sized by
-    * construction — never corpus-sized — so the eager materialization
-    * costs one small job and collapses the subtree to a leaf everywhere
-    * it is referenced. Reliable checkpoint when a checkpoint dir is set,
-    * executor-local otherwise ([[Dedup.connectedComponents]]'s rule).
-    */
-  private def cut(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isDefined) {
-      val p = df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val c = p.checkpoint(true)
-      p.unpersist(false)
-      c
-    } else df.localCheckpoint(true)
-  }
 
   /** Load the latest COMMITTED generation of a generational store. */
   def load(spark: SparkSession, path: String): Store =
@@ -306,7 +209,7 @@ object DedupState {
     // bucket-retaining masked views feed [[prunedView]]'s
     // partition-pruned reads; the public frames drop the partition
     // column so every downstream schema is unchanged (drop of an
-    // absent column is a no-op on legacy stores)
+    // absent column is a no-op on unbucketed stores)
     val postingM = masked(liveG("posting"), tombs, "doc_id")
     val fpsM = masked(liveG("fingerprints"), fpTombs, "h")
     Store(
@@ -390,38 +293,40 @@ object DedupState {
 
   /** The live (doc_id, h) fingerprint REGISTRY — which stored doc carries
     * which text hash, the relation [[forget]] needs to decide whether an
-    * erased doc's fingerprint is still held by a surviving doc. Written
-    * per generation since the deletion round; None when any live
-    * generation predates it (a partial registry would silently treat old
-    * docs as unregistered — worse than failing).
+    * erased doc's fingerprint is still held by a surviving doc. Every
+    * generation writes its `doc_fps/gen=G` (build and delta appends the
+    * batch's rows, bases the carried-live registry, forget an empty
+    * relation), so a missing one in the live range is a store this code
+    * did not write: fail loudly rather than read a partial registry,
+    * which would silently treat old docs as unregistered.
     */
   private def liveDocFps(spark: SparkSession, path: String, base: Long,
                          gen: Long,
-                         sel: Option[Column] = None): Option[DataFrame] = {
+                         sel: Option[Column] = None): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val complete = (base to gen).forall(g => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$path/doc_fps/gen=$g")))
-    if (!complete) None
-    else {
-      // `sel` is a bucket-partition filter ([[forget]]'s erasure-keyed
-      // prune) — applied before the partition column is dropped so the
-      // scan reads only the selected buckets
-      val raw0 = spark.read.parquet(s"$path/doc_fps")
-        .filter(col("gen") >= base && col("gen") <= gen)
-      val raw = sel.fold(raw0)(raw0.filter)
-      Some(optionalLive(spark, path, "tombstones", base, gen,
-        keepGen = true)
-        .fold(raw.drop("gen", "bucket")) { t =>
-          // gen-aware, like loadAt: a re-admitted doc's registry row
-          // post-dates its tombstone and must survive it
-          val tmax = t.groupBy(col("doc_id"))
-            .agg(max(col("gen")).as("__tgen"))
-          raw.join(broadcast(tmax), Seq("doc_id"), "left")
-            .filter(col("__tgen").isNull || col("gen") > col("__tgen"))
-            .drop("gen", "__tgen", "bucket")
-        })
-    }
+    require((base to gen).forall(g => fs.exists(
+        new org.apache.hadoop.fs.Path(s"$path/doc_fps/gen=$g"))),
+      s"store at $path predates the (doc_id, h) fingerprint registry " +
+        "(doc_fps/), so forget cannot decide which erased texts' " +
+        "fingerprints are still carried by surviving docs — rebuild the " +
+        "store with build() to migrate")
+    // `sel` is a bucket-partition filter ([[forget]]'s erasure-keyed
+    // prune) — applied before the partition column is dropped so the
+    // scan reads only the selected buckets
+    val raw0 = spark.read.parquet(s"$path/doc_fps")
+      .filter(col("gen") >= base && col("gen") <= gen)
+    val raw = sel.fold(raw0)(raw0.filter)
+    optionalLive(spark, path, "tombstones", base, gen, keepGen = true)
+      .fold(raw.drop("gen", "bucket")) { t =>
+        // gen-aware, like loadAt: a re-admitted doc's registry row
+        // post-dates its tombstone and must survive it
+        val tmax = t.groupBy(col("doc_id"))
+          .agg(max(col("gen")).as("__tgen"))
+        raw.join(broadcast(tmax), Seq("doc_id"), "left")
+          .filter(col("__tgen").isNull || col("gen") > col("__tgen"))
+          .drop("gen", "__tgen", "bucket")
+      }
   }
 
   /** Collapse the live generation range into one new BASE generation:
@@ -435,15 +340,12 @@ object DedupState {
     * identical before and after (spec-pinned).
     */
   def compact(spark: SparkSession, store: Store): Store = {
-    require(store.gen >= 0,
-      "compact needs a generational store; catalog snapshots have no generations")
     val commits = committedGens(spark, store.path)
     val base = commits.collect { case (g, true) if g <= store.gen => g }.max
     // the MASKED views are what gets carried forward — a compaction after
     // [[forget]] is the physical erasure point (the new base holds no
     // tombstoned row, and no tombstone dirs are written at it); the
-    // registry carries forward masked too, or stays honestly absent on a
-    // legacy store
+    // registry carries forward masked too
     writeGeneration(spark, store.path, gen = store.gen + 1,
       newPosting = store.posting,
       dfs = store.shingleDf,
@@ -462,7 +364,6 @@ object DedupState {
     * markers are removed too); reads at or after the base are untouched.
     */
   def vacuum(spark: SparkSession, store: Store): Unit = {
-    require(store.gen >= 0, "vacuum needs a generational store")
     val commits = committedGens(spark, store.path)
     val base = commits.collect { case (g, true) if g <= store.gen => g }.max
     val conf = spark.sparkContext.hadoopConfiguration
@@ -481,8 +382,8 @@ object DedupState {
     * touching corpus TEXT: only the batch is shingled; the corpus side
     * comes entirely from the store. Output (i, j, jac), `j` always fresh.
     * Caller contract: stored and fresh doc_ids are disjoint.
-    */
-  /** SCALE SHAPE (round-16: the sub-linear admission rework): every
+    *
+    * SCALE SHAPE (round-16: the sub-linear admission rework): every
     * store-side frame here is consumed through a BROADCAST prune on the
     * batch's keys — shingles, band keys, fingerprints — so the
     * corpus-scale tables are SCANNED (column-pruned, streamed through a
@@ -518,7 +419,7 @@ object DedupState {
     // CUT (batch-sized): bandedFresh is referenced THREE times (its own
     // band-key distinct, the candidate join's broadcast side, and the
     // banded union) and carries the whole 16-lane fresh-signature subtree
-    val bandedFresh = cut(
+    val bandedFresh = LineageCut.cut(
       freshSigs.withColumn("is_new", lit(true))
         .select(col("doc_id"), col("sz"), col("is_new"),
           explode(array(Dedup.bandKeys(p.numPerms, p.bands): _*)).as("bk")))
@@ -554,8 +455,8 @@ object DedupState {
     * plus the small dfs/signature snapshots — the corpus-scale tables are
     * never rewritten. Re-running a crashed append (same source
     * generation) overwrites the same target generation: idempotent.
-    */
-  /** With `asBase = true` the new generation is written as a BASE — the
+    *
+    * With `asBase = true` the new generation is written as a BASE — the
     * batch's rows PLUS everything live, exactly [[compact]] fused into
     * the append, so a periodic caller (the admission sinks' `compactEvery`)
     * amortizes compaction without disturbing the one-generation-per-batch
@@ -564,9 +465,6 @@ object DedupState {
   def append(spark: SparkSession, store: Store, fresh: DataFrame,
              asBase: Boolean = false,
              writer: String = "lifecycle"): Store = {
-    require(store.gen >= 0,
-      "append needs a generational store; catalog snapshots are " +
-        "read-optimized and rebuilt, not appended (see class doc)")
     val p = store.params
     val permHash = PermHashes(p.hashTag)
     val freshPosting = graft.CacheRegistry.persist(
@@ -583,18 +481,15 @@ object DedupState {
     val freshDocFps = fresh.select(col("doc_id"),
       graft.functions.TextFunctions.md5Fingerprint(col("text")).as("h"))
     // registry rows: the batch's for a delta; carried-live ∪ batch for a
-    // base — UNLESS the live range predates the registry, where a partial
-    // carry would silently mark old docs unregistered ([[liveDocFps]]);
-    // the base then stays honestly registry-less and [[forget]] stays
-    // loud until a rebuild
+    // base
     val docFps =
-      if (!asBase) Some(freshDocFps)
+      if (!asBase) freshDocFps
       else {
         val commits = committedGens(spark, store.path)
         val base =
           commits.collect { case (g, true) if g <= store.gen => g }.max
         liveDocFps(spark, store.path, base, store.gen)
-          .map(_.unionByName(freshDocFps))
+          .unionByName(freshDocFps)
       }
     writeGeneration(spark, store.path, gen = store.gen + 1,
       newPosting =
@@ -717,21 +612,11 @@ object DedupState {
     */
   def forget(spark: SparkSession, store: Store, ids: DataFrame,
              writer: String = "lifecycle"): Store = {
-    require(store.gen >= 0,
-      "forget needs a generational store; catalog snapshots are " +
-        "read-optimized and rebuilt, not edited — migrate once with " +
-        "migrateCatalog (a relation copy, no re-shingling) and forget " +
-        "there")
     val p = store.params
     val permHash = PermHashes(p.hashTag)
     val commits = committedGens(spark, store.path)
     val base = commits.collect { case (g, true) if g <= store.gen => g }.max
     val registry = liveDocFps(spark, store.path, base, store.gen)
-      .getOrElse(throw new IllegalArgumentException(
-        s"store at ${store.path} predates the (doc_id, h) fingerprint " +
-          "registry (doc_fps/), so forget cannot decide which erased " +
-          "texts' fingerprints are still carried by surviving docs — " +
-          "rebuild the store with build() to migrate"))
     // erasure-keyed PARTITION prunes (the bucketed layout's payoff —
     // round-16 verdict #2): the erased-id set is takedown-sized, so the
     // doc-keyed scans read only its buckets; unbucketed stores keep the
@@ -761,7 +646,7 @@ object DedupState {
     val regSel: Option[Column] = delBuckets.map(bs =>
       col("bucket").isin(bs.map(Integer.valueOf): _*))
     val regForDel = regSel.fold(registry)(s =>
-      liveDocFps(spark, store.path, base, store.gen, Some(s)).get)
+      liveDocFps(spark, store.path, base, store.gen, Some(s)))
     // registry doc-id column streamed through a broadcast of the (small)
     // erasure set — never a corpus-side shuffle
     val del = graft.CacheRegistry.persist(
@@ -886,7 +771,7 @@ object DedupState {
     // store-dfs-join subtree. It was already materialized eagerly (the
     // sigRepair flip probe is the first action), so the cut costs no
     // extra pass — it just truncates the plan to a leaf.
-    cut(inStore.unionByName(unseen))
+    LineageCut.cut(inStore.unionByName(unseen))
   }
 
   /** Broadcast budget for the over-cap complement, in rows: 4M shingle
@@ -939,7 +824,7 @@ object DedupState {
     else {
       // flip-set-sized seams, CUT so the repair union does not duplicate
       // the 16-lane recompute subtree into every downstream reference
-      val affected = cut(
+      val affected = LineageCut.cut(
         store.posting.join(broadcast(flipped), Seq("s"), "left_semi")
           .select(col("doc_id")).distinct())
       val affPosting = store.posting
@@ -948,7 +833,7 @@ object DedupState {
         .select(col("s"))
         .unionByName(merged.filter(col("cdf") + col("fdf") > p.maxDf)
           .select(col("s")))
-      val repaired = cut(Dedup.sizedSignatures(
+      val repaired = LineageCut.cut(Dedup.sizedSignatures(
         antiOverCap(affPosting, overCap), p.numPerms, permHash))
       Some((affected, repaired))
     }
@@ -965,11 +850,6 @@ object DedupState {
         .unionByName(repaired)
     }
 
-  /** Write one generation: the batch's NEW posting/fingerprint rows into
-    * their `gen=G` partitions, the full (small) dfs/signature snapshots
-    * into theirs, and the commit marker LAST — a crash before the marker
-    * leaves the generation invisible to every reader.
-    */
   /** The per-table bucket KEYS of the bucketed layout — chosen by each
     * table's BOUNDED-key-set read (the one partition pruning can serve;
     * see the [[Store]] pigeonhole note): posting/signatures/doc_fps by
@@ -1042,12 +922,17 @@ object DedupState {
       schema)
   }
 
+  /** Write one generation: the batch's NEW posting/fingerprint/registry
+    * rows into their `gen=G` partitions, the dfs/signature snapshots (at a
+    * base) or deltas into theirs, and the commit marker LAST — a crash
+    * before the marker leaves the generation invisible to every reader.
+    */
   private def writeGeneration(spark: SparkSession, path: String, gen: Long,
                               newPosting: DataFrame, dfs: DataFrame,
                               sigs: DataFrame, newFps: DataFrame,
+                              docFps: DataFrame,
                               isBase: Boolean = false,
                               writer: String = "lifecycle",
-                              docFps: Option[DataFrame] = None,
                               sigGone: Option[DataFrame] = None,
                               buckets: Int = 0): Unit = {
     import spark.implicits._
@@ -1057,10 +942,9 @@ object DedupState {
     // — only the commit marker below must land after ALL of them
     ParWrites.run(Seq(
       () => writeTable(newPosting, path, "posting", gen, buckets),
-      () => writeTable(newFps, path, "fingerprints", gen, buckets)) ++
-      // the (doc_id, h) registry behind [[forget]] — None keeps a legacy
-      // store's registry honestly incomplete rather than silently partial
-      docFps.map(d => () => writeTable(d, path, "doc_fps", gen, buckets)) ++
+      () => writeTable(newFps, path, "fingerprints", gen, buckets),
+      // the (doc_id, h) registry behind [[forget]]
+      () => writeTable(docFps, path, "doc_fps", gen, buckets)) ++
       // superseded-signature markers for a DELTA generation's repairs
       // (doc-count-bounded — never worth a bucket layout)
       sigGone.map(sg => () => sg.write.mode("overwrite")
@@ -1088,7 +972,7 @@ object DedupState {
       .write.mode("overwrite").parquet(s"$path/buckets")
   }
 
-  /** The store-wide bucket count (0 = the unbucketed legacy layout) —
+  /** The store-wide bucket count (0 = the unbucketed default layout) —
     * decided once at [[build]]; appends/forgets/compactions inherit it
     * so partition-dir depth never mixes within a table.
     */
@@ -1133,26 +1017,6 @@ object DedupState {
     import spark.implicits._
     Seq(params).toDS().coalesce(1)
       .write.mode("overwrite").parquet(s"$path/params")
-  }
-
-  /** Bucketed snapshot layout (the `catalog` option): one co-located copy
-    * per table, overwritten wholesale — read-optimized, not appendable.
-    */
-  private def writeSnapshot(spark: SparkSession, path: String,
-                            posting: DataFrame, dfs: DataFrame,
-                            sigs: DataFrame, fps: DataFrame, params: Params,
-                            prefix: String, buckets: Int): Unit = {
-    graft.sources.Bucketing.writeBucketed(
-      posting, s"${prefix}_posting", s"$path/posting", Seq("s"), buckets)
-    graft.sources.Bucketing.writeBucketed(
-      dfs, s"${prefix}_shingle_df", s"$path/shingle_df", Seq("s"), buckets)
-    graft.sources.Bucketing.writeBucketed(
-      sigs, s"${prefix}_signatures", s"$path/signatures",
-      Seq("doc_id"), buckets)
-    graft.sources.Bucketing.writeBucketed(
-      fps, s"${prefix}_fingerprints", s"$path/fingerprints",
-      Seq("h"), buckets)
-    writeParams(spark, path, params)
   }
 
   private def cleanDir(spark: SparkSession, path: String): Unit = {

@@ -27,7 +27,7 @@ import graft.functions.GraftFunctions
   *   dmass     = Σ_{outdeg(u)=0} r(u)          — dangling mass, one row
   *   r'(v)     = 15·scale div 100 + (85·(inflow(v) + dmass div N)) div 100
   *
-  * Each generation is cut from its lineage exactly as
+  * Each generation is cut from its lineage by [[LineageCut]], as
   * [[Dedup.connectedComponents]] cuts label tables: a reliable checkpoint
   * when `sc.setCheckpointDir` is set (cluster-safe: an executor loss
   * mid-iteration replays from files, not from the whole prefix of
@@ -115,27 +115,6 @@ object Graph {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
     require(scale >= 1000L, s"scale must be >= 1000, got $scale")
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) {
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        val c = p.checkpoint(true)
-        p.unpersist(false)
-        c
-      } else df.localCheckpoint(true)
-    def freeGeneration(df: DataFrame): Unit =
-      if (reliable) df.queryExecution.optimizedPlan.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.flatMap(_.getCheckpointFile).foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-      }
-      else df.queryExecution.optimizedPlan.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(blocking = false))
-
     // Pre-partition the loop's two standing inputs by their JOIN keys and
     // cache them with that distribution: InMemoryRelation reports the
     // child's outputPartitioning, so each iteration's edge join reuses the
@@ -162,7 +141,7 @@ object Graph {
       // dangling mass of generation 0 (all ranks = scale) costs one count
       // of the cached frame, not a job over the ranks
       var dmass = nodesDeg.filter(col("outdeg").isNull).count() * scale
-      var ranks = cut(nodesDeg.withColumn("r", lit(scale)))
+      var ranks = LineageCut.cut(nodesDeg.withColumn("r", lit(scale)))
       for (k <- 1 to iterations) {
         val shares = ranks.filter(col("outdeg").isNotNull)
           .select(col("node").as("src"), expr("r div outdeg").as("share"))
@@ -190,9 +169,9 @@ object Graph {
           .observe(obs,
             coalesce(sum(when(col("outdeg").isNull, col("r"))), lit(0L))
               .as("dmass"))
-        ranks = cut(next)
+        ranks = LineageCut.cut(next)
         dmass = obs.get("dmass").asInstanceOf[Long]
-        freeGeneration(prev)
+        LineageCut.free(prev)
       }
       ranks.select(col("node"), col("r"))
     } finally {
@@ -229,34 +208,13 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 20,
       s"rounds must be in [1, 20], got $rounds")
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) {
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        val c = p.checkpoint(true)
-        p.unpersist(false)
-        c
-      } else df.localCheckpoint(true)
-    def freeGeneration(df: DataFrame): Unit =
-      if (reliable) df.queryExecution.optimizedPlan.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.flatMap(_.getCheckpointFile).foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-      }
-      else df.queryExecution.optimizedPlan.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(blocking = false))
-
     val e = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val nodes = e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct()
-      var labels = cut(nodes.withColumn("l", col("node")))
+      var labels = LineageCut.cut(nodes.withColumn("l", col("node")))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("node"))
         .orderBy(col("cnt").desc, col("l").asc)
@@ -275,11 +233,11 @@ object Graph {
             .withColumn("__rn", row_number().over(w))
             .filter(col("__rn") === 1)
             .select(col("node"), col("l").as("__adopted"))
-        labels = cut(
+        labels = LineageCut.cut(
           prev.join(adopted, Seq("node"), "left")
             .select(col("node"),
               coalesce(col("__adopted"), col("l")).as("l")))
-        freeGeneration(prev)
+        LineageCut.free(prev)
       }
       labels.select(col("node"), col("l").as("community"))
     } finally e.unpersist(false)

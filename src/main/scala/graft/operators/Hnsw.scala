@@ -1333,11 +1333,11 @@ object Hnsw {
     df.select(col("shard"), col("vec_id"), col("vec"),
       lit(-1).as("level"), typedLit(Seq.empty[Seq[Long]]).as("nbrs"))
 
-  /** The measured filtered-serving recall calibration (round 15's
-    * `tools/FilteredRecallSweep`, BASELINE.md "Filtered-serving recall
-    * vs selectivity"): recall@10 of [[batchNeighborsFiltered]] against
-    * exact brute force over the ALLOWED subset, keyed by PER-SHARD node
-    * count — the quantity the sweep proved the curve transfers on
+  /** The measured filtered-serving recall calibration (BASELINE.md
+    * "Filtered-serving recall vs selectivity"): recall@10 of
+    * [[batchNeighborsFiltered]] against exact brute force over the
+    * ALLOWED subset, keyed by PER-SHARD node count — the quantity the
+    * sweep proved the curve transfers on
     * (holding per-shard size, the ×100 curve dominates ×10 at every
     * operating point; letting per-shard size grow 10× roughly halves
     * recall). Rows: (efSearch → recall at selectivity 1/3, 1/10, 1/100).

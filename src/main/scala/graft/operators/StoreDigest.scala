@@ -4,20 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** STORE-LEVEL digest (round-17 verdict #4) — the one-call answer to
-  * "is this replica / migrated / restored store the same store?".
+  * "is this replica / re-laid-out / restored store the same store?".
   * [[TableDigest]] proves two plain tables equal with one scan each;
   * this composes it over a store's full LOGICAL relation set — one
   * (relation, n_rows, xor_digest, sum_digest) row per relation plus a
   * `__store` rollup row via [[TableDigest.mergeDigests]] — so replica
-  * audits, migration checks ([[DedupState.migrateCatalog]]), and
-  * restore validation each cost one scan per relation, order-free and
-  * layout-free.
+  * audits, layout checks (plain vs bucketed), and restore validation
+  * each cost one scan per relation, order-free and layout-free.
   *
   * The digests are over LOGICAL content, deliberately: a store's
   * identity is what its readers see, not how its bytes are arranged —
   * so a plain and a bucketed [[DedupState]] store of the same corpus
   * digest identically (the bucket column and file clustering are
-  * layout), a catalog-migrated store digests as its source, and a geo
+  * layout), and a geo
   * store's `vectors`/`attrs` rows survive compaction bitwise while
   * `graph` honestly changes when delta graphs merge into the base
   * (HNSW insertion-order semantics — for MONOTONE ids compaction is
@@ -54,9 +53,8 @@ object StoreDigest {
     * readers consume (posting, shingle_df, signatures, fingerprints —
     * each already generation-resolved, tombstone-masked, and
     * layout-free through [[DedupState.loadAt]]) plus the `__store`
-    * rollup. Invariant across plain ≡ bucketed layouts and
-    * [[DedupState.migrateCatalog]] by construction; flips on any
-    * mutated, lost, or duplicated row.
+    * rollup. Invariant across plain ≡ bucketed layouts by construction;
+    * flips on any mutated, lost, or duplicated row.
     */
   def digestDedup(spark: SparkSession,
                   store: DedupState.Store): DataFrame =

@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import graft.operators.Dedup
+import graft.operators.{Dedup, LineageCut}
 
 /** End-to-end training-corpus curation — the composition every LLM data
   * pipeline runs over raw documents, expressed as one lazy plan plus the
@@ -129,7 +129,7 @@ object CorpusPipeline {
                      nProbe: Int = graft.operators.Hnsw.DefaultNearDupNProbe,
                      route: String = "auto",
                      maxCellNodes: Int = 0): DataFrame = {
-    // lineage CUT, not a plain persist (the [[admitBatch]] `cut`
+    // lineage CUT, not a plain persist (the [[admitBatch]] cut
     // discipline): `curated` is referenced THREE times downstream
     // (embKept's semi-join, the representatives' quality join, the final
     // anti-join), and a persisted frame still re-renders and re-optimizes
@@ -138,7 +138,7 @@ object CorpusPipeline {
     // task time. The cut materializes exactly what the persist already
     // materialized (one corpus-survivor-sized frame) and truncates the
     // plan to a leaf.
-    val curated = cut(curate(docs, config))
+    val curated = LineageCut.cut(curate(docs, config))
     val embKept = emb.select(col("vec_id"), col("embedding"))
       .join(curated.select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_semi")
@@ -231,31 +231,18 @@ object CorpusPipeline {
     * (ScaleRehearsal's `admit` suite measures the whole ladder flat in
     * corpus size at a fixed batch); both folds write batch-sized
     * deltas. Nothing in this function scans the standing corpus.
-    */
-  /** Lineage cut at [[admitBatch]]'s batch-sized seams. The admission
-    * ladder nests several persisted-frame layers (quality/lang → text
-    * admission → routed semantic admission → feature re-join → two
-    * store folds); a cached reference is cheap to EXECUTE but every
+    *
+    * Lineage cuts ([[LineageCut]]) at the batch-sized seams: the
+    * admission ladder nests several persisted-frame layers (quality/lang
+    * → text admission → routed semantic admission → feature re-join →
+    * two store folds); a cached reference is cheap to EXECUTE but every
     * occurrence prints/walks/optimizes its whole subtree, so plan
     * handling grows exponentially in the nesting depth while the actual
     * compute stays batch-sized. The frames at these seams are
     * batch-sized by construction, so an eager cut costs one small
-    * materialization; reliable when a checkpoint dir is set (state
-    * survives executor loss at scale), executor-local otherwise —
-    * [[graft.operators.Dedup.connectedComponents]]'s discipline.
-    */
-  private def cut(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isDefined) {
-      val p = df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val c = p.checkpoint(true)
-      p.unpersist(false)
-      c
-    } else df.localCheckpoint(true)
-  }
-
-  /** `driftFactor > 0` (round 16): a BASE fold (`asBase`) additionally
+    * materialization.
+    *
+    * `driftFactor > 0` (round 16): a BASE fold (`asBase`) additionally
     * runs the geo store's epoch-count drift check and, when it trips,
     * RETRAINS as part of this fold's own base commit
     * ([[graft.operators.HnswGeoStore.retrainIfDrifted]] with the
@@ -273,7 +260,7 @@ object CorpusPipeline {
                  writer: String = "lifecycle",
                  driftFactor: Double = 0.0): (DataFrame, CorpusState) = {
     val ql = qualityLang(docs, config)
-    val textKept = cut(
+    val textKept = LineageCut.cut(
       graft.operators.DedupState.incrementalDedup(
         state.text, ql.select(col("doc_id"), col("text")),
         config.dedupThreshold))
@@ -294,13 +281,13 @@ object CorpusPipeline {
     val embBatch = graft.CacheRegistry.persist(
       embSrc.join(textKept.select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_semi"))
-    val semKept = cut(
+    val semKept = LineageCut.cut(
       graft.operators.HnswGeoStore.incrementalAdmit(
         state.geo, embBatch, semanticThreshold, efSearch, nProbe))
     val semDrops = embBatch.select(col("vec_id"))
       .join(semKept.select(col("vec_id")), Seq("vec_id"), "left_anti")
       .select(col("vec_id").as("doc_id"))
-    val kept = cut(
+    val kept = LineageCut.cut(
       textKept.join(semDrops, Seq("doc_id"), "left_anti")
         .join(ql.drop("text"), Seq("doc_id"))
         .withColumn("subword_tokens",

@@ -244,20 +244,6 @@ class DedupStateSpec extends SparkSpec {
     assert(overStore.nonEmpty)
   }
 
-  test("bucketed catalog layout answers identically to plain parquet") {
-    val docs = Tables.table(spark, sf0001, "documents").select("doc_id", "text")
-    val corpus = docs.filter(col("doc_id") < 300)
-    val fresh = docs.filter(col("doc_id") >= 300)
-    val plain = DedupState.build(spark, corpus, tmpDir("dplain"))
-    val bucketed = DedupState.build(spark, corpus, tmpDir("dbuck"),
-      catalog = Some(("dedupstate_spec", 4)))
-    val a = pairKey(DedupState.incrementalNearDups(plain, fresh))
-    CacheRegistry.releaseAll()
-    val b = pairKey(DedupState.incrementalNearDups(bucketed, fresh))
-    CacheRegistry.releaseAll()
-    assert(a === b)
-  }
-
   test("bucket-partitioned GENERATIONAL layout: every view, admission " +
        "answer, and the full forget lifecycle are value-identical to " +
        "the unbucketed store, and the erasure-keyed reads carry a " +
@@ -304,51 +290,6 @@ class DedupStateSpec extends SparkSpec {
     sameStore(bk, plain, "bucketed compact vs plain")
     assert(DedupState.load(spark, bk.path).buckets === 16,
       "the bucket marker must survive the whole lifecycle")
-    CacheRegistry.releaseAll()
-  }
-
-  test("migrateCatalog: the read-optimized layout becomes a (bucketed) " +
-       "generational store by relation copy — no re-shingling — and " +
-       "forget there equals the never-saw store") {
-    val docs = Tables.table(spark, sf0001, "documents").select("doc_id", "text")
-    val corpus = docs.filter(col("doc_id") < 300)
-    val probe = docs.filter(col("doc_id") >= 300)
-    val cat = DedupState.build(spark, corpus, tmpDir("dmigC"),
-      catalog = Some(("dedupstate_migr", 4)))
-    // catalog snapshots cannot forget — the loud remedy names the
-    // migration
-    val err = intercept[IllegalArgumentException] {
-      DedupState.forget(spark, cat, Seq(3L).toDF("doc_id"))
-    }
-    assert(err.getMessage.contains("migrateCatalog"), err.getMessage)
-    // migration = relation copy + the supplied registry
-    val docFps = corpus.select(col("doc_id"),
-      graft.functions.TextFunctions.md5Fingerprint(col("text")).as("h"))
-    val mig = DedupState.migrateCatalog(spark, cat, tmpDir("dmigG"),
-      buckets = 8, docFps = Some(docFps))
-    assert(mig.gen === 0L && mig.buckets === 8)
-    val plain = DedupState.build(spark, corpus, tmpDir("dmigP"))
-    sameStore(mig, plain, "migrated vs built-from-text")
-    // forget over the migrated store ≡ the store that never saw them
-    val erased = col("doc_id") % 7 === 3
-    val f = DedupState.forget(spark, mig,
-      corpus.filter(erased).select("doc_id"))
-    CacheRegistry.releaseAll()
-    val never = DedupState.build(spark, corpus.filter(!erased),
-      tmpDir("dmigN"))
-    CacheRegistry.releaseAll()
-    sameStore(f, never, "migrated forget vs never-saw")
-    val a = pairKey(DedupState.incrementalNearDups(f, probe))
-    CacheRegistry.releaseAll()
-    val b = pairKey(DedupState.incrementalNearDups(never, probe))
-    CacheRegistry.releaseAll()
-    assert(a === b && a.nonEmpty)
-    // a registry-less migration stays honestly loud on forget
-    val bare = DedupState.migrateCatalog(spark, cat, tmpDir("dmigB"))
-    val err2 = intercept[IllegalArgumentException] {
-      DedupState.forget(spark, bare, Seq(3L).toDF("doc_id"))
-    }
-    assert(err2.getMessage.contains("registry"), err2.getMessage)
     CacheRegistry.releaseAll()
   }
 
@@ -534,12 +475,22 @@ class DedupStateSpec extends SparkSpec {
     // strip the registry, simulating a store written before it existed
     val p = new org.apache.hadoop.fs.Path(s"$dir/doc_fps")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    val e = intercept[IllegalArgumentException] {
-      DedupState.forget(spark, DedupState.load(spark, dir),
-        Seq(1L).toDF("doc_id"))
+    val stripped = DedupState.load(spark, dir)
+    // every op that reads the live registry refuses with the rebuild
+    // remedy — none may commit a registry-less base
+    Seq[(String, () => Any)](
+      "forget" -> (() => DedupState.forget(spark, stripped,
+        Seq(1L).toDF("doc_id"))),
+      "compact" -> (() => DedupState.compact(spark, stripped)),
+      "append(asBase)" -> (() => DedupState.append(spark, stripped,
+        docsDf(3L -> "m n o p q r"), asBase = true))).foreach {
+      case (op, run) =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("doc_fps") &&
+          e.getMessage.contains("rebuild"), s"$op: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("doc_fps") &&
-      e.getMessage.contains("rebuild"), e.getMessage)
+    assert(DedupState.latestGen(spark, dir) === s1.gen,
+      "a refused op must not commit a generation")
     CacheRegistry.releaseAll()
   }
 

@@ -122,6 +122,33 @@ class GraphSpec extends SparkSpec {
       Graph.pageRank(Seq.empty[(Long, Long)].toDF("src", "dst")))
   }
 
+  test("pageRank and labelPropagation with a checkpoint dir: reliable " +
+    "cuts, same result, only the final generation survives") {
+    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L),
+      (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L), (6L, 7L))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    def collectMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ops = Seq[(String, () => Map[Long, Long])](
+      "pageRank" -> (() => collectMap(Graph.pageRank(edges, 4))),
+      "labelPropagation" ->
+        (() => collectMap(Graph.labelPropagation(edges, rounds = 3))))
+    ops.foreach { case (name, op) =>
+      val local = op()
+      val dir = tmpDir(s"graph-ckpt-$name")
+      spark.sparkContext.setCheckpointDir(dir)
+      try {
+        assert(op() === local, s"$name: reliable cuts changed the result")
+        // the cuts must be RELIABLE checkpoints, and every superseded
+        // generation freed: only the final one's rdd-* may remain
+        val gens = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+          .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
+        assert(gens === 1,
+          s"$name: expected 1 surviving checkpoint generation, got $gens")
+      } finally spark.sparkContext.setCheckpointDir(null)
+    }
+  }
+
   test("labelPropagation: hand-traced two-triangle graph converges to one " +
     "label per community in 3 rounds; partitioning-invariant") {
     import spark.implicits._

@@ -2,82 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Skew
-import graft.sources.Bucketing
 
-/** The explicit scale tools: bucketed co-located joins must eliminate the
-  * join-time shuffle, and salted joins must keep exact join semantics
-  * while spreading hot keys.
+/** The explicit scale tools: salted joins must keep exact join semantics
+  * while spreading hot keys, and z-ordered layouts must concentrate range
+  * queries into fewer files.
   */
 class ScaleShapeSpec extends SparkSpec {
   import spark.implicits._
-
-  test("bucketed tables join with no Exchange on either side") {
-    val wh = tmpDir("graft-bucket-wh")
-    val facts = (1 to 1000).map(i => (i.toLong % 100, s"f$i")).toDF("k", "payload")
-    val dims = (0 until 100).map(i => (i.toLong, s"d$i")).toDF("k", "name")
-    Bucketing.writeBucketed(facts, "graft_facts_b", s"$wh/facts", Seq("k"), 4)
-    Bucketing.writeBucketed(dims, "graft_dims_b", s"$wh/dims", Seq("k"), 4)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // forbid broadcast so the co-location claim is what the plan proves
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("graft_facts_b")
-        .join(spark.table("graft_dims_b"), "k")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan.take(400))
-      assert(!plan.contains("Exchange"),
-        s"bucketed join must not shuffle either side: ${plan.take(600)}")
-      assert(joined.count() === 1000)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS graft_facts_b")
-      spark.sql("DROP TABLE IF EXISTS graft_dims_b")
-    }
-  }
-
-  test("bucketed DedupState store: intra-store capped-posting join runs " +
-       "with zero Exchange, and loadCatalog answers equal load") {
-    val docs = graft.sources.Tables.table(spark, sf0001, "documents")
-      .select("doc_id", "text")
-    val corpus = docs.filter(col("doc_id") < 300)
-    val fresh = docs.filter(col("doc_id") >= 300)
-    val dir = tmpDir("dstate-bucket")
-    graft.operators.DedupState.build(spark, corpus, dir,
-      catalog = Some(("graft_dstate_shape", 4)))
-    val store = graft.operators.DedupState.loadCatalog(
-      spark, "graft_dstate_shape", dir)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // the store-resident half of every batch: capping the stored posting
-      // list by the stored dfs — both bucketed+sorted on s, so the whole
-      // corpus-side prepare is Exchange-free at any corpus size
-      val capped = store.posting.join(
-        store.shingleDf.filter(col("df") <= store.params.maxDf).select("s"), "s")
-      val plan = capped.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"store-side capped-posting join must not shuffle: ${plan.take(600)}")
-      assert(capped.count() > 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-    }
-    // and the bucketed snapshot answers the full batch identically to a
-    // generational (parquet) store built from the same corpus
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        BigDecimal(r.getDouble(2)).setScale(9, BigDecimal.RoundingMode.HALF_UP)))
-      .toSet
-    val viaCatalog = key(
-      graft.operators.DedupState.incrementalNearDups(store, fresh))
-    CacheRegistry.releaseAll()
-    val viaParquet = key(graft.operators.DedupState.incrementalNearDups(
-      graft.operators.DedupState.build(spark, corpus, tmpDir("dstate-gen")),
-      fresh))
-    CacheRegistry.releaseAll()
-    Seq("posting", "shingle_df", "signatures", "fingerprints").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_dstate_shape_$t"))
-    assert(viaCatalog === viaParquet)
-  }
 
   test("saltedJoin equals the plain join on skewed data (inner and left)") {
     // hot key 1 carries 80% of the big side

@@ -161,12 +161,16 @@ class StoreCommitsSpec extends SparkSpec {
     CacheRegistry.releaseAll()
   }
 
-  test("no main source mentions a retired old-vintage reader arm") {
+  test("no main source mentions a retired old-vintage reader arm or " +
+       "retired store layout") {
     import scala.jdk.CollectionConverters._
     // split so this file does not match itself if the test tree is ever
     // scanned the same way
     val needles = Seq("upgrade" + "Legacy", "commits" + "_writer",
-      "_stream" + "_instance", "stream" + "InstanceId", "instance" + "Id")
+      "_stream" + "_instance", "stream" + "InstanceId", "instance" + "Id",
+      // the dedup catalog snapshot layout and its bucketed-table writer
+      "load" + "Catalog", "migrate" + "Catalog", "write" + "Snapshot",
+      "Bucket" + "ing")
     val root = java.nio.file.Path.of("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), "run from the repo root")
     val hits = java.nio.file.Files.walk(root).iterator().asScala

@@ -5,8 +5,8 @@ import graft.operators.{DedupState, Hnsw, HnswGeoStore, IVF, StoreDigest}
 
 /** Store-level digest ([[StoreDigest]] — round-17 verdict #4): the
   * one-call replica/migration/restore audit. Pins the verdict's
-  * invariance list — plain ≡ bucketed dedup layouts, catalog →
-  * generational migration, addGeo ≡ buildGeo (monotone ids), and the
+  * invariance list — plain ≡ bucketed dedup layouts, addGeo ≡ buildGeo
+  * (monotone ids), and the
   * compaction-invariant geo relations (vectors/attrs/layout/index) —
   * and that the digest FLIPS on a single mutated row in any relation.
   */
@@ -37,7 +37,7 @@ class StoreDigestSpec extends SparkSpec {
       (id, v, id % 7L)
     }
 
-  test("dedup store digest: plain ≡ bucketed ≡ catalog-migrated, and " +
+  test("dedup store digest: plain ≡ bucketed, and " +
        "one extra admitted doc flips posting + the rollup") {
     val corpus = docs(120).toDF("doc_id", "text")
     val plain = DedupState.build(spark, corpus, tmp("sd-plain"))
@@ -47,13 +47,6 @@ class StoreDigestSpec extends SparkSpec {
     val dBucketed = rows(StoreDigest.digestDedup(spark, bucketed))
     assert(dPlain === dBucketed,
       "bucketed layout must digest as the plain store")
-    // catalog → generational migration digests as its source
-    val catDir = tmp("sd-cat")
-    DedupState.build(spark, corpus, catDir, catalog = Some(("sdcat", 4)))
-    val cat = DedupState.loadCatalog(spark, "sdcat", catDir)
-    val migrated = DedupState.migrateCatalog(spark, cat, tmp("sd-mig"))
-    assert(rows(StoreDigest.digestDedup(spark, migrated)) === dPlain,
-      "migrated catalog store must digest as the generational build")
     // sensitivity: one more doc flips posting and the rollup
     val (_, grown) = DedupState.admit(spark, plain,
       Seq((500L, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"))

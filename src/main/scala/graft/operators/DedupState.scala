@@ -181,7 +181,7 @@ object DedupState {
     require(commits.contains(gen),
       s"generation $gen is not committed at $path " +
         s"(committed: ${commits.keys.toSeq.sorted.mkString(",")})")
-    val base = commits.collect { case (g, true) if g <= gen => g }.max
+    val base = StoreCommits.baseAt(commits, gen)
     val params = knownParams.getOrElse(
       spark.read.parquet(s"$path/params").as[Params].head())
     def live(dir: String): DataFrame =
@@ -301,16 +301,16 @@ object DedupState {
     * which would silently treat old docs as unregistered.
     */
   private def liveDocFps(spark: SparkSession, path: String, base: Long,
-                         gen: Long,
+                         gen: Long, op: String,
                          sel: Option[Column] = None): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     require((base to gen).forall(g => fs.exists(
         new org.apache.hadoop.fs.Path(s"$path/doc_fps/gen=$g"))),
-      s"store at $path predates the (doc_id, h) fingerprint registry " +
-        "(doc_fps/), so forget cannot decide which erased texts' " +
-        "fingerprints are still carried by surviving docs — rebuild the " +
-        "store with build() to migrate")
+      s"$op refused: store at $path predates the (doc_id, h) fingerprint " +
+        "registry (doc_fps/) that it reads, so it cannot tell which " +
+        "texts' fingerprints are still carried by surviving docs — " +
+        "rebuild the store with build() to migrate")
     // `sel` is a bucket-partition filter ([[forget]]'s erasure-keyed
     // prune) — applied before the partition column is dropped so the
     // scan reads only the selected buckets
@@ -341,7 +341,7 @@ object DedupState {
     */
   def compact(spark: SparkSession, store: Store): Store = {
     val commits = committedGens(spark, store.path)
-    val base = commits.collect { case (g, true) if g <= store.gen => g }.max
+    val base = StoreCommits.baseAt(commits, store.gen)
     // the MASKED views are what gets carried forward — a compaction after
     // [[forget]] is the physical erasure point (the new base holds no
     // tombstoned row, and no tombstone dirs are written at it); the
@@ -352,7 +352,7 @@ object DedupState {
       sigs = store.signatures,
       newFps = store.fingerprints.distinct(),
       isBase = true,
-      docFps = liveDocFps(spark, store.path, base, store.gen),
+      docFps = liveDocFps(spark, store.path, base, store.gen, "compact"),
       buckets = store.buckets)
     loadAtWith(spark, store.path, store.gen + 1,
       Some(store.params), Some(store.buckets))
@@ -365,7 +365,7 @@ object DedupState {
     */
   def vacuum(spark: SparkSession, store: Store): Unit = {
     val commits = committedGens(spark, store.path)
-    val base = commits.collect { case (g, true) if g <= store.gen => g }.max
+    val base = StoreCommits.baseAt(commits, store.gen)
     val conf = spark.sparkContext.hadoopConfiguration
     for (g <- commits.keys if g < base;
          dir <- Seq("posting", "fingerprints", "shingle_df", "signatures",
@@ -486,9 +486,8 @@ object DedupState {
       if (!asBase) freshDocFps
       else {
         val commits = committedGens(spark, store.path)
-        val base =
-          commits.collect { case (g, true) if g <= store.gen => g }.max
-        liveDocFps(spark, store.path, base, store.gen)
+        val base = StoreCommits.baseAt(commits, store.gen)
+        liveDocFps(spark, store.path, base, store.gen, "append(asBase = true)")
           .unionByName(freshDocFps)
       }
     writeGeneration(spark, store.path, gen = store.gen + 1,
@@ -615,8 +614,8 @@ object DedupState {
     val p = store.params
     val permHash = PermHashes(p.hashTag)
     val commits = committedGens(spark, store.path)
-    val base = commits.collect { case (g, true) if g <= store.gen => g }.max
-    val registry = liveDocFps(spark, store.path, base, store.gen)
+    val base = StoreCommits.baseAt(commits, store.gen)
+    val registry = liveDocFps(spark, store.path, base, store.gen, "forget")
     // erasure-keyed PARTITION prunes (the bucketed layout's payoff —
     // round-16 verdict #2): the erased-id set is takedown-sized, so the
     // doc-keyed scans read only its buckets; unbucketed stores keep the
@@ -646,7 +645,7 @@ object DedupState {
     val regSel: Option[Column] = delBuckets.map(bs =>
       col("bucket").isin(bs.map(Integer.valueOf): _*))
     val regForDel = regSel.fold(registry)(s =>
-      liveDocFps(spark, store.path, base, store.gen, Some(s)))
+      liveDocFps(spark, store.path, base, store.gen, "forget", Some(s)))
     // registry doc-id column streamed through a broadcast of the (small)
     // erasure set — never a corpus-side shuffle
     val del = graft.CacheRegistry.persist(

@@ -191,7 +191,7 @@ object EmbeddingStore {
     require(commits.contains(epoch),
       s"epoch $epoch is not committed at $path " +
         s"(committed: ${commits.keys.toSeq.sorted.mkString(",")})")
-    val base = commits.collect { case (e, true) if e <= epoch => e }.max
+    val base = StoreCommits.baseAt(commits, epoch)
     Store(path, IVF.load(spark, s"$path/index"),
       spark.read.parquet(s"$path/vectors")
         .filter(col("epoch") >= base && col("epoch") <= epoch).drop("epoch"),
@@ -217,7 +217,7 @@ object EmbeddingStore {
     */
   def vacuum(spark: SparkSession, store: Store): Unit = {
     val commits = StoreCommits.committedMap(spark, store.path, "epoch")
-    val base = commits.collect { case (e, true) if e <= store.epoch => e }.max
+    val base = StoreCommits.baseAt(commits, store.epoch)
     val conf = spark.sparkContext.hadoopConfiguration
     for (e <- commits.keys if e < base;
          dir <- Seq("vectors", "commits")) {

@@ -105,63 +105,41 @@ object Hnsw {
 
   /** Algorithm 2: ef-bounded best-first search of one layer. Returns the
     * ef closest (dist, node) found, ascending.
+    *
+    * `allow` makes it the standard FILTERED-HNSW form (what Lucene's
+    * filtered kNN and the vector DBs ship): the TRAVERSAL stays
+    * unrestricted (filtering the walk itself would disconnect it — paths
+    * to allowed nodes legitimately cross disallowed regions), while a
+    * SECOND ef-bounded result heap collects only nodes with
+    * `allow(node)`. Every visited allowed node is considered for that
+    * heap whether or not it makes the navigation frontier, so the result
+    * is the best-allowed over the whole visited set — strictly better
+    * than post-filtering the unfiltered top-ef, which returns < k once
+    * the filter is selective. Cost is the unfiltered search's (same
+    * frontier, same termination); recall within the allowed subset
+    * decays as selectivity drops below ~1/ef — raise `efSearch` with
+    * 1/selectivity, the documented knob.
+    *
+    * `allow` is None when every node is allowed: then the result heap is
+    * `found` itself. That is the same answer, not an approximation —
+    * with every node allowed the second heap receives exactly `found`'s
+    * pushes and pops whenever the entry set holds ≤ ef elements, and
+    * [[searchGraph]] enters layer 0 with one.
     */
   private def searchLayer(g: Graph, q: Array[Double], nq: Double,
-                          eps: Seq[(Double, Int)], ef: Int,
-                          layer: Int): Vector[(Double, Int)] = {
+                          eps: Seq[(Double, Int)], ef: Int, layer: Int,
+                          allow: Option[Array[Boolean]] = None)
+      : Vector[(Double, Int)] = {
     val visited = new java.util.HashSet[Integer]()
     val cand = scala.collection.mutable.PriorityQueue.empty(byDist.reverse)
     val found = scala.collection.mutable.PriorityQueue.empty(byDist)
-    eps.foreach { case (dd, e) =>
-      if (visited.add(e)) { cand.enqueue((dd, e)); found.enqueue((dd, e)) }
-    }
-    while (cand.nonEmpty) {
-      val (cd, c) = cand.dequeue()
-      if (cd > found.head._1 && found.size >= ef) { cand.clear() }
-      else {
-        val nbrs = g.adj(c)(layer)
-        var i = 0
-        while (i < nbrs.length) {
-          val e = nbrs(i)
-          if (visited.add(e)) {
-            val ed = g.d(q, nq, e)
-            if (found.size < ef || byDist.lt((ed, e), found.head)) {
-              cand.enqueue((ed, e))
-              found.enqueue((ed, e))
-              if (found.size > ef) found.dequeue()
-            }
-          }
-          i += 1
-        }
-      }
-    }
-    found.toVector.sorted(byDist)
-  }
-
-  /** [[searchLayer]] with PREDICATE-AWARE collection — the standard
-    * filtered-HNSW form (what Lucene's filtered kNN and the vector DBs
-    * ship): the TRAVERSAL is unrestricted (filtering the walk itself
-    * would disconnect it — paths to allowed nodes legitimately cross
-    * disallowed regions), while a SECOND ef-bounded result heap collects
-    * only nodes with `ok(node)`. Every visited allowed node is
-    * considered for the result heap regardless of whether it makes the
-    * navigation frontier, so the result is the best-allowed over the
-    * whole visited set — strictly better than post-filtering the
-    * unfiltered top-ef, which returns < k once the filter is selective.
-    * Cost is the UNFILTERED search's (same frontier, same termination);
-    * recall within the allowed subset decays as selectivity drops below
-    * ~1/ef — raise `efSearch` with 1/selectivity, the documented knob.
-    */
-  private def searchLayerFiltered(g: Graph, ok: Array[Boolean],
-                                  q: Array[Double], nq: Double,
-                                  eps: Seq[(Double, Int)], ef: Int,
-                                  layer: Int): Vector[(Double, Int)] = {
-    val visited = new java.util.HashSet[Integer]()
-    val cand = scala.collection.mutable.PriorityQueue.empty(byDist.reverse)
-    val found = scala.collection.mutable.PriorityQueue.empty(byDist)
-    val res = scala.collection.mutable.PriorityQueue.empty(byDist)
+    val ok = allow.orNull
+    val res =
+      if (ok == null) found
+      else scala.collection.mutable.PriorityQueue.empty(byDist)
     def collect(dd: Double, e: Int): Unit =
-      if (ok(e) && (res.size < ef || byDist.lt((dd, e), res.head))) {
+      if (ok != null && ok(e) &&
+          (res.size < ef || byDist.lt((dd, e), res.head))) {
         res.enqueue((dd, e))
         if (res.size > ef) res.dequeue()
       }
@@ -268,32 +246,19 @@ object Hnsw {
   }
 
   /** Algorithm 5 over one shard: greedy descent through the upper
-    * layers, ef-search at layer 0; ascending (dist, local idx).
+    * layers, ef-search at layer 0; ascending (dist, local idx). The
+    * descent is UNFILTERED (navigation); `allow` restricts only the
+    * layer-0 result heap ([[searchLayer]]).
     */
-  private def searchGraph(g: Graph, q: Array[Double],
-                          ef: Int): Vector[(Double, Int)] = {
+  private def searchGraph(g: Graph, q: Array[Double], ef: Int,
+                          allow: Option[Array[Boolean]] = None)
+      : Vector[(Double, Int)] = {
     if (g.n == 0) return Vector.empty
     val nq = norm(q)
     var ep = Vector((g.d(q, nq, g.entry), g.entry))
     var lc = g.levels(g.entry)
     while (lc > 0) { ep = searchLayer(g, q, nq, ep, 1, lc); lc -= 1 }
-    searchLayer(g, q, nq, ep, ef, 0)
-  }
-
-  /** Algorithm 5 with predicate-aware layer-0 collection: the greedy
-    * upper-layer descent is UNFILTERED (navigation), the layer-0 search
-    * collects through [[searchLayerFiltered]]'s allowed-only result
-    * heap. Ascending (dist, local idx) over allowed nodes.
-    */
-  private def searchGraphFiltered(g: Graph, ok: Array[Boolean],
-                                  q: Array[Double],
-                                  ef: Int): Vector[(Double, Int)] = {
-    if (g.n == 0) return Vector.empty
-    val nq = norm(q)
-    var ep = Vector((g.d(q, nq, g.entry), g.entry))
-    var lc = g.levels(g.entry)
-    while (lc > 0) { ep = searchLayer(g, q, nq, ep, 1, lc); lc -= 1 }
-    searchLayerFiltered(g, ok, q, nq, ep, ef, 0)
+    searchLayer(g, q, nq, ep, ef, 0, allow)
   }
 
   /** Rows sampled by [[add]]'s driver-side shard-count guard. */
@@ -612,38 +577,46 @@ object Hnsw {
           val shard = it.head._1
           val rows = scala.collection.mutable.ArrayBuffer.empty[Node]
           while (it.hasNext && it.head._1 == shard) rows += it.next()
-          requireUniqueIds(rows.map(_._2).toSeq, shard)
-          val ids = rows.map(_._2).toArray
-          val vecs = rows.map(_._3.toArray).toArray
-          val g = new Graph(ids, vecs)
-          val local = ids.zipWithIndex.toMap
-          rows.foreach { case (_, id, _, level, nbrs) =>
-            val li = local(id)
-            g.levels(li) = level
-            // dangling neighbor ids are DROPPED, not errors: a store with
-            // tombstoned (deleted) nodes serves with their edges elided
-            // until compaction rebuilds the touched cells. Trade, stated
-            // honestly: the previous map-lookup crash doubled as an
-            // accidental integrity tripwire for a segment file missing
-            // node rows — but deletions make dangling ids a LEGAL state,
-            // parquet footers make silent row loss the unlikely
-            // corruption mode, and a per-shard "is this dangling id a
-            // deletion or corruption" test would need the tombstone set
-            // in every task. The tripwire is re-armed at COMPACTION
-            // instead (ADVICE r16): [[HnswGeoStore]]'s repair arm
-            // asserts every id a rebuilt cell references has a stored
-            // row in the raw epoch — where tombstoned nodes still exist
-            // — so row loss fails loudly at the next compaction rather
-            // than never
-            g.adj(li) = nbrs.map(layer => scala.collection.mutable
-              .ArrayBuffer(layer.flatMap(local.get): _*)).toArray
-          }
-          // stored entry contract: the max-level node, min id on ties —
-          // exactly what buildGraph ends with (levels only ever grow)
-          g.entry = ids.indices.minBy(i => (-g.levels(i), ids(i)))
-          f(shard, g)
+          f(shard, materializeGraph(rows, shard))
         }
       }
+  }
+
+  /** Rebuild one shard's graph from its stored rows, sorted by vec_id
+    * (duplicate ids fail loudly).
+    */
+  private def materializeGraph(
+      gRows: scala.collection.mutable.ArrayBuffer[Node],
+      shard: Long): Graph = {
+    requireUniqueIds(gRows.map(_._2).toSeq, shard)
+    val ids = gRows.map(_._2).toArray
+    val vecs = gRows.map(_._3.toArray).toArray
+    val g = new Graph(ids, vecs)
+    val local = ids.zipWithIndex.toMap
+    gRows.zipWithIndex.foreach { case ((_, _, _, level, nbrs), li) =>
+      g.levels(li) = level
+      // dangling neighbor ids are DROPPED, not errors: a store with
+      // tombstoned (deleted) nodes serves with their edges elided until
+      // compaction rebuilds the touched cells. Trade, stated honestly:
+      // the previous map-lookup crash doubled as an accidental integrity
+      // tripwire for a segment file missing node rows — but deletions
+      // make dangling ids a LEGAL state, parquet footers make silent row
+      // loss the unlikely corruption mode, and a per-shard "is this
+      // dangling id a deletion or corruption" test would need the
+      // tombstone set in every task. The tripwire is re-armed at
+      // COMPACTION instead (ADVICE r16): [[HnswGeoStore]]'s repair arm
+      // asserts every id a rebuilt cell references has a stored row in
+      // the raw epoch — where tombstoned nodes still exist — so row loss
+      // fails loudly at the next compaction rather than never
+      g.adj(li) = nbrs.map(layer => scala.collection.mutable
+        .ArrayBuffer(layer.flatMap(local.get): _*)).toArray
+    }
+    // stored entry contract: the max-level node, min id on ties —
+    // exactly what buildGraph ends with (levels only ever grow)
+    g.entry =
+      if (g.n == 0) -1
+      else ids.indices.minBy(i => (-g.levels(i), ids(i)))
+    g
   }
 
   /** Build the sharded index: one hash shuffle, one graph build per
@@ -918,7 +891,8 @@ object Hnsw {
       val local = ids.zipWithIndex.toMap
       oldRows.zipWithIndex.foreach { case ((_, _, _, level, nbrs), li) =>
         g.levels(li) = level
-        // deleted-node tolerance: see the dangling-id note in perShard
+        // deleted-node tolerance: see the dangling-id note in
+        // materializeGraph
         g.adj(li) = nbrs.map(layer => scala.collection.mutable
           .ArrayBuffer(layer.flatMap(local.get): _*)).toArray
       }
@@ -980,28 +954,8 @@ object Hnsw {
     * stored vector with the same id.
     */
   def batchNeighbors(store: DataFrame, probes: DataFrame, k: Int,
-                     efSearch: Int = 64, parallelism: Int = 32): DataFrame = {
-    require(k >= 1 && efSearch >= k && parallelism >= 1,
-      s"need efSearch >= k >= 1, got k=$k efSearch=$efSearch " +
-        s"parallelism=$parallelism")
-    val spark = store.sparkSession
-    import spark.implicits._
-    val st = graft.CacheRegistry.persist(
-      store.select(col("shard"), col("vec_id"), col("vec"), col("level"),
-        col("nbrs")))
-    val shardIds = st.select(col("shard")).distinct()
-    val nShards = shardIds.count()
-    if (nShards == 0L)
-      return spark.emptyDataset[(Long, Long, Double, Int)]
-        .toDF("probe_id", "vec_id", "cos", "rank")
-    val pr0 = probes.select(col("probe_id").as("vec_id"),
-      col("embedding").cast("array<double>").as("vec"))
-    requireCleanProbes(pr0,
-      st.select(size(col("vec"))).head().getInt(0))
-    val numParts = math.max(parallelism, math.min(nShards, 4096L).toInt)
-    val pr = asProbes(pr0.crossJoin(broadcast(shardIds)))
-    rankTopK(batchScan(st.unionByName(pr), numParts, efSearch), k)
-  }
+                     efSearch: Int = 64, parallelism: Int = 32): DataFrame =
+    serve(store, probes, None, k, efSearch, parallelism)
 
   /** FILTERED batch ANN serving — attribute-predicated top-k ("nearest
     * neighbors WHERE lang = 'en'"), the standard vector-DB surface that
@@ -1013,13 +967,14 @@ object Hnsw {
     * side pays one equi-join (broadcast when the set is small, one
     * honest shuffle otherwise) to pin an `ok` flag on each graph row.
     * Inside each shard the predicate is pushed INTO the graph search
-    * ([[searchLayerFiltered]]): traversal unrestricted — paths to
-    * allowed nodes cross disallowed regions — while an allowed-only
-    * result heap collects the best-allowed over the whole visited set.
-    * Search cost equals the unfiltered search's; recall within the
-    * allowed subset decays once selectivity drops below ~1/efSearch —
-    * raise `efSearch` proportionally to 1/selectivity (the knob every
-    * filtered-HNSW deployment documents).
+    * ([[searchLayer]]'s `allow` array, the one search kernel):
+    * traversal unrestricted — paths to allowed nodes cross disallowed
+    * regions — while an allowed-only result heap collects the
+    * best-allowed over the whole visited set. Search cost equals the
+    * unfiltered search's; recall within the allowed subset decays once
+    * selectivity drops below ~1/efSearch — raise `efSearch`
+    * proportionally to 1/selectivity (the knob every filtered-HNSW
+    * deployment documents).
     *
     * Output contract is [[batchNeighbors]]'s — (probe_id, vec_id, cos,
     * rank), rank 1..k over allowed nodes only; probes with fewer than k
@@ -1028,20 +983,31 @@ object Hnsw {
   def batchNeighborsFiltered(store: DataFrame, probes: DataFrame,
                              allowed: DataFrame, k: Int,
                              efSearch: Int = 64,
-                             parallelism: Int = 32): DataFrame = {
+                             parallelism: Int = 32): DataFrame =
+    serve(store, probes, Some(allowed), k, efSearch, parallelism)
+
+  /** The one serving core behind [[batchNeighbors]] (`allowed` None:
+    * every graph row flagged `ok`, no join) and [[batchNeighborsFiltered]]
+    * (the flag pinned by one left equi-join on the admissible ids).
+    */
+  private def serve(store: DataFrame, probes: DataFrame,
+                    allowed: Option[DataFrame], k: Int, efSearch: Int,
+                    parallelism: Int): DataFrame = {
     require(k >= 1 && efSearch >= k && parallelism >= 1,
       s"need efSearch >= k >= 1, got k=$k efSearch=$efSearch " +
         s"parallelism=$parallelism")
     val spark = store.sparkSession
     import spark.implicits._
-    val okCol = allowed.select(col("vec_id")).distinct()
-      .withColumn("__ok", lit(true))
-    val st = graft.CacheRegistry.persist(
-      store.select(col("shard"), col("vec_id"), col("vec"), col("level"),
-          col("nbrs"))
-        .join(okCol, Seq("vec_id"), "left")
+    val rows = store.select(col("shard"), col("vec_id"), col("vec"),
+      col("level"), col("nbrs"))
+    val st = graft.CacheRegistry.persist(allowed.fold(
+      rows.withColumn("ok", lit(true))) { a =>
+      val okIds = a.select(col("vec_id")).distinct()
+        .withColumn("__ok", lit(true))
+      rows.join(okIds, Seq("vec_id"), "left")
         .select(col("shard"), col("vec_id"), col("vec"), col("level"),
-          col("nbrs"), coalesce(col("__ok"), lit(false)).as("ok")))
+          col("nbrs"), coalesce(col("__ok"), lit(false)).as("ok"))
+    })
     val shardIds = st.select(col("shard")).distinct()
     val nShards = shardIds.count()
     if (nShards == 0L)
@@ -1053,60 +1019,50 @@ object Hnsw {
       st.select(size(col("vec"))).head().getInt(0))
     val numParts = math.max(parallelism, math.min(nShards, 4096L).toInt)
     val pr = asProbes(pr0.crossJoin(broadcast(shardIds)))
-      .withColumn("ok", lit(false))
-    rankTopK(batchScanFiltered(st.unionByName(pr), numParts, efSearch), k)
+    rankTopK(batchScan(st, pr, numParts, efSearch), k)
   }
 
-  /** [[batchScan]] with the per-node allow flag riding along — shared by
-    * [[batchNeighborsFiltered]] and the geo store's routed filtered
-    * serving ([[HnswGeoStore.batchNeighborsFiltered]]). `tagged` =
-    * flagged store rows ∪ probe rows (ok = false, never read); same
-    * exchange/sort/lazy-scan shape, candidates restricted to allowed
-    * nodes by [[searchGraphFiltered]]'s collection heap.
+  /** Graph row + its allow flag — the one wire shape of every scan.
+    * Unfiltered callers flag every row `ok`; filtered and tombstoned
+    * ones flag the rows a result may return.
     */
-  private[operators] def batchScanFiltered(tagged: DataFrame, numParts: Int,
-                                           efSearch: Int): DataFrame = {
-    val spark = tagged.sparkSession
+  private[graft] type FNode =
+    (Long, Long, Seq[Double], Int, Seq[Seq[Long]], Boolean)
+
+  /** Union the flagged graph rows (shard, vec_id, vec, level, nbrs, ok)
+    * with [[asProbes]] rows (level = −1, each already carrying the shard
+    * it must search; their `ok` is never read), one hash exchange on
+    * `shard` and one in-partition sort putting each shard's graph before
+    * its probes — the input shape of [[shardScan]].
+    */
+  private def scanInput(graph: DataFrame, probes: DataFrame,
+                        numParts: Int): Dataset[FNode] = {
+    val spark = graph.sparkSession
     import spark.implicits._
-    tagged
+    graph.unionByName(probes.withColumn("ok", lit(false)))
       .repartition(numParts, col("shard"))
       .sortWithinPartitions(col("shard"),
         (col("level") < 0).cast("int"), col("vec_id"))
       .as[FNode]
-      .mapPartitions { rows =>
-        shardScanFiltered(rows) { (g, ok, pid, q, nq) =>
-          if (nq == 0.0 || g.n == 0) Iterator.empty
-          else searchGraphFiltered(g, ok, q, efSearch).iterator.collect {
-            case (_, li) if g.norms(li) != 0.0 =>
-              (pid, g.ids(li), exactCos(g, q, nq, li))
-          }
-        }
-      }
-      .toDF("probe_id", "vec_id", "cos")
-      .select(col("probe_id"), col("vec_id"), round(col("cos"), 6).as("cos"))
   }
 
-  /** Candidate scan shared by [[batchNeighbors]] and the geo store's
-    * routed batch search ([[HnswGeoStore.batchNeighbors]]): `tagged` =
-    * store rows ∪ probe rows (each probe already carrying the shard it
-    * must search), one hash exchange + in-partition sort, [[shardScan]]'s
-    * lazy one-graph-at-a-time pass, exact cosine re-score, 1e-6
-    * rounding. Out: (probe_id, vec_id, cos) candidates — ≤ efSearch per
-    * (probe, shard) pair.
+  /** Candidate scan shared by [[batchNeighbors]],
+    * [[batchNeighborsFiltered]] and the geo store's routed serving
+    * ([[HnswGeoStore.batchNeighbors]]): [[scanInput]]'s exchange + sort,
+    * [[shardScan]]'s lazy one-graph-at-a-time pass, exact cosine
+    * re-score, 1e-6 rounding. Out: (probe_id, vec_id, cos) candidates
+    * over `ok` nodes — ≤ efSearch per (probe, shard) pair.
     */
-  private[operators] def batchScan(tagged: DataFrame, numParts: Int,
+  private[operators] def batchScan(graph: DataFrame, probes: DataFrame,
+                                   numParts: Int,
                                    efSearch: Int): DataFrame = {
-    val spark = tagged.sparkSession
+    val spark = graph.sparkSession
     import spark.implicits._
-    tagged
-      .repartition(numParts, col("shard"))
-      .sortWithinPartitions(col("shard"),
-        (col("level") < 0).cast("int"), col("vec_id"))
-      .as[Node]
+    scanInput(graph, probes, numParts)
       .mapPartitions { rows =>
-        shardScan(rows) { (g, pid, q, nq) =>
+        shardScan(rows) { (g, allow, pid, q, nq) =>
           if (nq == 0.0 || g.n == 0) Iterator.empty
-          else searchGraph(g, q, efSearch).iterator.collect {
+          else searchGraph(g, q, efSearch, allow).iterator.collect {
             case (_, li) if g.norms(li) != 0.0 =>
               (pid, g.ids(li), exactCos(g, q, nq, li))
           }
@@ -1126,17 +1082,22 @@ object Hnsw {
           .orderBy(col("cos").desc, col("vec_id").asc)))
       .filter(col("rank") <= k)
 
-  /** The streaming task body shared by [[nearDupPairs]] and
-    * [[nearDupPairsRouted]]: rows arrive SORTED by (shard, role,
-    * vec_id) — graph rows (level ≥ 0) of a shard first, then that
-    * shard's probes (level = −1) — and are consumed as a one-pass lazy
-    * stream: each shard's graph is materialized (bounded by the shard
-    * sizing policy), its probes are then pulled ONE AT A TIME from the
-    * iterator and searched, and the graph is dropped before the next
-    * shard's rows are touched. A task therefore holds AT MOST one shard
-    * graph plus one in-flight probe, regardless of how many (shard ×
-    * probe) groups hash into its partition — the memory contract
-    * HnswLazyScanSpec pins by feeding an instrumented iterator.
+  /** The streaming task body of every near-dup pair scan ([[pairScan]]):
+    * rows arrive SORTED by (shard, role, vec_id) — graph rows (level ≥ 0)
+    * of a shard first, then that shard's probes (level = −1) — and are
+    * consumed as a one-pass lazy stream: each shard's graph is
+    * materialized (bounded by the shard sizing policy), its probes are
+    * then pulled ONE AT A TIME from the iterator and searched, and the
+    * graph is dropped before the next shard's rows are touched. A task
+    * therefore holds AT MOST one shard graph plus one in-flight probe,
+    * regardless of how many (shard × probe) groups hash into its
+    * partition — the memory contract HnswSpec pins by feeding an
+    * instrumented iterator.
+    *
+    * Graph rows flagged `ok = false` (a tombstoned node) stay ROUTABLE —
+    * traversal walks their edges exactly as live nodes', so recall does
+    * not narrow with the deleted fraction — but the result heap never
+    * returns one ([[searchLayer]]'s `allow`).
     *
     * Emitted candidates are re-scored with the exact cosine (the block
     * route's arithmetic: sequential dot, norm-product divide) and
@@ -1144,12 +1105,12 @@ object Hnsw {
     * rounding; the contractual filter on the ROUNDED value happens in
     * the caller).
     */
-  private[graft] def pairStream(rows0: Iterator[Node], efSearch: Int,
+  private[graft] def pairStream(rows0: Iterator[FNode], efSearch: Int,
                                 margin: Double)
       : Iterator[(Long, Long, Double)] =
-    shardScan(rows0) { (g, pid, q, nq) =>
+    shardScan(rows0) { (g, allow, pid, q, nq) =>
       if (nq == 0.0 || g.n == 0) Iterator.empty
-      else searchGraph(g, q, efSearch).iterator.flatMap {
+      else searchGraph(g, q, efSearch, allow).iterator.flatMap {
         case (_, li) =>
           val cid = g.ids(li)
           if (cid == pid || g.norms(li) == 0.0) Iterator.empty
@@ -1162,111 +1123,17 @@ object Hnsw {
       }
     }
 
-  /** [[pairStream]] over FLAGGED rows — the traversal-only-tombstone
-    * pair scan (round-16 verdict #4): disallowed (tombstoned) nodes
-    * stay ROUTABLE — traversal walks their edges exactly as live
-    * nodes', so recall does not narrow with the deleted fraction — but
-    * the collection heap ([[searchLayerFiltered]]) never returns one,
-    * and only live vectors probe (the caller unions masked probes).
+  /** The lazy shard-scan skeleton behind [[batchScan]] and
+    * [[pairStream]]: materialize ONE shard's graph (and its parallel
+    * allow array) from the sorted iterator, stream that shard's probes
+    * one at a time through `f`, drop the graph, move to the next shard.
+    * The allow array is None when every graph row of the shard is `ok` —
+    * read from the shard's own flags — so unfiltered scans search with
+    * the plain result heap.
     */
-  private[graft] def pairStreamFiltered(rows0: Iterator[FNode],
-                                        efSearch: Int, margin: Double)
-      : Iterator[(Long, Long, Double)] =
-    shardScanFiltered(rows0) { (g, ok, pid, q, nq) =>
-      if (nq == 0.0 || g.n == 0) Iterator.empty
-      else searchGraphFiltered(g, ok, q, efSearch).iterator.flatMap {
-        case (_, li) =>
-          val cid = g.ids(li)
-          if (cid == pid || g.norms(li) == 0.0) Iterator.empty
-          else {
-            val cos = exactCos(g, q, nq, li)
-            if (cos >= margin)
-              Iterator.single((math.min(pid, cid), math.max(pid, cid), cos))
-            else Iterator.empty
-          }
-      }
-    }
-
-  /** [[pairScan]] over flagged rows ([[pairStreamFiltered]]) — same
-    * exchange/sort/round/threshold tail.
-    */
-  private[operators] def pairScanFiltered(tagged: DataFrame, numParts: Int,
-                                          threshold: Double,
-                                          efSearch: Int): DataFrame = {
-    val spark = tagged.sparkSession
-    import spark.implicits._
-    val margin = threshold - 5e-7
-    tagged
-      .repartition(numParts, col("shard"))
-      .sortWithinPartitions(col("shard"),
-        (col("level") < 0).cast("int"), col("vec_id"))
-      .as[FNode]
-      .mapPartitions(it => pairStreamFiltered(it, efSearch, margin))
-      .toDF("i", "j", "cos")
-      .select(col("i"), col("j"), round(col("cos"), 6).as("cos"))
-      .filter(col("cos") >= threshold)
-      .distinct()
-  }
-
-  /** The lazy shard-scan skeleton behind [[pairStream]] and the
-    * batch-search scan: materialize ONE shard's graph from the sorted
-    * iterator, stream that shard's probes one at a time through `f`,
-    * drop the graph, move to the next shard.
-    */
-  private def materializeGraph(
-      gRows: scala.collection.mutable.ArrayBuffer[Node],
-      shard: Long): Graph = {
-    requireUniqueIds(gRows.map(_._2).toSeq, shard)
-    val ids = gRows.map(_._2).toArray
-    val vecs = gRows.map(_._3.toArray).toArray
-    val g = new Graph(ids, vecs)
-    val local = ids.zipWithIndex.toMap
-    gRows.zipWithIndex.foreach { case ((_, _, _, level, nbrs), li) =>
-      g.levels(li) = level
-      // deleted-node tolerance: see the dangling-id note in perShard
-      g.adj(li) = nbrs.map(layer => scala.collection.mutable
-        .ArrayBuffer(layer.flatMap(local.get): _*)).toArray
-    }
-    g.entry =
-      if (g.n == 0) -1
-      else ids.indices.minBy(i => (-g.levels(i), ids(i)))
-    g
-  }
-
-  private[operators] def shardScan[T](rows0: Iterator[Node])(
-      f: (Graph, Long, Array[Double], Double) => Iterator[T]): Iterator[T] = {
-    val it = rows0.buffered
-    Iterator.continually(()).takeWhile(_ => it.hasNext).flatMap { _ =>
-      val shard = it.head._1
-      val gRows = scala.collection.mutable.ArrayBuffer.empty[Node]
-      while (it.hasNext && it.head._1 == shard && it.head._4 >= 0)
-        gRows += it.next()
-      val g = materializeGraph(gRows, shard)
-      val probes = new Iterator[Node] {
-        def hasNext: Boolean = it.hasNext && it.head._1 == shard
-        def next(): Node = it.next()
-      }
-      probes.flatMap { case (_, pid, pv, _, _) =>
-        val q = pv.toArray
-        f(g, pid, q, norm(q))
-      }
-    }
-  }
-
-  /** Graph row + per-node allow flag — the filtered serving scan's wire
-    * shape ([[batchNeighborsFiltered]]). Probes ride with `ok = false`
-    * (their flag is never read).
-    */
-  private[operators] type FNode =
-    (Long, Long, Seq[Double], Int, Seq[Seq[Long]], Boolean)
-
-  /** [[shardScan]] over flagged rows: one shard's graph (plus its
-    * parallel `ok` array) at a time, probes streamed one by one —
-    * the same single-graph memory contract.
-    */
-  private def shardScanFiltered[T](rows0: Iterator[FNode])(
-      f: (Graph, Array[Boolean], Long, Array[Double], Double) => Iterator[T])
-      : Iterator[T] = {
+  private def shardScan[T](rows0: Iterator[FNode])(
+      f: (Graph, Option[Array[Boolean]], Long, Array[Double], Double) =>
+        Iterator[T]): Iterator[T] = {
     val it = rows0.buffered
     Iterator.continually(()).takeWhile(_ => it.hasNext).flatMap { _ =>
       val shard = it.head._1
@@ -1278,14 +1145,14 @@ object Hnsw {
         okBuf += r._6
       }
       val g = materializeGraph(gRows, shard)
-      val ok = okBuf.toArray
+      val allow = if (okBuf.forall(identity)) None else Some(okBuf.toArray)
       val probes = new Iterator[FNode] {
         def hasNext: Boolean = it.hasNext && it.head._1 == shard
         def next(): FNode = it.next()
       }
       probes.flatMap { case (_, pid, pv, _, _, _) =>
         val q = pv.toArray
-        f(g, ok, pid, q, norm(q))
+        f(g, allow, pid, q, norm(q))
       }
     }
   }
@@ -1302,26 +1169,21 @@ object Hnsw {
     dot / (nq * g.norms(li))
   }
 
-  /** Shuffle-and-scan tail shared by the two near-dup routes: `tagged` =
-    * store rows (level ≥ 0) unioned with probe rows (level = −1, each
-    * already carrying the `shard` it must search); one hash exchange on
-    * `shard`, one in-partition sort putting each shard's graph before
-    * its probes, then [[pairStream]]'s lazy scan. The trailing
-    * `distinct()` — pair-count-sized, the only other global exchange —
-    * collapses the ≤ 2 directions each unordered pair can be found in
-    * (both directions compute bitwise-identical cosines: commutative
-    * products, same accumulation order).
+  /** Shuffle-and-scan tail of every near-dup route: [[scanInput]]'s
+    * exchange + sort of the flagged graph rows and the probes, then
+    * [[pairStream]]'s lazy scan. The trailing `distinct()` —
+    * pair-count-sized, the only other global exchange — collapses the
+    * ≤ 2 directions each unordered pair can be found in (both directions
+    * compute bitwise-identical cosines: commutative products, same
+    * accumulation order).
     */
-  private[operators] def pairScan(tagged: DataFrame, numParts: Int, threshold: Double,
-                       efSearch: Int): DataFrame = {
-    val spark = tagged.sparkSession
+  private[operators] def pairScan(graph: DataFrame, probes: DataFrame,
+                                  numParts: Int, threshold: Double,
+                                  efSearch: Int): DataFrame = {
+    val spark = graph.sparkSession
     import spark.implicits._
     val margin = threshold - 5e-7
-    tagged
-      .repartition(numParts, col("shard"))
-      .sortWithinPartitions(col("shard"),
-        (col("level") < 0).cast("int"), col("vec_id"))
-      .as[Node]
+    scanInput(graph, probes, numParts)
       .mapPartitions(it => pairStream(it, efSearch, margin))
       .toDF("i", "j", "cos")
       .select(col("i"), col("j"), round(col("cos"), 6).as("cos"))
@@ -1477,7 +1339,8 @@ object Hnsw {
     val numParts = math.max(parallelism, math.min(nShards, 4096L).toInt)
     val probes = asProbes(st.select(col("vec_id"), col("vec"))
       .crossJoin(broadcast(shardIds)))
-    pairScan(st.unionByName(probes), numParts, threshold, efSearch)
+    pairScan(st.withColumn("ok", lit(true)), probes, numParts, threshold,
+      efSearch)
   }
 
   /** Fixed probe fan-out for [[nearDupPairsRouted]] — the constant that
@@ -1575,7 +1438,8 @@ object Hnsw {
         .withColumn("__cell",
           explode(IVF.probeExpr(col("vec"), index, nProbe))),
       "__cell", layout, index.k, routing, nProbeSub).drop("__cell"))
-    pairScan(st.unionByName(probes), numParts, threshold, efSearch)
+    pairScan(st.withColumn("ok", lit(true)), probes, numParts, threshold,
+      efSearch)
   }
 
   /** Cross-corpus near-duplicate pairs through the geometry-routed
@@ -1629,7 +1493,8 @@ object Hnsw {
       "__cell", knownLayout.getOrElse(layoutOfStore(st, index)),
       index.k))
     val numParts = math.max(parallelism, math.min(index.k, 4096))
-    pairScan(st.unionByName(prs), numParts, threshold, efSearch)
+    pairScan(st.withColumn("ok", lit(true)), prs, numParts, threshold,
+      efSearch)
   }
 
   /** Driver-side sampled guard that `store` is a [[buildGeo]] output for

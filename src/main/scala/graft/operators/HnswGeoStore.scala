@@ -444,7 +444,7 @@ object HnswGeoStore {
     require(commits.contains(epoch),
       s"epoch $epoch is not committed at $path " +
         s"(committed: ${commits.keys.toSeq.sorted.mkString(",")})")
-    val base = commits.collect { case (e, true) if e <= epoch => e }.max
+    val base = StoreCommits.baseAt(commits, epoch)
     val segs = spark.read.parquet(s"$path/segments")
       .filter(col("epoch") >= base && col("epoch") <= epoch)
     val (index, layout, cap, routing, subRouted) = known match {
@@ -1141,7 +1141,7 @@ object HnswGeoStore {
     */
   def vacuum(spark: SparkSession, store: Store): Unit = {
     val commits = StoreCommits.committedMap(spark, store.path, "epoch")
-    val base = commits.collect { case (e, true) if e <= store.epoch => e }.max
+    val base = StoreCommits.baseAt(commits, store.epoch)
     for (e <- commits.keys if e < base;
          dir <- Seq("commits", "segments", "index",
            "drift", "stats", "attrs", "tombstones", "layout")) {
@@ -1184,9 +1184,10 @@ object HnswGeoStore {
     * fraction the way the masked read's elided edges did — and the
     * per-row `__live` flag (epoch-aware, exactly [[loadAt]]'s masking
     * rule: a re-admitted id's newer row is live) is what excludes them
-    * from every result heap ([[Hnsw.searchLayerFiltered]]). None when
-    * the live range has no tombstones — the deletion-free fast path
-    * keeps its exact plans and the cheaper unfiltered scan.
+    * from every result heap (the one search kernel's allowed-only
+    * result heap, [[Hnsw.searchLayer]]). None when the live range has no
+    * tombstones — the deletion-free fast path reads the masked segments
+    * with every row `ok`.
     */
   private def flaggedSegments(spark: SparkSession,
                               store: Store): Option[DataFrame] =
@@ -1253,30 +1254,110 @@ object HnswGeoStore {
   def batchNeighbors(store: Store, probes: DataFrame, k: Int,
                      efSearch: Int = 64, nProbe: Int = 0,
                      parallelism: Int = 32,
-                     nProbeSub: Int = 0): DataFrame = {
+                     nProbeSub: Int = 0): DataFrame =
+    routedServe(store, probes, k, efSearch, nProbe, parallelism,
+      nProbeSub, None)
+
+  /** ROUTED + FILTERED batch serving — [[batchNeighbors]] with the
+    * predicate pushed INTO each cell graph's search
+    * ([[Hnsw.batchNeighborsFiltered]]'s allowed-only collection heap):
+    * "nearest neighbors WHERE lang = 'en'" against the standing
+    * segmented store, the deployment combination (geometry bounds WHICH
+    * graphs a probe touches, the predicate bounds WHAT they may
+    * return). `allowed` is the pre-evaluated admissible vec_id set —
+    * one equi-join pins the flag on the store pass, which stays pruned
+    * to the probed cells. Same recall caveats as both parents: the
+    * routing envelope on which cells are probed, and the ~1/efSearch
+    * selectivity decay on what the filtered heap collects — raise
+    * `efSearch` with 1/selectivity.
+    */
+  def batchNeighborsFiltered(store: Store, probes: DataFrame,
+                             allowed: DataFrame, k: Int,
+                             efSearch: Int = 64, nProbe: Int = 0,
+                             parallelism: Int = 32,
+                             nProbeSub: Int = 0): DataFrame =
+    routedServe(store, probes, k, efSearch, nProbe, parallelism,
+      nProbeSub, Some(_ => allowed.select(col("vec_id")).distinct()))
+
+  /** ROUTED + FILTERED serving with the predicate evaluated by the STORE
+    * ITSELF — [[batchNeighborsFiltered]] without the caller-built
+    * allowed-id frame: `predicate` is a Column expression over the
+    * attribute payload columns written beside the vectors at
+    * [[build]]/[[append]] time, and it is evaluated on the attrs
+    * relation AFTER the probed-cell prune — so a micro-batch's filter
+    * work is probed-cells-sized, where the pre-evaluated-frame form
+    * costs one corpus-sized attribute join per query when the attribute
+    * table lives outside the store. Everything downstream (allowed-only
+    * result heap, recall-vs-selectivity knob) is
+    * [[batchNeighborsFiltered]]'s; a plain store (no payloads) fails
+    * loudly.
+    */
+  def batchNeighborsFilteredExpr(store: Store, probes: DataFrame,
+                                 predicate: org.apache.spark.sql.Column,
+                                 k: Int, efSearch: Int = 64,
+                                 nProbe: Int = 0,
+                                 parallelism: Int = 32,
+                                 nProbeSub: Int = 0): DataFrame = {
+    val spark = store.segments.sparkSession
+    require(attrsPresent(spark, store),
+      s"store at ${store.path} carries no attribute payloads — build " +
+        "or append with payload columns, or pre-evaluate the " +
+        "predicate and use batchNeighborsFiltered")
+    val at = attrsRawOf(spark, store)
+    val hasUpd = hasAttrUpdates(spark, store)
+    routedServe(store, probes, k, efSearch, nProbe, parallelism,
+      nProbeSub, Some { probedCells =>
+        // the predicate runs INSIDE the probed-cell-pruned attr scan:
+        // vec_ids are unique across live epochs (the append-time id
+        // guard) and stale update payloads are resolved LATEST-WINS
+        // AFTER the prune, so the resolution window — like the
+        // predicate — runs probed-cells-sized. Attrs are keyed by
+        // PLAIN cell (sub-sharding lives only in the segment graph
+        // rows), so a capped store's probed shard ids project down to
+        // attr space first: cell = (shard % stride) % k under the
+        // epoch stride
+        val attrCells =
+          if (store.layout.isEmpty) probedCells
+          else probedCells.select(
+            (col("shard") - pmod(col("shard"), lit(CellStride)) +
+              pmod(pmod(col("shard"), lit(CellStride)),
+                lit(store.index.k.toLong))).as("shard")).distinct()
+        resolveLatestAttrs(
+            at.join(broadcast(attrCells), Seq("shard"), "left_semi"),
+            hasUpd)
+          .filter(predicate).select(col("vec_id"))
+      })
+  }
+
+  /** The one routed serving core behind [[batchNeighbors]],
+    * [[batchNeighborsFiltered]] and [[batchNeighborsFilteredExpr]]: probe
+    * explode (cells × epochs), probed-cell prune of the store pass, the
+    * `ok` flag pinned as `__live && allowed` — each absent side read as
+    * true — then [[Hnsw.batchScan]]. The allowed provider sees the
+    * probed-cell set so it can prune its own scan
+    * ([[batchNeighborsFilteredExpr]]).
+    *
+    * Tombstoned range → serve from the RAW graphs ([[flaggedSegments]]):
+    * deleted nodes stay routable, never returned — recall parity with
+    * the pre-delete store instead of the masked read's edge-elision
+    * narrowing. Clean range → the masked segments with every row live.
+    */
+  private def routedServe(store: Store, probes: DataFrame, k: Int,
+                          efSearch: Int, nProbe: Int, parallelism: Int,
+                          nProbeSub: Int,
+                          allowedOf: Option[DataFrame => DataFrame])
+      : DataFrame = {
     require(k >= 1 && efSearch >= k && parallelism >= 1,
       s"need efSearch >= k >= 1, got k=$k efSearch=$efSearch " +
         s"parallelism=$parallelism")
     val spark = store.segments.sparkSession
-    import spark.implicits._
-    // tombstoned range → traversal-only tombstones: serve from the RAW
-    // graphs through the filtered heap with the LIVE ids as the
-    // allowed set (deleted nodes stay routable, never returned — recall
-    // parity with the pre-delete store instead of the masked read's
-    // edge-elision narrowing); clean range → the exact unfiltered plans
-    val flagged0 = flaggedSegments(spark, store)
-    if (flagged0.isDefined)
-      return filteredServe(store, probes, k, efSearch, nProbe,
-        parallelism, flagged0, nProbeSub)(probedCells =>
-        store.segments
-          .join(broadcast(probedCells), Seq("shard"), "left_semi")
-          .select(col("vec_id")))
+    val flagged = flaggedSegments(spark, store)
     // NOT persisted (guide §5): the view has exactly one full consumer —
     // the probed-cell-pruned scan below. Persisting wrote the whole
     // corpus into the block manager per serve for zero reuse (and
     // defeated the scan's column pruning at scale).
-    val st = store.segments.select(col("shard"), col("vec_id"), col("vec"),
-      col("level"), col("nbrs"))
+    val st = flagged.getOrElse(store.segments.select(col("shard"),
+      col("vec_id"), col("vec"), col("level"), col("nbrs")))
     // the store's dim is the index's centroid dim (every segment row was
     // assigned under it) — the old one-row segment probe was a whole
     // Spark job per serve for a scalar the driver already holds; a
@@ -1305,7 +1386,18 @@ object HnswGeoStore {
     // filter degenerates to a cheap broadcast membership no-op
     val probedCells = graft.CacheRegistry.persist(
       pr.select(col("shard")).distinct())
+    // prune FIRST, flag SECOND: the ok join runs probed-cells-sized on
+    // the store side instead of over the whole segment range. A
+    // tombstoned node is allowed only if it is BOTH caller-allowed and
+    // live — routable either way
     val stProbed = st.join(broadcast(probedCells), Seq("shard"), "left_semi")
+    val live = if (flagged.isDefined) col("__live") else lit(true)
+    val graph = allowedOf.fold(stProbed.withColumn("ok", live)) { f =>
+      stProbed.join(f(probedCells).withColumn("__ok", lit(true)),
+          Seq("vec_id"), "left")
+        .withColumn("ok", live && coalesce(col("__ok"), lit(false)))
+    }.select(col("shard"), col("vec_id"), col("vec"), col("level"),
+      col("nbrs"), col("ok"))
     // partitions sized by the PROBED shard count, not k·epochs: a
     // micro-batch probing a handful of cells schedules ~parallelism
     // tasks instead of a per-batch k·epochs task floor (round-16
@@ -1314,141 +1406,18 @@ object HnswGeoStore {
     // on the persisted probe frame
     val numParts = math.max(parallelism,
       math.min(probedCells.count(), 4096L).toInt)
-    Hnsw.rankTopK(
-      Hnsw.batchScan(stProbed.unionByName(pr), numParts, efSearch), k)
+    Hnsw.rankTopK(Hnsw.batchScan(graph, pr, numParts, efSearch), k)
   }
 
-  /** ROUTED + FILTERED batch serving — [[batchNeighbors]] with the
-    * predicate pushed INTO each cell graph's search
-    * ([[Hnsw.batchNeighborsFiltered]]'s allowed-only collection heap):
-    * "nearest neighbors WHERE lang = 'en'" against the standing
-    * segmented store, the deployment combination (geometry bounds WHICH
-    * graphs a probe touches, the predicate bounds WHAT they may
-    * return). `allowed` is the pre-evaluated admissible vec_id set —
-    * one equi-join pins the flag on the store pass, which stays pruned
-    * to the probed cells. Same recall caveats as both parents: the
-    * routing envelope on which cells are probed, and the ~1/efSearch
-    * selectivity decay on what the filtered heap collects — raise
-    * `efSearch` with 1/selectivity.
+  /** The graph side of the routed pair scans: the raw rows with the live
+    * flag as `ok` on a tombstoned range (deleted nodes routable, never
+    * collected), else the masked segments `st` with every row `ok`.
     */
-  def batchNeighborsFiltered(store: Store, probes: DataFrame,
-                             allowed: DataFrame, k: Int,
-                             efSearch: Int = 64, nProbe: Int = 0,
-                             parallelism: Int = 32,
-                             nProbeSub: Int = 0): DataFrame =
-    filteredServe(store, probes, k, efSearch, nProbe, parallelism,
-      flaggedSegments(store.segments.sparkSession, store), nProbeSub)(
-      _ => allowed.select(col("vec_id")).distinct())
-
-  /** ROUTED + FILTERED serving with the predicate evaluated by the STORE
-    * ITSELF — [[batchNeighborsFiltered]] without the caller-built
-    * allowed-id frame: `predicate` is a Column expression over the
-    * attribute payload columns written beside the vectors at
-    * [[build]]/[[append]] time, and it is evaluated on the attrs
-    * relation AFTER the probed-cell prune — so a micro-batch's filter
-    * work is probed-cells-sized, where the pre-evaluated-frame form
-    * costs one corpus-sized attribute join per query when the attribute
-    * table lives outside the store. Everything downstream (allowed-only
-    * result heap, recall-vs-selectivity knob) is
-    * [[batchNeighborsFiltered]]'s; a plain store (no payloads) fails
-    * loudly.
-    */
-  def batchNeighborsFilteredExpr(store: Store, probes: DataFrame,
-                                 predicate: org.apache.spark.sql.Column,
-                                 k: Int, efSearch: Int = 64,
-                                 nProbe: Int = 0,
-                                 parallelism: Int = 32,
-                                 nProbeSub: Int = 0): DataFrame = {
-    val spark = store.segments.sparkSession
-    require(attrsPresent(spark, store),
-      s"store at ${store.path} carries no attribute payloads — build " +
-        "or append with payload columns, or pre-evaluate the " +
-        "predicate and use batchNeighborsFiltered")
-    val at = attrsRawOf(spark, store)
-    val hasUpd = hasAttrUpdates(spark, store)
-    filteredServe(store, probes, k, efSearch, nProbe, parallelism,
-      flaggedSegments(spark, store), nProbeSub) {
-      probedCells =>
-        // the predicate runs INSIDE the probed-cell-pruned attr scan:
-        // vec_ids are unique across live epochs (the append-time id
-        // guard) and stale update payloads are resolved LATEST-WINS
-        // AFTER the prune, so the resolution window — like the
-        // predicate — runs probed-cells-sized. Attrs are keyed by
-        // PLAIN cell (sub-sharding lives only in the segment graph
-        // rows), so a capped store's probed shard ids project down to
-        // attr space first: cell = (shard % stride) % k under the
-        // epoch stride
-        val attrCells =
-          if (store.layout.isEmpty) probedCells
-          else probedCells.select(
-            (col("shard") - pmod(col("shard"), lit(CellStride)) +
-              pmod(pmod(col("shard"), lit(CellStride)),
-                lit(store.index.k.toLong))).as("shard")).distinct()
-        resolveLatestAttrs(
-            at.join(broadcast(attrCells), Seq("shard"), "left_semi"),
-            hasUpd)
-          .filter(predicate).select(col("vec_id"))
+  private def pairGraph(spark: SparkSession, store: Store,
+                        st: DataFrame): DataFrame =
+    flaggedSegments(spark, store).fold(st.withColumn("ok", lit(true))) {
+      fl => graft.CacheRegistry.persist(fl.withColumnRenamed("__live", "ok"))
     }
-  }
-
-  /** Shared routed-filtered-serving core: probe explode (cells ×
-    * epochs), probed-cell prune of the store pass, the `ok` flag pinned
-    * from `allowedOf(probedCells)`, then [[Hnsw.batchScanFiltered]]'s
-    * allowed-only heap. The allowed provider sees the probed-cell set so
-    * it can prune its own scan ([[batchNeighborsFilteredExpr]]).
-    */
-  private def filteredServe(store: Store, probes: DataFrame, k: Int,
-                            efSearch: Int, nProbe: Int, parallelism: Int,
-                            flagged: Option[DataFrame],
-                            nProbeSub: Int = 0)(
-      allowedOf: DataFrame => DataFrame): DataFrame = {
-    require(k >= 1 && efSearch >= k && parallelism >= 1,
-      s"need efSearch >= k >= 1, got k=$k efSearch=$efSearch " +
-        s"parallelism=$parallelism")
-    val spark = store.segments.sparkSession
-    import spark.implicits._
-    // tombstoned range → serve from the RAW graphs with the per-row
-    // live flag folded into `ok` (traversal-only tombstones); clean
-    // range → the exact pre-deletion plans. The flagged frame is
-    // computed ONCE by each public entry (tombstone listing + plan
-    // construction per call, not per layer) and passed down.
-    // NOT persisted (guide §5): one full consumer (the probed-cell-pruned
-    // scan) + a one-row dim probe — persisting wrote the corpus into the
-    // block manager per serve for zero reuse (see batchNeighbors)
-    val st0 = flagged.getOrElse(
-      store.segments.select(col("shard"), col("vec_id"), col("vec"),
-        col("level"), col("nbrs")))
-    // index-derived dim, no segment probe job (see batchNeighbors)
-    val pr0 = probes.select(col("probe_id").as("vec_id"),
-      col("embedding").cast("array<double>").as("vec"))
-    Hnsw.requireCleanProbes(pr0, store.index.centroids.head.length)
-    val np = if (nProbe <= 0) IVF.defaultNProbe(store.index.k) else nProbe
-    val pr = graft.CacheRegistry.persist(Hnsw.asProbes(stridedFan(pr0
-      .withColumn("cell",
-        explode(IVF.probeExpr(col("vec"), store.index, np))), store,
-      nProbeSub))
-      .withColumn("ok", lit(false)))
-    val probedCells = graft.CacheRegistry.persist(
-      pr.select(col("shard")).distinct())
-    val okCol = allowedOf(probedCells).withColumn("__ok", lit(true))
-    // prune FIRST, flag SECOND: the ok join runs probed-cells-sized on
-    // the store side instead of over the whole segment range. A
-    // tombstoned node is allowed only if it is BOTH caller-allowed and
-    // live — routable either way
-    val liveFlag = if (flagged.isDefined) col("__live") else lit(true)
-    val stProbed = st0.join(broadcast(probedCells), Seq("shard"), "left_semi")
-      .join(okCol, Seq("vec_id"), "left")
-      .select(col("shard"), col("vec_id"), col("vec"), col("level"),
-        col("nbrs"),
-        (liveFlag && coalesce(col("__ok"), lit(false))).as("ok"))
-    // probed-count-sized partitions (see batchNeighbors): no k·epochs
-    // task floor per micro-batch; corpus batches saturate and recover
-    // the full spread
-    val numParts = math.max(parallelism,
-      math.min(probedCells.count(), 4096L).toInt)
-    Hnsw.rankTopK(
-      Hnsw.batchScanFiltered(stProbed.unionByName(pr), numParts, efSearch), k)
-  }
 
   /** Corpus-wide near-dup pairs over the STANDING segmented geo store —
     * [[Hnsw.nearDupPairsRouted]]'s linear scan shape (every stored
@@ -1456,7 +1425,9 @@ object HnswGeoStore {
     * epochs: n·nProbe·epochs shuffled probe rows, graph rows never
     * replicated, one cell graph per task at a time. Same recall
     * envelope, same (i < j, cos) output. Run post-[[compact]] when
-    * possible — epochs is the extra fan-out multiplier.
+    * possible — epochs is the extra fan-out multiplier. On a tombstoned
+    * range only live vectors probe (`st` is the masked view) while the
+    * graph side keeps the deleted nodes routable ([[pairGraph]]).
     */
   def nearDupPairs(store: Store, threshold: Double,
                    nProbe: Int = Hnsw.DefaultNearDupNProbe,
@@ -1465,7 +1436,6 @@ object HnswGeoStore {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold=$threshold must be in (0, 1]")
     val spark = store.segments.sparkSession
-    import spark.implicits._
     val st = graft.CacheRegistry.persist(
       store.segments.select(col("shard"), col("vec_id"), col("vec"),
         col("level"), col("nbrs")))
@@ -1477,20 +1447,8 @@ object HnswGeoStore {
       store, nProbeSub))
     val numParts = math.max(parallelism,
       math.min(store.index.k.toLong * store.epochs.size, 4096L).toInt)
-    // tombstoned range → traversal-only tombstones: the GRAPH side is
-    // the raw rows with the live flag (deleted nodes routable, never
-    // collected), while only live vectors probe (st is the masked view)
-    flaggedSegments(spark, store) match {
-      case Some(fl) =>
-        val graph = graft.CacheRegistry.persist(
-          fl.withColumnRenamed("__live", "ok"))
-        Hnsw.pairScanFiltered(
-          graph.unionByName(probes.withColumn("ok", lit(false))),
-          numParts, threshold, efSearch)
-      case None =>
-        Hnsw.pairScan(st.unionByName(probes), numParts, threshold,
-          efSearch)
-    }
+    Hnsw.pairScan(pairGraph(spark, store, st), probes, numParts, threshold,
+      efSearch)
   }
 
   /** Cross-corpus contamination over the STANDING segmented geo store —
@@ -1520,7 +1478,7 @@ object HnswGeoStore {
       store.segments.select(col("shard"), col("vec_id"), col("vec"),
         col("level"), col("nbrs")))
     requireStridedGeo(st, store.index)
-    // index-derived dim, no segment probe job (see batchNeighbors); a
+    // index-derived dim, no segment probe job (see routedServe); a
     // zero-segment store pair-scans to the same empty frame
     val pr0 = graft.CacheRegistry.persist(
       probes.select(col("probe_id").as("vec_id"),
@@ -1537,18 +1495,8 @@ object HnswGeoStore {
       store, nProbeSub))
     val numParts = math.max(parallelism,
       math.min(store.index.k.toLong * store.epochs.size, 4096L).toInt)
-    // tombstoned range → the traversal-only filtered scan (see
-    // nearDupPairs); clean range → the exact unfiltered plans
-    flaggedSegments(spark, store) match {
-      case Some(fl) =>
-        val graph = graft.CacheRegistry.persist(
-          fl.withColumnRenamed("__live", "ok"))
-        Hnsw.pairScanFiltered(
-          graph.unionByName(prs.withColumn("ok", lit(false))),
-          numParts, threshold, efSearch)
-      case None =>
-        Hnsw.pairScan(st.unionByName(prs), numParts, threshold, efSearch)
-    }
+    Hnsw.pairScan(pairGraph(spark, store, st), prs, numParts, threshold,
+      efSearch)
   }
 
   /** Admission filter through the ROUTED batch search. The probe set

@@ -139,6 +139,15 @@ private[graft] object StoreCommits {
     }.toMap
   }
 
+  /** The latest committed BASE key ≤ `at` in a [[committedMap]] — where
+    * a read, compaction or vacuum as of `at` starts its live range.
+    * A store's first retained commit is always a base (build writes key
+    * 0; vacuum keeps the latest base), so this is defined for any
+    * committed `at`; an empty range fails (`empty.max`).
+    */
+  def baseAt(commits: Map[Long, Boolean], at: Long): Long =
+    commits.collect { case (k, true) if k <= at => k }.max
+
   /** (is_base, writer) of the marker at `$path/commits/$key`. */
   def read(spark: SparkSession, path: String,
            key: String): (Boolean, String) = {

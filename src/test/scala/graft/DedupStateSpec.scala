@@ -482,11 +482,12 @@ class DedupStateSpec extends SparkSpec {
       "forget" -> (() => DedupState.forget(spark, stripped,
         Seq(1L).toDF("doc_id"))),
       "compact" -> (() => DedupState.compact(spark, stripped)),
-      "append(asBase)" -> (() => DedupState.append(spark, stripped,
+      "append(asBase = true)" -> (() => DedupState.append(spark, stripped,
         docsDf(3L -> "m n o p q r"), asBase = true))).foreach {
       case (op, run) =>
         val e = intercept[IllegalArgumentException](run())
-        assert(e.getMessage.contains("doc_fps") &&
+        assert(e.getMessage.contains(s"$op refused") &&
+          e.getMessage.contains("doc_fps") &&
           e.getMessage.contains("rebuild"), s"$op: ${e.getMessage}")
     }
     assert(DedupState.latestGen(spark, dir) === s1.gen,

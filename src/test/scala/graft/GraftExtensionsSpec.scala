@@ -122,21 +122,19 @@ class GraftExtensionsSpec extends SparkSpec {
       val injected = org.apache.spark.sql.SparkSession.builder()
         .withExtensions(new GraftExtensions)
         .getOrCreate()
-      try {
-        // one probe per registration family: scalar kernel, aggregate,
-        // composition — and the full identifier list resolves
-        val r = injected.sql(
-          "SELECT blake2b_hex('123'), jaro_winkler('ab', 'ab'), " +
-            "nfc_normalize('é')").head()
-        assert(r.getString(0) ===
-          graft.functions.Blake2b.hexDigest("123".getBytes, 5))
-        assert(r.getDouble(1) === 1.0)
-        assert(r.getString(2) === "é")
-        GraftExtensions.definitions.foreach { case (id, _, _) =>
-          assert(injected.sessionState.functionRegistry
-            .functionExists(id), s"${id.funcName} missing from the " +
-            "extensions-injected registry")
-        }
+      // one probe per registration family: scalar kernel, aggregate,
+      // composition — and the full identifier list resolves
+      val r = injected.sql(
+        "SELECT blake2b_hex('123'), jaro_winkler('ab', 'ab'), " +
+          "nfc_normalize('é')").head()
+      assert(r.getString(0) ===
+        graft.functions.Blake2b.hexDigest("123".getBytes, 5))
+      assert(r.getDouble(1) === 1.0)
+      assert(r.getString(2) === "é")
+      GraftExtensions.definitions.foreach { case (id, _, _) =>
+        assert(injected.sessionState.functionRegistry
+          .functionExists(id), s"${id.funcName} missing from the " +
+          "extensions-injected registry")
       }
       // NO injected.stop(): that would stop the SHARED SparkContext and
       // take the rest of the suite down with it — restoring the original

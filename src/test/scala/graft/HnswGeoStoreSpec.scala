@@ -733,6 +733,19 @@ class HnswGeoStoreSpec extends SparkSpec {
     assert(HnswGeoStore.batchNeighborsFiltered(store, probes,
       Seq.empty[Long].toDF("vec_id"), k = 3, efSearch = 16,
       nProbe = 8).count() === 0L)
+    // every stored id allowed: row for row the unfiltered routed serve
+    // across both epochs — same ids, bitwise cos, same rank; nProbe 2 of
+    // 4 cells keeps the routed prune live on both sides
+    def dump(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+        .sorted.toSeq
+    val clean = dump(HnswGeoStore.batchNeighbors(store, probes, k = 5,
+      efSearch = 32, nProbe = 2))
+    assert(clean.size === 20)
+    assert(dump(HnswGeoStore.batchNeighborsFiltered(store, probes,
+      all.map(_._1).toDF("vec_id"), k = 5, efSearch = 32,
+      nProbe = 2)) === clean)
     CacheRegistry.releaseAll()
   }
 

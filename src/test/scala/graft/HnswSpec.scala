@@ -182,15 +182,15 @@ class HnswSpec extends SparkSpec {
     def vec(seed: Int): Seq[Double] =
       (0 until 8).map(d => math.sin(seed * 7 + d).abs + 0.1)
     def jig(v: Seq[Double]): Seq[Double] = v.map(_ * 1.0000001)
-    def graphRows(shard: Long, ids: Seq[Long]): Seq[Hnsw.Node] = {
+    def graphRows(shard: Long, ids: Seq[Long]): Seq[Hnsw.FNode] = {
       // a valid single-level graph: everyone adjacent to everyone
       ids.map(id => (shard, id, if (id % 2 == 0) jig(vec(shard.toInt))
           else vec(shard.toInt), 0,
-        Seq(ids.filterNot(_ == id))))
+        Seq(ids.filterNot(_ == id)), true))
     }
-    def probeRows(shard: Long, ids: Seq[Long]): Seq[Hnsw.Node] =
+    def probeRows(shard: Long, ids: Seq[Long]): Seq[Hnsw.FNode] =
       ids.map(id => (shard, id, if (id % 2 == 0) jig(vec(shard.toInt))
-        else vec(shard.toInt), -1, Seq.empty[Seq[Long]]))
+        else vec(shard.toInt), -1, Seq.empty[Seq[Long]], false))
     val rows = (graphRows(0L, Seq(1L, 2L)) ++ probeRows(0L, Seq(1L, 2L)) ++
       graphRows(1L, Seq(11L, 12L)) ++ probeRows(1L, Seq(11L, 12L)))
     var consumed = 0
@@ -428,6 +428,16 @@ class HnswSpec extends SparkSpec {
     // an empty allowed set returns zero rows, not an error
     assert(Hnsw.batchNeighborsFiltered(store, probes,
       Seq.empty[Long].toDF("vec_id"), k = 5, efSearch = 16).count() === 0L)
+    // every stored id allowed: row for row the unfiltered serve — same
+    // ids, bitwise cos, same rank
+    def dump(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+        .sorted.toSeq
+    val clean = dump(Hnsw.batchNeighbors(store, probes, k = 10, efSearch = 64))
+    assert(clean.size === 50)
+    assert(dump(Hnsw.batchNeighborsFiltered(store, probes,
+      rows.map(_._1).toDF("vec_id"), k = 10, efSearch = 64)) === clean)
     graft.CacheRegistry.releaseAll()
   }
 

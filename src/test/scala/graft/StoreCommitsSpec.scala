@@ -170,7 +170,12 @@ class StoreCommitsSpec extends SparkSpec {
       "_stream" + "_instance", "stream" + "InstanceId", "instance" + "Id",
       // the dedup catalog snapshot layout and its bucketed-table writer
       "load" + "Catalog", "migrate" + "Catalog", "write" + "Snapshot",
-      "Bucket" + "ing")
+      "Bucket" + "ing",
+      // the second HNSW search stack: the filtered scan is the only scan
+      "searchLayer" + "Filtered", "searchGraph" + "Filtered",
+      "shardScan" + "Filtered", "batchScan" + "Filtered",
+      "pairStream" + "Filtered", "pairScan" + "Filtered",
+      "filtered" + "Serve")
     val root = java.nio.file.Path.of("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), "run from the repo root")
     val hits = java.nio.file.Files.walk(root).iterator().asScala

@@ -18,7 +18,10 @@ import graft.functions.GraftFunctions.blake2b_hex
   *    persistent key table plus an anti-join for new uids hashed with the
   *    native BLAKE2b expression; the key table is upserted with
   *    write-temp-then-atomic-rename since Spark cannot overwrite a path it is
-  *    reading.
+  *    reading. One upsert body serves every caller: a whole run of frames
+  *    ([[cdmAnonymizationRun]]) upserts each uid column's table ONCE, over
+  *    the union of that column from every frame, before any frame is
+  *    joined; [[uidAnonymization]] is the one-frame case.
   *
   * 100 TB posture: the fact side is never collected; only the distinct label
   * set (bounded, dimension-like) ever reaches the driver. If the key table
@@ -91,7 +94,8 @@ object Anonymize {
     * distinct values (anonymize_datasets.py:127-128).
     *
     * Small (dimension-sized) label sets — the reference's only actual use —
-    * take the expression-chain path: one bounded collect, exact-match CASE +
+    * take the expression-chain path: one bounded `limit(Max + 1).collect()`
+    * that both picks the path and returns the labels, exact-match CASE +
     * word-boundary regex, all inside whole-stage codegen. Beyond
     * [[MaxExpressionLabels]] the operator switches to a sorted enumeration
     * computed distributedly (`dense_rank` over the distinct set) and joined
@@ -102,10 +106,10 @@ object Anonymize {
   def anonymizeColumnLabels(df: DataFrame, column: String,
                             name: String = "ANON_CLIENT"): DataFrame = {
     val distinctLabels = df.select(col(column)).filter(col(column).isNotNull).distinct()
-    val n = distinctLabels.limit(MaxExpressionLabels + 1).count()
-    if (n <= MaxExpressionLabels) {
-      val labels = distinctLabels.collect().map(_.get(0).toString).toSeq
-      anonymizeLabels(df, column, labels, name)
+    // one bounded collect decides the path AND carries the small label set
+    val firstLabels = distinctLabels.limit(MaxExpressionLabels + 1).collect()
+    if (firstLabels.length <= MaxExpressionLabels) {
+      anonymizeLabels(df, column, firstLabels.map(_.get(0).toString).toSeq, name)
     } else {
       // Sorted global enumeration WITHOUT an unpartitioned window (that
       // would drag every distinct label through one task — the exact
@@ -133,13 +137,29 @@ object Anonymize {
   private def keySchema(column: String): StructType =
     StructType(Seq(StructField(column, StringType), StructField(s"${column}_", StringType)))
 
+  private def keyPath(keyDir: String, column: String): Path =
+    new Path(s"$keyDir/key_$column.snappy.parquet")
+
+  private def keyBakPath(keyDir: String, column: String): Path =
+    new Path(s"$keyDir/.bak-key_$column")
+
   /** Read the persistent key table for `column`, or an empty frame on first
-    * run (anonymize_datasets.py:37-44).
+    * run (anonymize_datasets.py:37-44). The read carries the table's known
+    * schema, so it launches no parquet footer-merge job.
+    *
+    * A lone `.bak-` copy is a crash between [[overwriteKeyTable]]'s two
+    * renames: it is the only copy of the table, so it is rolled back to the
+    * table's path before the read. Read as "no table" instead, the next
+    * upsert would rebuild the table from that run's uids alone and drop
+    * every older uid's pseudonym.
     */
   def readKeyTable(spark: SparkSession, keyDir: String, column: String): DataFrame = {
-    val path = new Path(s"$keyDir/key_$column.snappy.parquet")
+    val path = keyPath(keyDir, column)
+    val bak = keyBakPath(keyDir, column)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) spark.read.parquet(path.toString)
+    if (!fs.exists(path) && fs.exists(bak) && !fs.rename(bak, path))
+      throw new java.io.IOException(s"key-table recovery: cannot roll $bak back to $path")
+    if (fs.exists(path)) spark.read.schema(keySchema(column)).parquet(path.toString)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       keySchema(column))
   }
@@ -149,7 +169,7 @@ object Anonymize {
     * to `.bak` BEFORE renaming the staged one in, and delete `.bak` only
     * after the swap succeeds — a crash at any point leaves either the old or
     * the new table recoverable (the uid→pseudonym map is unrecoverable state
-    * otherwise). (SURVEY.md §7.4)
+    * otherwise; [[readKeyTable]] rolls a lone `.bak` back). (SURVEY.md §7.4)
     */
   def overwriteKeyTable(spark: SparkSession, keyDir: String, column: String,
                         keyDf: DataFrame): Unit = {
@@ -157,8 +177,8 @@ object Anonymize {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)
     val tmp = new Path(s"$keyDir/.tmp-key_$column")
-    val bak = new Path(s"$keyDir/.bak-key_$column")
-    val dst = new Path(s"$keyDir/key_$column.snappy.parquet")
+    val bak = keyBakPath(keyDir, column)
+    val dst = keyPath(keyDir, column)
     keyDf.write.mode("overwrite").option("compression", "snappy").parquet(tmp.toString)
     if (fs.exists(bak)) fs.delete(bak, true)
     val hadOld = fs.exists(dst)
@@ -171,32 +191,29 @@ object Anonymize {
     if (hadOld) fs.delete(bak, true)
   }
 
-  /** E3/J1/J2/U1: pseudonymize `column` with the persistent keyed mapping.
+  /** S6/U1: ONE upsert of `column`'s key table over every frame of `frames`
+    * (each must carry `column`): the union of the column, cast to string,
+    * is deduplicated, anti-joined against the old table, its new uids are
+    * hashed, and the table is swapped in once. Existing uids keep their
+    * pseudonym and blake2b of a new uid does not depend on the frame or
+    * the order it came in, so one upsert over n frames leaves the same row
+    * set as n upserts in sequence.
     *
-    * Contract (anonymize_datasets.py:27-84): uid cast to string; existing
-    * uids keep their pseudonym from the key table; new uids get
-    * `blake2b(uid, digest_size=5).hexdigest()`; the key table is upserted and
-    * stays duplicate-free; in the output the raw column is replaced by the
-    * pseudonym under the original name, appended at the end of the schema
-    * (pandas merge appends the joined column).
-    *
-    * Plan shape: broadcast left join (key table is dimension-sized) + one
-    * distinct over the anti-joined new uids. The new-uid hash runs as the
-    * native codegen'd BLAKE2b expression, once per DISTINCT new uid, not per
-    * fact row.
+    * The new-uid hash runs as the native codegen'd BLAKE2b expression, once
+    * per DISTINCT new uid, not per fact row.
     */
-  def uidAnonymization(spark: SparkSession, df: DataFrame, column: String,
-                       keyDir: String): DataFrame = {
+  private def upsertKeyTable(spark: SparkSession, keyDir: String, column: String,
+                             frames: Seq[DataFrame]): Unit = {
     val pseud = s"${column}_"
-    val asStr = df.withColumn(column, col(column).cast(StringType))
     val keyDf = readKeyTable(spark, keyDir, column)
-
     // Null-uid contract (divergence from the reference, by design): pandas
     // `astype(str)` turns missing uids into the literal strings 'None'/'nan'
     // and hashes those; here nulls are excluded from the key table and keep a
     // null pseudonym in the output — a missing identity stays missing rather
     // than colliding into one fake uid.
-    val newUids = asStr.select(col(column)).filter(col(column).isNotNull)
+    val newUids = frames.map(_.select(col(column).cast(StringType).as(column)))
+      .reduce(_ union _)
+      .filter(col(column).isNotNull)
       .distinct()
       .join(keyDf.select(col(column)), Seq(column), "left_anti")
       .withColumn(pseud, blake2b_hex(col(column)))
@@ -206,15 +223,40 @@ object Anonymize {
     // staged write is safe; the crash-safe rename then swaps it in. No driver
     // materialization — the key table never has to fit on the driver.
     overwriteKeyTable(spark, keyDir, column, updatedKey)
+  }
 
-    // No broadcast() hint: the key table grows monotonically across runs, so
-    // a forced broadcast OOMs at high uid cardinality. Catalyst/AQE already
-    // broadcasts while it is small and falls back to sort-merge join after
-    // (SURVEY.md §7.4 100 TB posture).
-    val freshKey = spark.read.parquet(s"$keyDir/key_$column.snappy.parquet")
-    asStr.join(freshKey, Seq(column), "left")
+  /** Replace `column` (cast to string) by its pseudonym from `key`, under
+    * the original name, appended at the end of the schema (pandas merge
+    * appends the joined column).
+    *
+    * No broadcast() hint: the key table grows monotonically across runs, so
+    * a forced broadcast OOMs at high uid cardinality. Catalyst/AQE already
+    * broadcasts while it is small and falls back to sort-merge join after
+    * (SURVEY.md §7.4 100 TB posture).
+    */
+  private def joinPseudonyms(df: DataFrame, column: String, key: DataFrame): DataFrame =
+    df.withColumn(column, col(column).cast(StringType))
+      .join(key, Seq(column), "left")
       .drop(column)
-      .withColumnRenamed(pseud, column)
+      .withColumnRenamed(s"${column}_", column)
+
+  /** E3/J1/J2/U1: pseudonymize `column` with the persistent keyed mapping.
+    *
+    * Contract (anonymize_datasets.py:27-84): uid cast to string; existing
+    * uids keep their pseudonym from the key table; new uids get
+    * `blake2b(uid, digest_size=5).hexdigest()`; the key table is upserted and
+    * stays duplicate-free; in the output the raw column is replaced by the
+    * pseudonym under the original name, appended at the end of the schema.
+    *
+    * One key-table upsert over `df` (the same upsert a whole
+    * [[cdmAnonymizationRun]] runs once per uid column), then a left join of
+    * `df` to the fresh table. The result reads the table's current files
+    * lazily, so consume it before the next upsert of `column` swaps them.
+    */
+  def uidAnonymization(spark: SparkSession, df: DataFrame, column: String,
+                       keyDir: String): DataFrame = {
+    upsertKeyTable(spark, keyDir, column, Seq(df))
+    joinPseudonyms(df, column, readKeyTable(spark, keyDir, column))
   }
 
   /** P8: stamp audit columns if absent (anonymize_datasets.py:168-173).
@@ -235,34 +277,76 @@ object Anonymize {
     else withTime.withColumn("timezone", lit(timezone))
   }
 
+  /** The reference's column roles for `cdm_anonymization`
+    * (anonymize_datasets.py:112-124): label columns, uid columns, value
+    * columns and the value scale factor.
+    */
+  private val LabelColumns: Seq[String] = Seq("CustomerCode", "brand", "customer")
+  private val UidColumns: Seq[String] = Seq("uid", "meter", "meters")
+  private val ValueColumns: Seq[String] = Seq("Amount", "forecast_gross", "backcast_net",
+    "backcast_gross", "usage_initial_net", "usage_initial_gross",
+    "usage_final_net", "usage_final_gross", "usage", "value",
+    "ams_actual_consumption", "ams_actual_net",
+    "ams_actual_consumption_abs", "forecast_abs_errors",
+    "backcast_abs_errors")
+  private val ScaleFactor: Double = 1.0125
+
   /** E2 core: the reference's `cdm_anonymization` (anonymize_datasets.py:112-135)
     * — scale value columns, anonymize label columns against their own
-    * distinct sets, pseudonymize uid columns, lowercase all names.
+    * distinct sets, pseudonymize uid columns, lowercase all names. The
+    * one-frame case of [[cdmAnonymizationRun]].
     */
   def cdmAnonymization(spark: SparkSession, df: DataFrame, keyDir: String,
-      anonCols: Seq[String] = Seq("CustomerCode", "brand", "customer"),
-      uidCols: Seq[String] = Seq("uid", "meter", "meters"),
-      valueCols: Seq[String] = Seq("Amount", "forecast_gross", "backcast_net",
-        "backcast_gross", "usage_initial_net", "usage_initial_gross",
-        "usage_final_net", "usage_final_gross", "usage", "value",
-        "ams_actual_consumption", "ams_actual_net",
-        "ams_actual_consumption_abs", "forecast_abs_errors",
-        "backcast_abs_errors"),
-      scaleFactor: Double = 1.0125): DataFrame = {
-    val byLower = df.columns.map(c => c.toLowerCase -> c).toMap
-    val presentAnon = anonCols.flatMap(c => byLower.get(c.toLowerCase))
-    val presentUid = uidCols.flatMap(c => byLower.get(c.toLowerCase))
-    // Each label column runs an eager distinct and each uid column an eager
-    // key-table upsert — without a cache every one of those actions would
-    // recompute the whole upstream plan (the scan + scaling) from scratch.
-    val eagerPasses = presentAnon.size + presentUid.size
-    val scaled0 = scaleValues(df, valueCols, scaleFactor)
-    val scaled =
-      if (eagerPasses > 1) graft.CacheRegistry.persist(scaled0) else scaled0
-    val labeled = presentAnon.foldLeft(scaled)((d, c) => anonymizeColumnLabels(d, c))
-    val pseudonymized = presentUid
-      .foldLeft(labeled)((d, c) => uidAnonymization(spark, d, c, keyDir))
-    pseudonymized.toDF(pseudonymized.columns.map(_.toLowerCase).toIndexedSeq: _*)
+      anonCols: Seq[String] = LabelColumns, uidCols: Seq[String] = UidColumns,
+      valueCols: Seq[String] = ValueColumns,
+      scaleFactor: Double = ScaleFactor): DataFrame =
+    cdmAnonymizationRun(spark, Seq(df), keyDir, anonCols, uidCols, valueCols,
+      scaleFactor).head
+
+  /** `cdm_anonymization` over every frame of one run, in three steps:
+    *
+    *  1. scale each frame's value columns and anonymize its label columns
+    *     (each against the frame's own distinct labels);
+    *  2. run ONE key-table upsert per distinct uid column, over the union of
+    *     that column from every frame that carries it;
+    *  3. join each frame to the fresh tables (each read once) and lowercase
+    *     its names.
+    *
+    * Returns one frame per input frame, in order; each equals what
+    * per-frame `cdmAnonymization` calls in sequence would return (schema
+    * and rows), and the key tables end with the same row sets. A uid column
+    * is matched by name case-insensitively and keeps the frame's spelling
+    * in its key file name, `key_<column>`.
+    *
+    * A frame with more than one label or uid column is persisted through
+    * [[graft.CacheRegistry]]: its label collects and upserts would each
+    * rescan it otherwise. The returned frames read those caches and the
+    * key tables' current files, so consume them, then release the caches,
+    * before the next run.
+    */
+  def cdmAnonymizationRun(spark: SparkSession, dfs: Seq[DataFrame], keyDir: String,
+      anonCols: Seq[String] = LabelColumns, uidCols: Seq[String] = UidColumns,
+      valueCols: Seq[String] = ValueColumns,
+      scaleFactor: Double = ScaleFactor): Seq[DataFrame] = {
+    val labeled = dfs.map { df =>
+      val byLower = df.columns.map(c => c.toLowerCase -> c).toMap
+      val presentAnon = anonCols.flatMap(c => byLower.get(c.toLowerCase))
+      val presentUid = uidCols.flatMap(c => byLower.get(c.toLowerCase))
+      val scaled0 = scaleValues(df, valueCols, scaleFactor)
+      val scaled =
+        if (presentAnon.size + presentUid.size > 1) graft.CacheRegistry.persist(scaled0)
+        else scaled0
+      (presentAnon.foldLeft(scaled)((d, c) => anonymizeColumnLabels(d, c)), presentUid)
+    }
+    val uidColumns = labeled.flatMap(_._2).distinct
+    uidColumns.foreach { c =>
+      upsertKeyTable(spark, keyDir, c, labeled.collect { case (d, cs) if cs.contains(c) => d })
+    }
+    val fresh = uidColumns.map(c => c -> readKeyTable(spark, keyDir, c)).toMap
+    labeled.map { case (d, presentUid) =>
+      val pseudonymized = presentUid.foldLeft(d)((acc, c) => joinPseudonyms(acc, c, fresh(c)))
+      pseudonymized.toDF(pseudonymized.columns.map(_.toLowerCase).toIndexedSeq: _*)
+    }
   }
 
   /** k-anonymity audit — the check an anonymized dataset still owes its

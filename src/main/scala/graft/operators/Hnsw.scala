@@ -571,15 +571,29 @@ object Hnsw {
       .as[Node]
       .repartition(parallelism, col("shard"))
       .sortWithinPartitions(col("shard"), col("vec_id"))
-      .mapPartitions { it0 =>
-        val it = it0.buffered
-        Iterator.continually(()).takeWhile(_ => it.hasNext).flatMap { _ =>
-          val shard = it.head._1
-          val rows = scala.collection.mutable.ArrayBuffer.empty[Node]
-          while (it.hasNext && it.head._1 == shard) rows += it.next()
-          f(shard, materializeGraph(rows, shard))
-        }
-      }
+      .mapPartitions(it => shardRuns(it)(_._1) { (shard, rows) =>
+        f(shard, materializeGraph(scala.collection.mutable.ArrayBuffer.from(rows), shard))
+      })
+  }
+
+  /** The lazy one-pass split of a partition whose rows arrive sorted by
+    * shard: `f` gets each shard's id and a buffered iterator over that
+    * shard's rows only, one shard at a time, and must read them all before
+    * its output runs out — the next shard starts where it stopped. Nothing
+    * beyond what `f` itself keeps is held per shard.
+    */
+  private def shardRuns[R, T](rows: Iterator[R])(shardOf: R => Long)(
+      f: (Long, BufferedIterator[R]) => Iterator[T]): Iterator[T] = {
+    val it = rows.buffered
+    Iterator.continually(()).takeWhile(_ => it.hasNext).flatMap { _ =>
+      val shard = shardOf(it.head)
+      f(shard, new BufferedIterator[R] {
+        def hasNext: Boolean = it.hasNext && shardOf(it.head) == shard
+        def head: R =
+          if (hasNext) it.head else throw new NoSuchElementException(s"end of shard $shard")
+        def next(): R = { val r = head; it.next(); r }
+      })
+    }
   }
 
   /** Rebuild one shard's graph from its stored rows, sorted by vec_id
@@ -728,12 +742,8 @@ object Hnsw {
   private[graft] def buildStream(rows0: Iterator[(Long, Long, Seq[Double])],
                                  m: Int, efConstruction: Int)
       : Iterator[Node] = {
-    val it = rows0.buffered
-    Iterator.continually(()).takeWhile(_ => it.hasNext).flatMap { _ =>
-      val shard = it.head._1
-      val rows =
-        scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Seq[Double])]
-      while (it.hasNext && it.head._1 == shard) rows += it.next()
+    shardRuns(rows0)(_._1) { (shard, shardRows) =>
+      val rows = scala.collection.mutable.ArrayBuffer.from(shardRows)
       requireUniqueIds(rows.map(_._2).toSeq, shard)
       val ids = rows.map(_._2).toArray
       val vecs = rows.map(_._3.toArray).toArray
@@ -872,14 +882,10 @@ object Hnsw {
     */
   private[graft] def admitStream(rows0: Iterator[Node], m: Int,
                                  efConstruction: Int): Iterator[Node] = {
-    val it = rows0.buffered
-    Iterator.continually(()).takeWhile(_ => it.hasNext).flatMap { _ =>
-      val shard = it.head._1
+    shardRuns(rows0)(_._1) { (shard, rows) =>
       val oldRows = scala.collection.mutable.ArrayBuffer.empty[Node]
-      while (it.hasNext && it.head._1 == shard && it.head._4 >= 0)
-        oldRows += it.next()
-      val newRows = scala.collection.mutable.ArrayBuffer.empty[Node]
-      while (it.hasNext && it.head._1 == shard) newRows += it.next()
+      while (rows.hasNext && rows.head._4 >= 0) oldRows += rows.next()
+      val newRows = scala.collection.mutable.ArrayBuffer.from(rows)
       requireUniqueIds(newRows.map(_._2).toSeq, shard)
       val oldIds = oldRows.map(_._2).toSet
       newRows.foreach(r => require(!oldIds(r._2),
@@ -1134,23 +1140,17 @@ object Hnsw {
   private def shardScan[T](rows0: Iterator[FNode])(
       f: (Graph, Option[Array[Boolean]], Long, Array[Double], Double) =>
         Iterator[T]): Iterator[T] = {
-    val it = rows0.buffered
-    Iterator.continually(()).takeWhile(_ => it.hasNext).flatMap { _ =>
-      val shard = it.head._1
+    shardRuns(rows0)(_._1) { (shard, rows) =>
       val gRows = scala.collection.mutable.ArrayBuffer.empty[Node]
       val okBuf = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-      while (it.hasNext && it.head._1 == shard && it.head._4 >= 0) {
-        val r = it.next()
+      while (rows.hasNext && rows.head._4 >= 0) {
+        val r = rows.next()
         gRows += ((r._1, r._2, r._3, r._4, r._5))
         okBuf += r._6
       }
       val g = materializeGraph(gRows, shard)
       val allow = if (okBuf.forall(identity)) None else Some(okBuf.toArray)
-      val probes = new Iterator[FNode] {
-        def hasNext: Boolean = it.hasNext && it.head._1 == shard
-        def next(): FNode = it.next()
-      }
-      probes.flatMap { case (_, pid, pv, _, _, _) =>
+      rows.flatMap { case (_, pid, pv, _, _, _) =>
         val q = pv.toArray
         f(g, allow, pid, q, norm(q))
       }

@@ -122,6 +122,32 @@ class AnonymizeSpec extends SparkSpec {
     assert(leftovers.isEmpty)
   }
 
+  test("a crash between the key-table swap's renames loses no uid history") {
+    val keyDir = tmpDir("graft-key-crash")
+    Anonymize.uidAnonymization(spark, Seq("u1", "u2").toDF("uid"), "uid", keyDir)
+      .collect()
+    // the crash state: the old table was staged to .bak, the next run's
+    // table sits complete in .tmp-, and the rename of .tmp- into place
+    // never ran
+    val fs = new org.apache.hadoop.fs.Path(keyDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.rename(new org.apache.hadoop.fs.Path(s"$keyDir/key_uid.snappy.parquet"),
+      new org.apache.hadoop.fs.Path(s"$keyDir/.bak-key_uid"))
+    Seq(("u1", "crashed"), ("u9", "crashed")).toDF("uid", "uid_")
+      .write.parquet(s"$keyDir/.tmp-key_uid")
+
+    val out = Anonymize.uidAnonymization(spark, Seq("u1", "u3").toDF("uid"), "uid", keyDir)
+      .as[String].collect().toSet
+    val h = Seq("u1", "u2", "u3").map(u => u -> Blake2b.hexDigest(u.getBytes, 5)).toMap
+    assert(out === Set(h("u1"), h("u3")))
+    // old ∪ new: u2, unseen by this run, keeps its pseudonym
+    val key = Anonymize.readKeyTable(spark, keyDir, "uid").as[(String, String)].collect().toSet
+    assert(key === h.toSet)
+    val leftovers = new java.io.File(keyDir).listFiles()
+      .map(_.getName).filter(n => n.startsWith(".tmp-") || n.startsWith(".bak-"))
+    assert(leftovers.isEmpty, leftovers.mkString(", "))
+  }
+
   test("uid column is replaced under its original name (schema tail position)") {
     val keyDir = tmpDir("graft-key-pos")
     val out = Anonymize.uidAnonymization(spark,

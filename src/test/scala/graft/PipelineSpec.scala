@@ -266,6 +266,78 @@ class PipelineSpec extends SparkSpec {
     assert(first === second, "same uids must map to the same pseudonyms across runs")
   }
 
+  test("AnonymizePipeline: one key-table write per uid column per run, same " +
+    "outputs and key tables as per-file cdmAnonymization") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import graft.operators.Anonymize
+    import graft.sources.Tables
+    val inDir = tmpDir("graft-anon2-in")
+    val keyDir = tmpDir("graft-anon2-key")
+    val refKeyDir = tmpDir("graft-anon2-refkey")
+    val clock = "2026-01-01T00:00:00"
+    // three files share `uid`; one also carries `meter`; the second day
+    // repeats some ids of the first
+    def writeDay(day: String, u: Seq[Int], m: Seq[String]): Unit = {
+      val dir = s"$inDir/$day"
+      new java.io.File(dir).mkdirs()
+      def csv(name: String, lines: String*): Unit = {
+        val w = new java.io.PrintWriter(s"$dir/$name")
+        try lines.foreach(w.println) finally w.close()
+      }
+      csv("acme-usage.csv", "uid,CustomerCode,usage",
+        s"${u(0)},Acme Corp,1.5", s"${u(1)},Globex,2.0", s"${u(2)},Acme Corp,3.0")
+      csv("acme-meters.csv", "meter,uid,brand,value",
+        s"${m(0)},${u(0)},BrightHome,1.0", s"${m(1)},${u(3)},SunVolt,2.0")
+      Seq((u(1).toString, "SunVolt", 5.0), (u(4).toString, "BrightHome", 6.0))
+        .toDF("uid", "brand", "amount").coalesce(1).write.parquet(s"$dir/billing.dir")
+      new java.io.File(s"$dir/billing.dir").listFiles()
+        .find(_.getName.startsWith("part-")).get
+        .renameTo(new java.io.File(s"$dir/acme-billing.parquet"))
+    }
+    val keyWrites = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical.collect { case c: InsertIntoHadoopFsRelationCommand => c.outputPath }
+          .filter(_.toString.contains(keyDir)).foreach(p => keyWrites.add(p.getName))
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def fields(s: org.apache.spark.sql.types.StructType) = s.map(f => f.name -> f.dataType)
+    spark.listenerManager.register(listener)
+    try {
+      Seq(("2024-03-01", Seq(101, 102, 103, 104, 105), Seq("M1", "M2")),
+          ("2024-03-02", Seq(101, 106, 103, 107, 108), Seq("M1", "M3"))).foreach {
+        case (day, u, m) =>
+          writeDay(day, u, m)
+          val outDir = tmpDir("graft-anon2-out")
+          val outs = AnonymizePipeline.run(spark, inDir, outDir, keyDir, "acme", clock = Some(clock))
+          org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+          assert(keyWrites.asScala.sorted === Seq(".tmp-key_meter", ".tmp-key_uid"), day)
+          keyWrites.clear()
+          // the per-file composition: one upsert per file × uid column
+          val files = Tables.partitionFiles(spark, s"$inDir/$day")
+          assert(outs.size === files.size)
+          files.zip(outs).foreach { case ((kind, path), out) =>
+            val df = if (kind == "csv") Tables.csv(spark, path) else Tables.parquet(spark, path)
+            val ref = Anonymize.stampAudit(
+              Anonymize.cdmAnonymization(spark, df, refKeyDir), clock = Some(clock))
+            val (refFields, refRows) =
+              try (fields(ref.schema), ref.collect().toSeq)
+              finally graft.CacheRegistry.releaseAll()
+            val got = spark.read.parquet(out)
+            assert(fields(got.schema) === refFields, out)
+            assert(got.collect().toSeq === refRows, out)
+          }
+      }
+    } finally spark.listenerManager.unregister(listener)
+    Seq("uid", "meter").foreach { c =>
+      def key(dir: String): Set[Row] = Anonymize.readKeyTable(spark, dir, c).collect().toSet
+      assert(key(keyDir) === key(refKeyDir), c)
+      assert(key(keyDir).size === (if (c == "uid") 8 else 3), c)
+    }
+  }
+
   test("datasetCard: volumes, duplicate pressure, language share on a " +
     "crafted corpus") {
     val docs = Seq(

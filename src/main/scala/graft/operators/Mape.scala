@@ -1,5 +1,6 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -54,7 +55,14 @@ object Mape {
     * and the daily groupBy immediately destroys it — a global range-shuffle
     * of the hourly grain for nothing at 100 TB. Ordering belongs at final
     * output only: pass `sort = true` (or `orderBy` yourself) when the hourly
-    * frame IS the deliverable.
+    * frame IS the deliverable, and never feed a sorted frame to
+    * [[dailyMapeAggregation]] — Spark keeps a sort under an aggregate of
+    * double sums (`EliminateSorts` treats them as order-sensitive), so the
+    * range shuffle would run for nothing.
+    *
+    * @param sort order the result by its full key, (proxy_date, hour) or
+    *             (proxy_date, hour, zone): the reference's pandas `groupby`
+    *             order, and a total order, so the row order is deterministic.
     */
   def hourlyAggregation(raw: DataFrame, zone: Boolean = false,
                         families: Seq[MetricFamily] = defaultFamilies,
@@ -69,15 +77,21 @@ object Mape {
     val aggregated = casted.groupBy(keys.map(col): _*)
       .agg(sumCols.head -> "sum", sumCols.tail.map(_ -> "sum"): _*)
       .toDF(keys ++ sumCols: _*)
-    val withErrors = families.foldLeft(aggregated) { (df, fam) =>
-      if (fam.base.forall(df.columns.contains)) {
-        df.withColumn(fam.forecastAbsError, abs(col(fam.forecast) - col(fam.actual)))
-          .withColumn(fam.backcastAbsError, abs(col(fam.backcast) - col(fam.actual)))
-          .withColumn(fam.actualAbs, abs(col(fam.actual)))
-      } else df
+    val errors = families.filter(_.base.forall(aggregated.columns.contains)).flatMap { fam =>
+      Seq(fam.forecastAbsError -> abs(col(fam.forecast) - col(fam.actual)),
+          fam.backcastAbsError -> abs(col(fam.backcast) - col(fam.actual)),
+          fam.actualAbs -> abs(col(fam.actual)))
     }
-    if (sort) withErrors.orderBy(col("proxy_date"), col("hour")) else withErrors
+    val withErrors = withDerived(aggregated, errors)
+    if (sort) withErrors.orderBy(keys.map(col): _*) else withErrors
   }
+
+  /** Add (or replace in place) `derived` in one projection, in order: one
+    * analysis of the plan, where a `withColumn` per column re-analyzed the
+    * whole plan each time. The optimized plan is the same.
+    */
+  private def withDerived(df: DataFrame, derived: Seq[(String, Column)]): DataFrame =
+    if (derived.isEmpty) df else df.withColumns(ListMap(derived: _*))
 
   /** A2 + P10 + F1/F2/F3 + P4 (+ O3 zonal pivot): re-aggregate the hourly
     * frame to daily grain, derive WAPE ratios, drop inf/NaN/any-null rows,
@@ -98,17 +112,16 @@ object Mape {
     // null (and 0/0 on doubles → NaN under ANSI-off semantics). Emitting null
     // when the denominator is 0 makes F1+F2 below drop exactly the same rows
     // (SURVEY.md §7.4).
-    val withMape = families.foldLeft(daily) { (df, fam) =>
-      if (Seq(fam.actualAbs, fam.forecastAbsError, fam.backcastAbsError)
-            .forall(df.columns.contains)) {
-        val denom = col(fam.actualAbs)
-        def ratio(num: String): Column =
-          when(denom === 0.0, lit(null).cast(DoubleType))
-            .otherwise(col(num) / denom)
-        df.withColumn(fam.forecastMape, ratio(fam.forecastAbsError))
-          .withColumn(fam.backcastMape, ratio(fam.backcastAbsError))
-      } else df
+    val mapes = families.filter(fam => Seq(fam.actualAbs, fam.forecastAbsError,
+        fam.backcastAbsError).forall(daily.columns.contains)).flatMap { fam =>
+      val denom = col(fam.actualAbs)
+      def ratio(num: String): Column =
+        when(denom === 0.0, lit(null).cast(DoubleType))
+          .otherwise(col(num) / denom)
+      Seq(fam.forecastMape -> ratio(fam.forecastAbsError),
+          fam.backcastMape -> ratio(fam.backcastAbsError))
     }
+    val withMape = withDerived(daily, mapes)
 
     // F1 + F2: drop rows with any null/NaN in ANY column (main.py:105-106)
     // — `na.drop` counts NaN as null in float columns, so it is both.

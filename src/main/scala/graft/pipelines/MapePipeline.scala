@@ -11,10 +11,19 @@ import graft.sources.Tables
   *
   * The reference runs four aggregations per client against the same raw
   * frame; here the raw scan is cached once and all four variants reuse it —
-  * two hash-agg shuffles each, no global sorts except where the hourly
-  * frame is itself the deliverable (main.py:69). The Excel export collects
-  * only the bounded daily/hourly aggregates (plus, optionally, the raw
-  * sheet the reference also writes — guarded by the sink's row cap).
+  * two hash-agg shuffles each. The Excel export collects only the bounded
+  * daily/hourly aggregates (plus, optionally, the raw sheet the reference
+  * also writes — guarded by the sink's row cap).
+  *
+  * Order: each deliverable frame is ordered once, at its root, by its full
+  * key — hourly by (proxy_date, hour[, zone]), daily by proxy_date. That
+  * is the reference's pandas `groupby` order (main.py:69), and a total
+  * order, so every sheet's bytes are deterministic. Both daily
+  * aggregations read the UNSORTED hourly frames: Spark keeps a sort under
+  * an aggregate of double sums (`EliminateSorts` treats them as
+  * order-sensitive), so a sorted input would cost each daily frame a
+  * range-partition sample and a sort shuffle for rows the daily groupBy
+  * re-orders anyway.
   */
 object MapePipeline {
 
@@ -29,11 +38,13 @@ object MapePipeline {
   def run(raw: DataFrame,
           families: Seq[MetricFamily] = Mape.defaultFamilies): MapeRun = {
     val shared = graft.CacheRegistry.persist(raw)
-    val hourlyPortfolio = Mape.hourlyAggregation(shared, zone = false, families, sort = true)
-    val dailyPortfolio = Mape.dailyMapeAggregation(hourlyPortfolio, zone = false, families)
-    val hourlyZone = Mape.hourlyAggregation(shared, zone = true, families, sort = true)
-    val dailyZone = Mape.dailyMapeAggregation(hourlyZone, zone = true, families)
-    MapeRun(shared, hourlyPortfolio, dailyPortfolio, hourlyZone, dailyZone)
+    val hourlyPortfolio = Mape.hourlyAggregation(shared, zone = false, families)
+    val hourlyZone = Mape.hourlyAggregation(shared, zone = true, families)
+    MapeRun(shared,
+      hourlyPortfolio.orderBy("proxy_date", "hour"),
+      Mape.dailyMapeAggregation(hourlyPortfolio, zone = false, families).orderBy("proxy_date"),
+      hourlyZone.orderBy("proxy_date", "hour", "zone"),
+      Mape.dailyMapeAggregation(hourlyZone, zone = true, families).orderBy("proxy_date"))
   }
 
   /** Full per-client run: CSV scan (S1, lowercased columns) → four

@@ -62,6 +62,49 @@ class PipelineSpec extends SparkSpec {
       sheet5.contains("<t>settlement_west</t>"))
   }
 
+  test("MapePipeline.runClient: every sheet in its key order, byte-identical across runs") {
+    // 6 days × 4 hours × 3 zones, written in a shuffled order
+    val rng = new scala.util.Random(7)
+    val lines = rng.shuffle(for {
+      d <- 1 to 6; h <- 0 until 4; z <- Seq("north", "east", "west")
+    } yield f"2024-03-$d%02d,$h,$z,${10 + rng.nextInt(9)}.0,${10 + rng.nextInt(9)}.0,${10 + rng.nextInt(9)}.0")
+    val inDir = tmpDir("graft-mape-order-in")
+    val csv = new java.io.PrintWriter(s"$inDir/shuffled.csv")
+    csv.println("proxy_date,hour,zone,forecast,backcast,settlement")
+    lines.foreach(csv.println)
+    csv.close()
+    def parts(out: String): Map[String, Array[Byte]] = {
+      val zf = new ZipFile(MapePipeline.runClient(spark, s"$inDir/shuffled.csv", "shuffled", out))
+      try zf.entries().asScala.map(e => e.getName -> zf.getInputStream(e).readAllBytes()).toMap
+      finally zf.close()
+    }
+    val first = parts(tmpDir("graft-mape-order-a"))
+    val second = parts(tmpDir("graft-mape-order-b"))
+    assert(first.keySet === second.keySet)
+    first.foreach { case (n, b) => assert(java.util.Arrays.equals(b, second(n)), s"$n differs") }
+
+    // sheet → rows of header-keyed cell text
+    val cellRe = """<c r="([A-Z]+)\d+"[^>]*>(?:<v>([^<]*)</v>|<is><t>([^<]*)</t></is>)</c>""".r
+    def sheet(i: Int): Seq[Map[String, String]] = {
+      val xml = new String(first(s"xl/worksheets/sheet$i.xml"), "UTF-8")
+      val rows = """<row r="\d+">(.*?)</row>""".r.findAllMatchIn(xml).map { r =>
+        cellRe.findAllMatchIn(r.group(1))
+          .map(c => c.group(1) -> Option(c.group(2)).getOrElse(c.group(3))).toMap
+      }.toSeq
+      rows.drop(1).map(_.map { case (ref, v) => rows.head(ref) -> v })
+    }
+    // (proxy_date, hour, zone), the absent parts of a sheet's key as None
+    def inKeyOrder(i: Int, n: Int): Unit = {
+      val keys = sheet(i).map(r => (r("proxy_date"), r.get("hour").map(_.toInt), r.get("zone")))
+      assert(keys.size === n && keys.distinct.size === n, s"sheet$i: $keys")
+      assert(keys === keys.sorted, s"sheet$i out of key order: $keys")
+    }
+    inKeyOrder(2, 6 * 4)     // hourly_portfolio
+    inKeyOrder(3, 6)         // daily_portfolio_mape
+    inKeyOrder(4, 6 * 4 * 3) // hourly_zone
+    inKeyOrder(5, 6)         // daily_zone_mape
+  }
+
   test("ExcelSink enforces the driver-side row cap") {
     val big = spark.range(100).toDF("n")
     val f = s"${tmpDir("graft-xlsx")}/cap.xlsx"

@@ -44,6 +44,44 @@ class PlanShapeSpec extends SparkSpec {
       s"unexpected sort in: $nodes")
   }
 
+  test("MapePipeline's daily frames sort only at the root, never below the daily aggregate") {
+    import org.apache.spark.sql.execution.{InputAdapter, SortExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    // pre-order operators, through AQE roots, codegen wrappers and cached
+    // relations: the zonal daily frame reads its daily aggregate from a cache
+    def ops(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => ops(a.executedPlan)
+      case w: WholeStageCodegenExec => ops(w.child)
+      case i: InputAdapter => ops(i.child)
+      case m: InMemoryTableScanExec => m +: ops(m.relation.cachedPlan)
+      case n => n +: n.children.flatMap(ops)
+    }
+    def ordering(n: SparkPlan): Boolean = n match {
+      case _: SortExec => true
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }
+    val raw = Seq(("2024-01-01", 0, "east", 1.0, 1.0, 1.0), ("2024-01-01", 1, "west", 2.0, 1.0, 3.0))
+      .toDF("proxy_date", "hour", "zone", "forecast", "backcast", "settlement")
+    val run = graft.pipelines.MapePipeline.run(raw)
+    try {
+      for ((name, daily) <- Seq("dailyPortfolioMape" -> run.dailyPortfolioMape,
+                                "dailyZoneMape" -> run.dailyZoneMape)) {
+        val nodes = ops(daily.queryExecution.executedPlan)
+        val names = nodes.map(_.nodeName)
+        // the root orders (a global sort over its range exchange); nothing
+        // beneath it — the daily and hourly aggregates included — does
+        assert(nodes.head.isInstanceOf[SortExec] && ordering(nodes(1)),
+          s"$name is not ordered at its root: $names")
+        assert(!nodes.drop(2).exists(ordering), s"$name sorts below its root: $names")
+        assert(names.count(_ == "HashAggregate") >= 4, s"$name: $names")
+      }
+    } finally graft.CacheRegistry.releaseAll()
+  }
+
   test("uid pseudonymization fact join carries no forced broadcast hint") {
     val keyDir = tmpDir("graft-plan-key")
     val out = Anonymize.uidAnonymization(spark,
